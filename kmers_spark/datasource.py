@@ -65,7 +65,7 @@ def plan_bucket_partitions(path: str, m: dict, buckets, cols: list[str],
     wave_dirs), not O(buckets × wave_dirs) — at 10^5 buckets and 10^3
     waves the difference is the whole planning budget); the per-bucket
     missing sets ride in the partition so executors enforce the same
-    corruption-vs-evolution distinction as decode_blocks_df without
+    corruption-vs-evolution distinction as the other readers without
     re-reading the manifest.
 
     `buckets_per_task` > 1 coalesces adjacent buckets into one task
@@ -241,12 +241,9 @@ class KmersReader(DataSourceReader):
                                       buckets_per_task=self.buckets_per_task)
 
     def read(self, partition: InputPartition) -> Iterator:
-        import json
-
-        import pyarrow as pa
         import pyarrow.dataset as pads
 
-        from . import arrowcodecs, zonemap
+        from . import blockdecode
 
         vals = partition.value
         bucket_list, paths, miss_map = vals[0], vals[1], vals[2]
@@ -299,7 +296,6 @@ class KmersReader(DataSourceReader):
         # was actually fetched (the anchor buckets)
         base_needed = set(base_cols)
         anchor_set = set(anchor_buckets)
-        cols_fetch = ["bucket", "column", "meta", "payload"]
         if streamed:
             # streamed store: a bucket holds one GENERATION per wave
             # file — decode each parquet fragment (= one file = whole
@@ -319,101 +315,33 @@ class KmersReader(DataSourceReader):
             for frag in dataset.get_fragments():
                 fmiss = miss_map
                 if gen_allow is not None:
-                    allow = gen_allow.get(
-                        frag.path.rstrip("/").rsplit("/", 2)[-2], set()
-                    )
+                    allow = gen_allow.get(blockdecode.wave_of(frag.path), set())
                     fmiss = {b: allow for b in bucket_list}
-                tbl = frag.to_table(filter=pred, columns=cols_fetch)
+                tbl = frag.to_table(filter=pred, columns=blockdecode.FETCH)
                 yield from self._decode_block_table(tbl, fmiss, base_needed,
                                                     key, anchor_set)
             return
-        tbl = dataset.to_table(filter=pred, columns=cols_fetch)
+        tbl = dataset.to_table(filter=pred, columns=blockdecode.FETCH)
         yield from self._decode_block_table(tbl, miss_map, base_needed,
                                             key, anchor_set)
 
     def _decode_block_table(self, tbl, miss_map: dict, base_needed: set,
                             anchor_key=None, anchor_set=frozenset()) -> Iterator:
-        import json
+        from . import blockdecode
 
-        import pyarrow as pa
-
-        from . import arrowcodecs, zonemap
-
-        if tbl.num_rows == 0:
-            return
-        row_buckets = tbl.column("bucket").to_pylist()
-        all_cols = tbl.column("column").to_pylist()
-        all_metas = tbl.column("meta").to_pylist()
-        payloads = tbl.column("payload")
-        per_bucket: dict[int, dict[str, int]] = {}
-        for i, b in enumerate(row_buckets):
-            idx = per_bucket.setdefault(int(b), {})
-            if all_cols[i] in idx:
-                raise ValueError(
-                    f"duplicate block rows for bucket {b}: column "
-                    f"{all_cols[i]!r} appears twice (corrupt wave dir)"
-                )
-            idx[all_cols[i]] = i
         norm = self._norm()
         # decode bucket by bucket: the coalesced task's working set stays
         # one bucket's decoded columns at a time
-        for bucket in sorted(per_bucket):
-            idx = per_bucket[bucket]
-            miss = miss_map.get(bucket, set())
+        for bucket, rows in blockdecode.split_rows(tbl):
+            # the kernel expects the key only where it was fetched as
+            # the row-count anchor
             needed = base_needed | ({anchor_key} if bucket in anchor_set else set())
-            # same integrity contract as decode_blocks_df: evolution
-            # null-fills ONLY manifest-recorded gaps; anything else is
-            # corruption, not silently-wrong data
-            absent = [c for c in needed
-                      if c in self.full_schema and c not in idx and c not in miss]
-            stray = [c for c in idx if c not in self.full_schema]
-            if absent or stray:
-                raise ValueError(
-                    f"bucket {bucket} block set is corrupt: missing columns "
-                    f"{absent}, stray columns {stray}"
-                )
-            arrays: dict[str, pa.Array] = {}
-            n_rows = json.loads(all_metas[next(iter(idx.values()))])["n"]
-
-            def dec(cname: str, _idx=idx, _arrays=None, _n=n_rows):
-                arrs = arrays if _arrays is None else _arrays
-                if cname not in arrs:
-                    if cname in _idx:
-                        i = _idx[cname]
-                        arrs[cname] = arrowcodecs.decode_column_arrow(
-                            payloads[i].as_py(), json.loads(all_metas[i])
-                        )
-                    else:  # schema-evolved column: null-fill
-                        arrs[cname] = pa.nulls(
-                            _n, type=zonemap.arrow_type(self.full_schema[cname])
-                        )
-                return arrs[cname]
-
-            if norm:
-                import pyarrow.compute as pc
-
-                mask = zonemap.arrow_mask(dec, norm)
-                nsel = pc.sum(mask).as_py() or 0
-                if not nsel:
-                    continue
-                sel = mask.to_numpy(zero_copy_only=False)
-                out = {}
-                for c in self.projected:
-                    if c in arrays:
-                        out[c] = arrays[c].filter(mask)
-                    elif c in idx:
-                        out[c] = arrowcodecs.decode_column_arrow_selected(
-                            payloads[idx[c]].as_py(),
-                            json.loads(all_metas[idx[c]]), sel
-                        )
-                    else:
-                        out[c] = pa.nulls(
-                            nsel, type=zonemap.arrow_type(self.full_schema[c])
-                        )
-                table = pa.table(out)
-            else:
-                table = pa.table({c: dec(c) for c in self.projected})
-            yield from table.to_batches()
+            schema = {c: t for c, t in self.full_schema.items() if c in needed}
+            table = blockdecode.decode_bucket(
+                rows, schema, norm, miss_map.get(bucket, set()), self.projected
+            )
+            if table.num_rows:
+                yield from table.to_batches()
 
 
 from pyspark.sql.datasource import DataSourceStreamReader

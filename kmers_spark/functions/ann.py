@@ -56,17 +56,28 @@ def _norm(a):
     )
 
 
-def _cosine_q_udf(q_vec):
-    """pandas_udf: cosine of each embedding against the fixed query
-    vector (closure — only the embedding column crosses the boundary).
-    Null embeddings stay null (zip_with's null propagation)."""
+def _null_element(emb):
+    """True where embedding column `emb` holds a null ELEMENT (null
+    for a null embedding). Arrow->pandas turns such an element into
+    NaN, which the kernels cannot tell from a stored NaN."""
+    return F.exists(emb, lambda x: x.isNull())
+
+
+def _cosine_q(q_vec, emb):
+    """Cosine of embedding column `emb` against the fixed query vector
+    (closure — only the embedding crosses the boundary). Null in, null
+    out, as zip_with propagates it: a null embedding, a null element
+    in it, or a null element in the query gives a null cosine (sorted
+    last), never a NaN (sorted first)."""
     q = np.asarray(q_vec, dtype=np.float64)
+    q_null = any(v is None for v in q_vec)
 
     @F.pandas_udf("double")
-    def cos(emb: pd.Series) -> pd.Series:
+    def cos(emb: pd.Series, has_null: pd.Series) -> pd.Series:
         if not len(emb):
             return pd.Series(np.zeros(0, dtype=np.float64))
-        valid = emb.notna().to_numpy()
+        valid = (emb.notna() & ~has_null.fillna(True).astype(bool)).to_numpy() \
+            & (not q_null)
         out = np.full(len(emb), np.nan, dtype=np.float64)
         if valid.any():
             A = veck.stack_embeddings(emb[valid])
@@ -78,18 +89,20 @@ def _cosine_q_udf(q_vec):
         # computed NaN in unmasked slots survives the Arrow conversion
         return pd.Series(pd.arrays.FloatingArray(out, ~valid))
 
-    return cos
+    return cos(emb, _null_element(emb))
 
 
-def _cosine_pair_udf():
-    """pandas_udf: row-wise cosine of two embedding columns (pair
-    rescoring)."""
+def _cosine_pair(a, b):
+    """Row-wise cosine of two embedding columns (pair rescoring); null
+    in, null out, as in _cosine_q."""
 
     @F.pandas_udf("double")
-    def cos2(a: pd.Series, b: pd.Series) -> pd.Series:
+    def cos2(a: pd.Series, b: pd.Series, a_null: pd.Series,
+             b_null: pd.Series) -> pd.Series:
         if not len(a):
             return pd.Series(np.zeros(0, dtype=np.float64))
-        valid = (a.notna() & b.notna()).to_numpy()
+        valid = (a.notna() & b.notna() & ~a_null.fillna(True).astype(bool)
+                 & ~b_null.fillna(True).astype(bool)).to_numpy()
         out = np.full(len(a), np.nan, dtype=np.float64)
         if valid.any():
             A = veck.stack_embeddings(a[valid])
@@ -100,7 +113,7 @@ def _cosine_pair_udf():
             return pd.Series(out)
         return pd.Series(pd.arrays.FloatingArray(out, ~valid))
 
-    return cos2
+    return cos2(a, b, _null_element(a), _null_element(b))
 
 
 def _take_query_embedding(e: DataFrame, query_id: int):
@@ -122,7 +135,11 @@ def cosine_topk(spark: SparkSession, sf_dir: str, query_id: int = 0, k: int = 10
 
     The query vector is a bounded 1-row transfer — the scan over N
     vectors is embarrassingly parallel, no shuffle until the final top-k
-    (which is a TakeOrdered, not a full sort)."""
+    (which is a TakeOrdered, not a full sort).
+
+    Eager: building the returned DataFrame already runs a Spark job
+    (the query vector's take(1)). A missing query row, or a null query
+    embedding, returns an empty result."""
     return cosine_topk_df(_emb(spark, sf_dir), query_id, k)
 
 
@@ -136,7 +153,7 @@ def cosine_topk_df(e: DataFrame, query_id: int = 0, k: int = 10) -> DataFrame:
         e.filter(F.col("vec_id") != query_id)
         .select(
             "vec_id",
-            F.round(_cosine_q_udf(q_emb)(F.col("embedding")), 6).alias("cosine"),
+            F.round(_cosine_q(q_emb, F.col("embedding")), 6).alias("cosine"),
         )
     )
     return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
@@ -260,7 +277,7 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str, query_id: int = 0, k: int = 1
     return (
         cand.select(
             "vec_id",
-            F.round(_cosine_q_udf(q_emb)(F.col("embedding")), 6).alias("cosine"),
+            F.round(_cosine_q(q_emb, F.col("embedding")), 6).alias("cosine"),
         )
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(k)
@@ -307,7 +324,7 @@ def ann_topk_lsh_multi(spark: SparkSession, sf_dir: str, query_id: int = 0,
     return (
         cand.select(
             "vec_id",
-            F.round(_cosine_q_udf(q_emb)(F.col("embedding")), 6).alias("cosine"),
+            F.round(_cosine_q(q_emb, F.col("embedding")), 6).alias("cosine"),
         )
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(k)
@@ -378,7 +395,11 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str, query_id: int = 0, k: int = 1
     argmax over the corpus (zero shuffle — the old broadcast-join +
     max-struct partial aggregate shape collapsed into the kernel). The
     probe prunes (n_cents - nprobe)/n_cents of the corpus from the
-    rescore. Ties break by centroid id."""
+    rescore. Ties break by centroid id.
+
+    Eager: building the returned DataFrame already runs Spark jobs (the
+    query vector's take(1) and the centroid collect). A missing query
+    row, or a null query embedding, returns an empty result."""
     e = _emb(spark, sf_dir)
     cents = e.filter(F.col("vec_id") < n_cents).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_emb")
@@ -409,7 +430,7 @@ def _ivf_topk_from_cents(e: DataFrame, cents: DataFrame, query_id: int, k: int,
     return (
         cand.select(
             "vec_id",
-            F.round(_cosine_q_udf(q_emb)(F.col("embedding")), 6).alias("cosine"),
+            F.round(_cosine_q(q_emb, F.col("embedding")), 6).alias("cosine"),
         )
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(k)
@@ -434,6 +455,9 @@ def ivf_centroids(spark: SparkSession, sf_dir: str, n_cents: int = 16,
     broadcast join, max-struct aggregate, embedding re-join, and eager
     localCheckpoint are all gone — lineage never grows because the
     centroids live driver-side between steps.
+
+    Eager: the k-means steps run (1 + iters collects) before this
+    returns; the result is a local DataFrame of the final centroids.
 
     Returns (cent_id, cent_emb array<double>).
     """
@@ -742,7 +766,7 @@ def embedding_dup_pairs(spark: SparkSession, sf_dir: str, n_planes: int = 16,
             "vec_a",
             "vec_b",
             F.round(
-                _cosine_pair_udf()(F.col("emb_a"), F.col("emb_b")), 6
+                _cosine_pair(F.col("emb_a"), F.col("emb_b")), 6
             ).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)

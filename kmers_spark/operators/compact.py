@@ -92,7 +92,7 @@ def _make_merge_fn_arrow(schema: dict[str, str], key: str,
         import pyarrow as pa
 
         from .. import arrowcodecs, zonemap
-        from .decode import _wave_of
+        from ..blockdecode import wave_of
 
         if tbl.num_rows == 0:
             from .delete import _empty_blocks_arrow
@@ -103,7 +103,7 @@ def _make_merge_fn_arrow(schema: dict[str, str], key: str,
         col_names = tbl.column("column").to_pylist()
         metas = tbl.column("meta").to_pylist()
         payloads = tbl.column("payload")
-        waves = [_wave_of(p) for p in tbl.column("_gen").to_pylist()]
+        waves = [wave_of(p) for p in tbl.column("_gen").to_pylist()]
         gens: dict[str, dict[str, int]] = {}
         for i, w in enumerate(waves):
             if w not in wave_order:
@@ -169,12 +169,12 @@ def _make_merge_fn_pandas(schema: dict[str, str], key: str,
         import numpy as np
 
         from .. import codecs
-        from .decode import _wave_of
+        from ..blockdecode import wave_of
 
         if not len(pdf):
             return pd.DataFrame(columns=_BLOCK_COLS)
         bucket_id = int(pdf["bucket"].iloc[0])
-        pdf = pdf.assign(_w=pdf["_gen"].map(_wave_of))
+        pdf = pdf.assign(_w=pdf["_gen"].map(wave_of))
         stray_w = set(pdf["_w"]) - set(wave_order)
         if stray_w:
             raise ValueError(

@@ -9,16 +9,25 @@ bucket count and no shuffle is needed beyond the scan's grouping.
 
 from __future__ import annotations
 
-import json
+import math
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .. import codecs, manifest
+from .. import blockdecode, manifest
 from ..kernels import bloom as bloomkern
 from .encode import assert_utc_session, committed_wave_paths
 
 _SPARK_TYPE = manifest.SPARK_DDL_TYPES  # canonical copy lives in manifest
+
+# decode_colocated decodes in the driver when the pruned read's encoded
+# payload is at most this many bytes, and in Spark tasks above it.
+# Measured on a 4-vCPU VM, local[4], 48,000 pages rows in 16 hash
+# buckets, full decode of k buckets into a noop sink (median of 3,
+# driver vs Spark): 0.38 MB 161 vs 649 ms, 1.52 MB 383 vs 578 ms,
+# 2.14 MB 528 vs 579 ms, 3.02 MB 730 vs 670 ms, 3.79 MB 879 vs 714 ms.
+# The driver decodes on one core, so the crossover is ~2.5 MB; the
+# threshold sits below it.
+LOCAL_READ_MAX_BYTES = 2 << 20
 
 
 def decode_table(spark: SparkSession, out_dir: str, buckets: list[int] | None = None,
@@ -49,44 +58,11 @@ def decode_table(spark: SparkSession, out_dir: str, buckets: list[int] | None = 
     m = manifest.load(out_dir, version=version)
     if m is None:
         raise FileNotFoundError(f"no manifest in {out_dir}")
-    full = manifest.ordered_schema(m)  # {column: type}, input order
-    if columns is not None:
-        if not columns:
-            raise ValueError("columns projection must not be empty")
-        unknown = [c for c in columns if c not in full]
-        if unknown:
-            raise KeyError(f"columns not in snapshot schema: {unknown}")
-        schema = {c: t for c, t in full.items() if c in set(columns)}
-    else:
-        schema = full
-    assert_utc_session(spark, schema)
-    cols = list(schema.keys())
-
-    # schema evolution: buckets committed before an evolve_schema call
-    # have no block for the added columns — decode null-fills them from
-    # the manifest's per-bucket column sets (Iceberg read-as-null)
-    missing = (
-        manifest.missing_columns(
-            # bucket-restricted reads also restrict the spilled stats
-            # files opened (wave-level pruning; a point lookup on an
-            # evolved 10^5-bucket snapshot opens ~1 file, not all)
-            m, cols, blocks=manifest.block_stats(out_dir, m, buckets=buckets)
-        )
-        if m.get("evolved")  # never-evolved: skip the stats read entirely
-        else {}
-    )
-    dec_schema = dict(schema)
-    anchor = None
-    if missing and columns is not None:
-        key = m.get("key")
-        # a projection of ONLY evolved columns would leave old buckets
-        # with zero block rows (their row count unknowable) — anchor on
-        # the key column, which every non-empty bucket has, then drop it
-        if key in full and key not in dec_schema and any(
-            miss >= set(cols) for miss in missing.values()
-        ):
-            anchor = key
-            dec_schema[key] = full[key]
+    # never-evolved: no null-fill allowance, so skip the stats read
+    stats = manifest.block_stats(out_dir, m, buckets=buckets) \
+        if m.get("evolved") else None
+    schema, dec_schema, missing, anchor = _read_columns(spark, m, columns, stats)
+    cols = list(schema)
     out_schema = ", ".join(f"`{c}` {_SPARK_TYPE[t]}" for c, t in dec_schema.items())
 
     # manifest-level wave pruning first (skip whole data dirs), then the
@@ -98,7 +74,7 @@ def decode_table(spark: SparkSession, out_dir: str, buckets: list[int] | None = 
     blocks = spark.read.parquet(*paths)
     if buckets is not None:
         blocks = blocks.filter(blocks.bucket.isin(buckets))
-    if columns is not None and len(dec_schema) < len(full):
+    if columns is not None and len(dec_schema) < len(manifest.ordered_schema(m)):
         blocks = blocks.filter(blocks.column.isin(list(dec_schema)))
     norm = None
     if filters:
@@ -127,10 +103,46 @@ def decode_table(spark: SparkSession, out_dir: str, buckets: list[int] | None = 
     return df.select(*cols) if anchor else df
 
 
-def _wave_of(file_path: str) -> str:
-    """Wave dir basename from a block file path/URI — the key
-    manifest.wave_allowance maps generations by."""
-    return file_path.rstrip("/").rsplit("/", 2)[-2]
+def _read_columns(spark: SparkSession, m: dict, columns: list[str] | None,
+                  stats: dict[str, list] | None):
+    """The decode readers' shared set-up: validate the `columns`
+    projection against the snapshot schema and derive the schema-
+    evolution null-fill allowance. Returns (schema, dec_schema,
+    missing, anchor): the output columns, the columns to decode,
+    {bucket: columns it may lack} and the anchor column decoded only
+    for its row count (None when not needed).
+
+    Buckets committed before an evolve_schema call have no block for
+    the added columns; decode null-fills them (Iceberg read-as-null).
+    `stats` (manifest.block_stats, needed only on evolved snapshots)
+    tells which buckets those are; a bucket-restricted reader passes
+    the stats of its buckets only, so a point lookup on an evolved
+    10^5-bucket snapshot opens ~1 spilled stats file, not all."""
+    full = manifest.ordered_schema(m)  # {column: type}, input order
+    if columns is not None:
+        if not columns:
+            raise ValueError("columns projection must not be empty")
+        unknown = [c for c in columns if c not in full]
+        if unknown:
+            raise KeyError(f"columns not in snapshot schema: {unknown}")
+        schema = {c: t for c, t in full.items() if c in set(columns)}
+    else:
+        schema = full
+    assert_utc_session(spark, schema)
+    missing = manifest.missing_columns(m, list(schema), blocks=stats) \
+        if m.get("evolved") else {}
+    dec_schema = dict(schema)
+    anchor = None
+    key = m.get("key")
+    # a projection of ONLY evolved columns would leave old buckets with
+    # zero block rows (their row count unknowable) — anchor on the key
+    # column, which every non-empty bucket has, then drop it
+    if (missing and columns is not None and key in full
+            and key not in dec_schema
+            and any(miss >= set(schema) for miss in missing.values())):
+        anchor = key
+        dec_schema[key] = full[key]
+    return schema, dec_schema, missing, anchor
 
 
 def decode_blocks_df(blocks: DataFrame, schema: dict[str, str], out_schema: str,
@@ -138,7 +150,9 @@ def decode_blocks_df(blocks: DataFrame, schema: dict[str, str], out_schema: str,
                      missing: dict[int, set] | None = None,
                      gen_key: str | None = None,
                      gen_missing: dict[str, set] | None = None) -> DataFrame:
-    """block rows -> original rows; Arrow path when available.
+    """block rows -> original rows: a groupBy on the bucket (and, on
+    streamed stores, the generation) runs blockdecode.decode_bucket
+    once per group.
 
     `norm_filters` (zonemap.normalize_filters output) pushes the scan
     predicate INTO the decode kernel — late materialization: the filter
@@ -159,160 +173,23 @@ def decode_blocks_df(blocks: DataFrame, schema: dict[str, str], out_schema: str,
     `missing` at GENERATION granularity: the group's gen_key file path
     names its wave, and only columns the wave predates may null-fill —
     a post-evolution generation missing an evolved column raises."""
-    from .. import zonemap
+    from .. import arrowcodecs
 
-    cols = list(schema.keys())
     missing = missing or {}
     grouped = blocks.groupBy("bucket", gen_key) if gen_key \
         else blocks.groupBy("bucket")
 
-    if hasattr(grouped, "applyInArrow"):
-        import pyarrow as pa
-
-        from .. import arrowcodecs
-
-        def decode_group_arrow(table: "pa.Table") -> "pa.Table":
-            arrowcodecs.pin_worker_threads()
-            col_names = table.column("column").to_pylist()
-            if len(set(col_names)) != len(col_names):
-                raise ValueError(
-                    f"duplicate block rows for bucket "
-                    f"{table.column('bucket')[0].as_py()}: {sorted(col_names)} "
-                    "(stray rows from an uncommitted write, or a bucket that "
-                    "spanned partitions during encode_colocated)"
-                )
-            metas = table.column("meta").to_pylist()
-            payloads = table.column("payload")
-            idx = {cname: i for i, cname in enumerate(col_names)}
-            bucket_id = int(table.column("bucket")[0].as_py())
-            if gen_missing is not None and gen_key:
-                miss = gen_missing.get(
-                    _wave_of(table.column(gen_key)[0].as_py()), set()
-                )
-            else:
-                miss = missing.get(bucket_id, ())
-            absent = [c for c in cols if c not in idx and c not in miss]
-            stray = [c for c in idx if c not in schema]
-            if absent or stray:
-                raise ValueError(
-                    f"bucket {bucket_id} block set is corrupt: "
-                    f"missing columns {absent}, stray columns {stray} "
-                    "(split across partitions, or foreign rows in a wave dir)"
-                )
-            arrays: dict[str, pa.Array] = {}
-
-            def dec(cname: str) -> pa.Array:
-                if cname not in arrays:
-                    if cname in idx:
-                        i = idx[cname]
-                        arrays[cname] = arrowcodecs.decode_column_arrow(
-                            payloads[i].as_py(), json.loads(metas[i])
-                        )
-                    else:  # schema-evolved: null-fill at the bucket's
-                        # row count (any present block's meta carries n)
-                        n = json.loads(metas[next(iter(idx.values()))])["n"]
-                        arrays[cname] = pa.nulls(
-                            n, type=zonemap.arrow_type(schema[cname])
-                        )
-                return arrays[cname]
-
-            if norm_filters:
-                import pyarrow.compute as pc
-
-                mask = zonemap.arrow_mask(dec, norm_filters)
-                nsel = pc.sum(mask).as_py() or 0
-                if not nsel:
-                    return pa.table(
-                        {c: pa.array([], type=zonemap.arrow_type(schema[c]))
-                         for c in cols}
-                    )
-                # selected decode: seg: codecs skip whole segments with
-                # no selected row (page skipping); columns the mask
-                # already decoded just filter
-                sel = mask.to_numpy(zero_copy_only=False)
-                out: dict[str, pa.Array] = {}
-                for c in cols:
-                    if c in arrays:
-                        out[c] = arrays[c].filter(mask)
-                    elif c in idx:
-                        i = idx[c]
-                        out[c] = arrowcodecs.decode_column_arrow_selected(
-                            payloads[i].as_py(), json.loads(metas[i]), sel
-                        )
-                    else:  # schema-evolved: null-fill the selected rows
-                        out[c] = pa.nulls(
-                            nsel, type=zonemap.arrow_type(schema[c])
-                        )
-                return pa.table(out)
-            return pa.table({c: dec(c) for c in cols})
-
-        return grouped.applyInArrow(decode_group_arrow, out_schema)
-
-    def decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf["column"].duplicated().any():
-            raise ValueError(
-                f"duplicate block rows for bucket {pdf['bucket'].iloc[0]}: "
-                f"{sorted(pdf['column'])}"
-            )
-        rows_by_col = {row["column"]: row for _, row in pdf.iterrows()}
-        bucket_id = int(pdf["bucket"].iloc[0])
+    def decode_group(table):
+        arrowcodecs.pin_worker_threads()
         if gen_missing is not None and gen_key:
-            miss = gen_missing.get(_wave_of(pdf[gen_key].iloc[0]), set())
-        else:
-            miss = missing.get(bucket_id, ())
-        absent = [c for c in cols if c not in rows_by_col and c not in miss]
-        stray = [c for c in rows_by_col if c not in schema]
-        if absent or stray:
-            raise ValueError(
-                f"bucket {bucket_id} block set is corrupt: "
-                f"missing columns {absent}, stray columns {stray} "
-                "(split across partitions, or foreign rows in a wave dir)"
+            allow = gen_missing.get(
+                blockdecode.wave_of(table.column(gen_key)[0].as_py()), set()
             )
-        series: dict[str, pd.Series] = {}
+        else:
+            allow = missing.get(int(table.column("bucket")[0].as_py()), ())
+        return blockdecode.decode_bucket(table, schema, norm_filters, allow)
 
-        def dec(cname: str) -> pd.Series:
-            if cname not in series:
-                if cname in rows_by_col:
-                    row = rows_by_col[cname]
-                    series[cname] = codecs.decode_column(
-                        bytes(row["payload"]), json.loads(row["meta"])
-                    )
-                else:  # schema-evolved: null-fill
-                    n = json.loads(next(iter(rows_by_col.values()))["meta"])["n"]
-                    series[cname] = pd.Series([None] * n, dtype=object)
-            return series[cname]
-
-        if norm_filters:
-            mask = zonemap.pandas_mask(dec, norm_filters, schema)
-            if not mask.any():
-                return pd.DataFrame(columns=cols)
-            data = {}
-            for c in cols:
-                if c in series:  # decoded for the mask: just filter
-                    s = series[c][mask].reset_index(drop=True)
-                elif c in rows_by_col:  # selected decode (segment skip)
-                    row = rows_by_col[c]
-                    s = codecs.decode_column_selected(
-                        bytes(row["payload"]), json.loads(row["meta"]), mask
-                    )
-                else:  # schema-evolved: null-fill selected rows
-                    s = pd.Series([None] * int(mask.sum()), dtype=object)
-                if schema[c] == "binary":
-                    s = s.map(lambda v: None if v is None else bytes(v))
-                data[c] = s
-            return pd.DataFrame(data, columns=cols)
-        n = len(dec(cols[0])) if cols else 0
-        data = {}
-        for c in cols:
-            s = dec(c)
-            if schema[c] == "binary":
-                s = s.map(lambda v: None if v is None else bytes(v))
-            data[c] = s.reset_index(drop=True)
-        if not n:
-            return pd.DataFrame(columns=cols)
-        return pd.DataFrame(data, columns=cols)
-
-    return grouped.applyInPandas(decode_group, out_schema)
+    return grouped.applyInArrow(decode_group, out_schema)
 
 
 def scan_table(spark: SparkSession, out_dir: str, filters: list[tuple],
@@ -353,7 +230,11 @@ def scan_table(spark: SparkSession, out_dir: str, filters: list[tuple],
     scan with no exchange of payload bytes — falling back to the
     groupBy path only for time-travel reads (`version`), whose wave
     layout the colocated reader does not resolve. "shuffle" /
-    "colocated" force a path.
+    "colocated" force a path. The colocated decode itself decodes in
+    the driver when the surviving buckets' payload is at most
+    LOCAL_READ_MAX_BYTES (see decode_colocated): a selective scan then
+    returns a LocalRelation that the residual filter folds into, and
+    collecting it launches no Spark job.
 
     Zone pruning is clustering-dependent (hash bucketing scatters
     values): it pays on snapshots whose ingestion clusters the filter
@@ -585,7 +466,14 @@ def lookup_keys(spark: SparkSession, out_dir: str, keys: list[str]) -> DataFrame
     and filter to the requested keys. At 10^12 rows this touches at
     most |keys| buckets out of num_buckets — and ZERO buckets for
     absent keys, whether outside the stored ranges (range pruning) or
-    inside them (Bloom pruning, up to the ~1% false-positive rate)."""
+    inside them (Bloom pruning, up to the ~1% false-positive rate).
+
+    The decode is decode_colocated's, so a lookup whose surviving
+    buckets carry at most LOCAL_READ_MAX_BYTES of payload decodes in
+    the driver and launches no Spark job to produce its rows. `keys`
+    has set semantics: each stored row is returned once, however often
+    its key is probed. A probe matches when it equals the stored key
+    rendered as a string (int key 7 matches "7", not "007")."""
     from . import partitioning
 
     m = manifest.load(out_dir)
@@ -660,8 +548,6 @@ def lookup_keys(spark: SparkSession, out_dir: str, keys: list[str]) -> DataFrame
     )
     if not buckets:
         return spark.createDataFrame([], out_schema)
-    from pyspark.sql import functions as F
-
     # the key predicate also rides INTO the decode kernel (late
     # materialization): only probe-key rows cross the Arrow boundary,
     # and segmented bulk columns decompress only matching segments
@@ -675,15 +561,13 @@ def lookup_keys(spark: SparkSession, out_dir: str, keys: list[str]) -> DataFrame
     except (ValueError, TypeError):
         # probe literals that don't parse as the key's type (e.g. a
         # non-numeric probe against an int64 key) can't match anyway;
-        # decode the buckets and let the join return empty
+        # decode the buckets and let the residual filter return empty
         decoded = decode_colocated(spark, out_dir, buckets=sorted(buckets))
-    # join string-vs-string: an implicit probe->BIGINT cast (ANSI) would
-    # CRASH the whole lookup on one malformed probe key
-    kdf = spark.createDataFrame([(k,) for k in keys], "`__probe` string")
-    return decoded.join(
-        F.broadcast(kdf),
-        decoded[key_col].cast("string") == kdf["__probe"], "inner"
-    ).drop("__probe")
+    # compare as strings: an implicit probe->BIGINT cast (ANSI) would
+    # CRASH the whole lookup on one malformed probe key. A filter, not
+    # a join: each stored row returns once however often it is probed,
+    # and over a driver-local decode it folds into the LocalRelation
+    return decoded.filter(decoded[key_col].cast("string").isin(list(keys)))
 
 
 def decode_colocated(spark: SparkSession, out_dir: str,
@@ -691,12 +575,29 @@ def decode_colocated(spark: SparkSession, out_dir: str,
                      filters: list[tuple] | None = None,
                      buckets: list[int] | None = None,
                      snapshot: dict | None = None) -> DataFrame:
-    """Shuffle-free decode: block files are written bucket-grouped, so a
-    mapInArrow pass can reassemble each bucket's columns without moving
-    payloads (the groupBy in decode_table re-shuffles ~enc_bytes; this
-    path only requires that a bucket's block rows share a scan partition,
-    which the encode write layout guarantees via one-file-per-task).
-    """
+    """Shuffle-free decode of the committed store (optionally bucket-
+    and column-projected, with `filters` late-materialized inside the
+    kernel) at its latest version; time-travel reads (`version=`) stay
+    on decode_table.
+
+    Block files are written bucket-grouped (one writer task = whole
+    buckets), so each file decodes on its own with no exchange of
+    payload bytes. The plan is chosen by the payload the read must
+    fetch — the block-stats enc_nbytes of the surviving buckets'
+    decoded columns:
+
+      * at most LOCAL_READ_MAX_BYTES: the DRIVER reads the block rows
+        with pyarrow.dataset, file by file, runs the bucket-decode
+        kernel and returns spark.createDataFrame(table) — a
+        LocalRelation. No Spark job is needed to produce it, and
+        filters stacked on top fold into it. This plan is eager: the
+        decode runs, and a corrupt block set raises, before the call
+        returns.
+      * larger: a mapInArrow pass over the block files, one file per
+        scan partition, runs the same kernel in Spark tasks.
+
+    Both plans decode one file at a time, bucket by bucket, so they
+    return the same rows and raise the same corruption errors."""
     import pyarrow as pa
 
     from .. import arrowcodecs
@@ -704,44 +605,58 @@ def decode_colocated(spark: SparkSession, out_dir: str,
     m = snapshot if snapshot is not None else manifest.load(out_dir)
     if m is None:
         raise FileNotFoundError(f"no manifest in {out_dir}")
-    full = manifest.ordered_schema(m)
-    if columns is not None:
-        if not columns:
-            raise ValueError("columns projection must not be empty")
-        unknown = [c for c in columns if c not in full]
-        if unknown:
-            raise KeyError(f"columns not in snapshot schema: {unknown}")
-        schema = {c: t for c, t in full.items() if c in set(columns)}
-    else:
-        schema = full
-    assert_utc_session(spark, schema)
-    cols = list(schema.keys())
-    missing = (
-        manifest.missing_columns(
-            # bucket-restricted reads also restrict the spilled stats
-            # files opened (wave-level pruning; a point lookup on an
-            # evolved 10^5-bucket snapshot opens ~1 file, not all)
-            m, cols, blocks=manifest.block_stats(out_dir, m, buckets=buckets)
-        )
-        if m.get("evolved")  # never-evolved: skip the stats read entirely
-        else {}
-    )
-    dec_schema = dict(schema)
-    anchor = None
-    if missing and columns is not None:
-        key = m.get("key")
-        if key in full and key not in dec_schema and any(
-            miss >= set(cols) for miss in missing.values()
-        ):
-            anchor = key
-            dec_schema[key] = full[key]
+    stats = manifest.block_stats(out_dir, m, buckets=buckets)
+    schema, dec_schema, missing, anchor = _read_columns(spark, m, columns, stats)
+    cols = list(schema)
     out_schema = ", ".join(f"`{c}` {_SPARK_TYPE[t]}" for c, t in dec_schema.items())
-    dec_cols = list(dec_schema.keys())
+    dec_cols = list(dec_schema)
     norm = None
     if filters:
         from .. import zonemap
 
         norm = zonemap.normalize_filters(filters, schema)
+    # wave-dir pruning for bucket-filtered reads, same as decode_table
+    paths = committed_wave_paths(out_dir, m, buckets=buckets)
+    if not paths:  # manifest exists but nothing committed yet
+        df = spark.createDataFrame([], out_schema)
+        return df.select(*cols) if anchor else df
+    projected = columns is not None \
+        and len(dec_schema) < len(manifest.ordered_schema(m))
+    # streamed stores: the evolution allowance applies per GENERATION
+    # (a post-evolution generation missing an evolved column raises)
+    gen_missing = manifest.wave_allowance(m, cols) if m.get("streamed") else None
+
+    def decode_file(rows: pa.Table, wave: str | None):
+        """One block file's rows (whole buckets of one generation) ->
+        the decoded table of each bucket with selected rows."""
+        for b, brows in blockdecode.split_rows(rows):
+            allow = gen_missing.get(wave, set()) if gen_missing is not None \
+                else missing.get(int(b), ())
+            out = blockdecode.decode_bucket(brows, dec_schema, norm, allow)
+            if out.num_rows:
+                yield out
+
+    if _payload_bytes(stats, buckets, dec_schema) <= LOCAL_READ_MAX_BYTES:
+        import pyarrow.dataset as pads
+
+        pred = pads.scalar(True)
+        if buckets is not None:
+            pred &= pads.field("bucket").isin(list(buckets))
+        if projected:
+            pred &= pads.field("column").isin(dec_cols)
+        tables = [
+            t
+            for p in paths
+            for frag in pads.dataset(p, format="parquet").get_fragments()
+            for t in decode_file(
+                frag.to_table(filter=pred, columns=blockdecode.FETCH),
+                blockdecode.wave_of(frag.path),
+            )
+        ]
+        table = pa.concat_tables(tables) if tables \
+            else blockdecode.empty_table(dec_schema)
+        df = spark.createDataFrame(table, out_schema)
+        return df.select(*cols) if anchor else df
 
     # Whole files per scan partition so buckets never split: the default
     # spark.sql.files.maxPartitionBytes (128MB) would split a large block
@@ -758,23 +673,15 @@ def decode_colocated(spark: SparkSession, out_dir: str,
             pass
     s2.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 40))
     s2.conf.set("spark.sql.files.openCostInBytes", str(1 << 40))
-    # wave-dir pruning for bucket-filtered reads, same as decode_table
-    paths = committed_wave_paths(out_dir, m, buckets=buckets)
-    if not paths:  # manifest exists but nothing committed yet
-        df = spark.createDataFrame([], out_schema)
-        return df.select(*cols) if anchor else df
     blocks = s2.read.parquet(*paths)
     if buckets is not None:
         blocks = blocks.filter(blocks.bucket.isin(buckets))
-    if columns is not None and len(dec_schema) < len(full):
+    if projected:
         # projection below the scan: unwanted payloads never decompress
         blocks = blocks.filter(blocks.column.isin(dec_cols))
-    gen_missing = manifest.wave_allowance(m, cols) if m.get("streamed") else None
     if gen_missing is not None:
         # file provenance for the kernel: which WAVE each block row came
-        # from, so the evolution allowance applies per generation (a
-        # post-evolution generation missing an evolved column raises).
-        # A projection, not a shuffle — the plan stays exchange-free.
+        # from. A projection, not a shuffle — the plan stays exchange-free.
         from pyspark.sql import functions as F
 
         blocks = blocks.withColumn("_gen", F.input_file_name())
@@ -784,80 +691,25 @@ def decode_colocated(spark: SparkSession, out_dir: str,
         tables = [pa.Table.from_batches([b]) for b in batches]
         if not tables:
             return
-        table = pa.concat_tables(tables).combine_chunks()
-        buckets = table.column("bucket").to_pylist()
-        col_names = table.column("column").to_pylist()
-        metas = table.column("meta").to_pylist()
-        payloads = table.column("payload")
-        gens = (
-            [_wave_of(p) for p in table.column("_gen").to_pylist()]
-            if gen_missing is not None else None
-        )
-        per_bucket: dict[tuple, dict] = {}
-        for i, b in enumerate(buckets):
-            k = (b, gens[i]) if gens is not None else (b, None)
-            cols_of_b = per_bucket.setdefault(k, {})
-            if col_names[i] in cols_of_b:
-                raise ValueError(
-                    f"duplicate block rows for bucket {b}: column "
-                    f"{col_names[i]!r} appears twice (corrupt wave dir)"
-                )
-            cols_of_b[col_names[i]] = i
-        for (b, gen), idx in per_bucket.items():
-            miss = gen_missing.get(gen, set()) if gens is not None \
-                else missing.get(int(b), ())
-            absent = [c for c in dec_cols if c not in idx and c not in miss]
-            stray = [c for c in idx if c not in full] if columns is None \
-                else [c for c in idx if c not in dec_schema]
-            if absent or stray:
-                raise ValueError(
-                    f"bucket {b} block set is corrupt: missing columns "
-                    f"{absent}, stray columns {stray} (split across "
-                    "partitions, or foreign rows in a wave dir)"
-                )
-            arrays: dict = {}
-
-            def dec(cname, _idx=idx):
-                if cname not in arrays:
-                    if cname in _idx:
-                        arrays[cname] = arrowcodecs.decode_column_arrow(
-                            payloads[_idx[cname]].as_py(),
-                            json.loads(metas[_idx[cname]]),
-                        )
-                    else:  # schema-evolved column: null-fill
-                        from .. import zonemap
-
-                        n = json.loads(metas[next(iter(_idx.values()))])["n"]
-                        arrays[cname] = pa.nulls(
-                            n, type=zonemap.arrow_type(dec_schema[cname])
-                        )
-                return arrays[cname]
-
-            if norm:
-                from .. import zonemap
-                import pyarrow.compute as pc
-
-                mask = zonemap.arrow_mask(dec, norm)
-                nsel = pc.sum(mask).as_py() or 0
-                if not nsel:
-                    continue  # zero matches: bulk columns never decode
-                sel = mask.to_numpy(zero_copy_only=False)
-                built: dict = {}
-                for c in dec_cols:
-                    if c in arrays:
-                        built[c] = arrays[c].filter(mask)
-                    elif c in idx:
-                        built[c] = arrowcodecs.decode_column_arrow_selected(
-                            payloads[idx[c]].as_py(),
-                            json.loads(metas[idx[c]]), sel,
-                        )
-                    else:
-                        built[c] = pa.nulls(nsel, type=zonemap.arrow_type(dec_schema[c]))
-                out = pa.table(built)
-            else:
-                out = pa.table({c: dec(c) for c in dec_cols})
-            for batch in out.to_batches():
-                yield batch
+        rows = pa.concat_tables(tables)
+        by_file = blockdecode.split_rows(rows, "_gen") \
+            if gen_missing is not None else [(None, rows)]
+        for gen, frows in by_file:
+            for out in decode_file(frows, gen and blockdecode.wave_of(gen)):
+                yield from out.to_batches()
 
     df = blocks.mapInArrow(decode_partition, out_schema)
     return df.select(*cols) if anchor else df
+
+
+def _payload_bytes(stats: dict[str, list], buckets: list[int] | None,
+                   cols) -> float:
+    """Encoded payload bytes a colocated read of `buckets` (None: every
+    committed bucket) x `cols` fetches, from block stats — inf when
+    the stats cannot bound it (a store without stats)."""
+    if not stats:
+        return math.inf
+    want = None if buckets is None else {str(b) for b in buckets}
+    return sum(s.get("enc_nbytes", math.inf)
+               for b, entries in stats.items() if want is None or b in want
+               for s in entries if s["column"] in cols)

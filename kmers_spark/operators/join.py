@@ -33,7 +33,7 @@ via buckets_per_task for 10^5-bucket layouts), each task reads both
 sides' block rows for its buckets with per-file pyarrow reads (the
 DataSource reader's pattern — datasource.py read()), decodes them with
 the kernel contract (late-materialized filters, evolution-vs-corruption
-distinction per datasource._decode_block_table), and joins Arrow-side
+distinction in blockdecode.decode_bucket), and joins Arrow-side
 (Acero hash join). Per-task memory is bounded at one bucket's decoded
 columns per side. The plan is range -> mapInArrow: no Exchange node
 exists in it by construction (asserted in tests/test_join.py).
@@ -54,13 +54,11 @@ NULLs unmatched).
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 
-from .. import manifest, zonemap
+from .. import blockdecode, manifest, zonemap
 from . import partitioning
-from .decode import _SPARK_TYPE, _wave_of, bloom_prune_filters
+from .decode import _SPARK_TYPE, bloom_prune_filters
 from .encode import assert_utc_session
 
 _HASH_SCHEMES = (partitioning.BUCKET_SCHEME, partitioning.LEGACY_SCHEME)
@@ -202,8 +200,6 @@ def _chunk_tables(paths: list[str], bucket_list: list[int],
     import pyarrow as pa
     import pyarrow.dataset as pads
 
-    from .. import arrowcodecs
-
     out: dict[int, list] = {}
     if not paths or not bucket_list:
         return {}
@@ -213,55 +209,22 @@ def _chunk_tables(paths: list[str], bucket_list: list[int],
     )
     pred = (pads.field("bucket").isin(list(bucket_list))
             & pads.field("column").isin(list(dec_cols)))
-    fetch = ["bucket", "column", "meta", "payload"]
+    schema = {c: types[c] for c in dec_cols}
 
     def decode_rows(tbl, allow_by_bucket):
-        if tbl.num_rows == 0:
-            return
-        row_buckets = tbl.column("bucket").to_pylist()
-        names = tbl.column("column").to_pylist()
-        metas = tbl.column("meta").to_pylist()
-        payloads = tbl.column("payload")
-        per_bucket: dict[int, dict[str, int]] = {}
-        for i, b in enumerate(row_buckets):
-            idx = per_bucket.setdefault(int(b), {})
-            if names[i] in idx:
-                raise ValueError(
-                    f"duplicate block rows for bucket {b}: column "
-                    f"{names[i]!r} appears twice (corrupt wave dir)"
-                )
-            idx[names[i]] = i
-        for b in sorted(per_bucket):
-            idx = per_bucket[b]
-            allowed = allow_by_bucket(b)
-            absent = [c for c in dec_cols if c not in idx and c not in allowed]
-            if absent:
-                raise ValueError(
-                    f"bucket {b} block set is corrupt: missing columns "
-                    f"{absent} (not a recorded schema-evolution gap)"
-                )
-            n = json.loads(metas[next(iter(idx.values()))])["n"]
-            cols = {}
-            for c in dec_cols:
-                if c in idx:
-                    arr = arrowcodecs.decode_column_arrow(
-                        payloads[idx[c]].as_py(), json.loads(metas[idx[c]])
-                    )
-                else:
-                    arr = pa.nulls(n, type=zonemap.arrow_type(types[c]))
-                cols[c] = arr
-            out.setdefault(b, []).append(pa.table(cols))
+        for b, rows in blockdecode.split_rows(tbl):
+            out.setdefault(b, []).append(blockdecode.decode_bucket(
+                rows, schema, allowed_missing=allow_by_bucket(b)))
 
     if streamed:
         allow = {w: set(v) for w, v in (gen_allow or {}).items()}
         for frag in dataset.get_fragments():
-            wave = _wave_of(frag.path)
-            wave_allow = allow.get(wave, set())
-            decode_rows(frag.to_table(filter=pred, columns=fetch),
+            wave_allow = allow.get(blockdecode.wave_of(frag.path), set())
+            decode_rows(frag.to_table(filter=pred, columns=blockdecode.FETCH),
                         lambda _b, _a=wave_allow: _a)
     else:
         miss_sets = {int(b): set(v) for b, v in miss.items()}
-        decode_rows(dataset.to_table(filter=pred, columns=fetch),
+        decode_rows(dataset.to_table(filter=pred, columns=blockdecode.FETCH),
                     lambda b: miss_sets.get(b, set()))
     return {
         b: (tabs[0] if len(tabs) == 1

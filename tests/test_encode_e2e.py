@@ -234,10 +234,13 @@ def test_decode_raises_on_duplicate_block_rows(spark, pages_df, tmp_path):
         dec.decode_table(spark, out).count()
 
 
-def test_decode_colocated_immune_to_small_maxPartitionBytes(spark, pages_df, tmp_path):
+def test_decode_colocated_immune_to_small_maxPartitionBytes(spark, pages_df, tmp_path,
+                                                           monkeypatch):
     """decode_colocated plans its read on an isolated session with the
     file-split knobs pinned huge; a tiny maxPartitionBytes in the caller's
-    session must not split block files (which would scatter buckets)."""
+    session must not split block files (which would scatter buckets).
+    The store is small, so the Spark plan is forced."""
+    monkeypatch.setattr(dec, "LOCAL_READ_MAX_BYTES", 0)
     out = str(tmp_path / "snap_split")
     enc.encode_table(pages_df, out, num_buckets=4)
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
@@ -252,8 +255,12 @@ def test_decode_colocated_immune_to_small_maxPartitionBytes(spark, pages_df, tmp
         spark.conf.set("spark.sql.files.openCostInBytes", old_open)
 
 
-def test_lookup_keys_prunes_buckets(spark, pages_df, tmp_path):
-    """Point lookups decode only the buckets the keys hash to."""
+def test_lookup_keys_prunes_buckets(spark, pages_df, tmp_path, monkeypatch):
+    """Point lookups decode only the buckets the keys hash to. The store
+    is small, so the Spark plan is forced: its bucket predicate must
+    reach the block-parquet scan (test_local_read.py pins the local
+    plan's counterpart)."""
+    monkeypatch.setattr(dec, "LOCAL_READ_MAX_BYTES", 0)
     out = str(tmp_path / "snap_lookup")
     enc.encode_table(pages_df, out, num_buckets=N_BUCKETS)
     urls = [r["url"] for r in pages_df.select("url").limit(3).collect()]

@@ -95,6 +95,48 @@ def test_ann_bruteforce_topk(spark):
     assert all(-1.0 <= s <= 1.0 for s in sims)
 
 
+def _emb_df(spark, rows):
+    return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+
+
+def test_ann_null_element_gives_null_cosine(spark):
+    """A null element inside an embedding nulls its cosine (zip_with's
+    propagation), so it sorts last instead of entering the top-k as a
+    NaN; the same holds for a pair rescore."""
+    from kmers_spark.functions import ann
+
+    e = _emb_df(spark, [(0, [1.0, 0.0, 1.0]), (1, [1.0, None, 1.0]),
+                        (2, [0.0, 1.0, 0.0]), (3, [1.0, 0.5, 1.0]),
+                        (4, None)])
+    rows = ann.cosine_topk_df(e, query_id=0, k=10).collect()
+    assert [r["vec_id"] for r in rows] == [3, 2, 1, 4]
+    assert rows[0]["cosine"] is not None and rows[1]["cosine"] == 0.0
+    assert rows[2]["cosine"] is None and rows[3]["cosine"] is None
+    pairs = e.alias("a").join(e.alias("b"), F.col("a.vec_id") < F.col("b.vec_id")) \
+        .select(F.col("a.vec_id").alias("va"), F.col("b.vec_id").alias("vb"),
+                ann._cosine_pair(F.col("a.embedding"), F.col("b.embedding"))
+                .alias("c"))
+    got = {(r["va"], r["vb"]): r["c"] for r in pairs.collect()}
+    assert got[(0, 1)] is None and got[(1, 3)] is None and got[(0, 4)] is None
+    assert got[(0, 2)] == 0.0
+    # a null element in the QUERY nulls every cosine
+    rows = ann.cosine_topk_df(e, query_id=1, k=10).collect()
+    assert rows and all(r["cosine"] is None for r in rows)
+
+
+def test_ann_null_query_embedding_is_empty(spark):
+    """Contract: a query row whose embedding is NULL, or no query row
+    at all, returns an empty top-k."""
+    from kmers_spark.functions import ann
+
+    e = _emb_df(spark, [(0, None), (1, [1.0, 0.0]), (2, [0.0, 1.0])])
+    assert ann.cosine_topk_df(e, query_id=0, k=5).collect() == []
+    assert ann.cosine_topk_df(e, query_id=9, k=5).collect() == []
+    cents = e.filter("vec_id > 0").select(
+        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_emb"))
+    assert ann._ivf_topk_from_cents(e, cents, 0, 5, 2).collect() == []
+
+
 def test_ann_lsh_subset_of_bruteforce_space(spark):
     from kmers_spark.functions import ann
 
