@@ -25,10 +25,10 @@ MIN_K, MIN_W = 9, 4   # minimizer params (frame = k-w = 5)
 # --------------------------------------------------------------------- entry
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: encode+decode documents & events at sf0.001 with the codec
-    auto-selector; verify decode equals input; return codec/ratio stats."""
-    from kmers_spark.operators.roundtrip import roundtrip
-    from kmers_spark.operators.encode import BLOCK_SCHEMA, make_encode_fn
+    """Flagship: encode the sf0.001 documents, events and embeddings
+    tables into 4 buckets with the codec auto-selector; return the
+    per-(table, column) codec and compression-ratio stats."""
+    from kmers_spark.operators.encode import encode_blocks_df
     from kmers_spark import selector
 
     sf_dir = "/root/testdata/sf0.001"
@@ -40,9 +40,7 @@ def entry(spark: SparkSession) -> DataFrame:
         bucketed = df.withColumn(
             "bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(4)).cast("int")
         )
-        blocks = bucketed.groupBy("bucket").applyInPandas(
-            make_encode_fn(schema, key, None), BLOCK_SCHEMA
-        )
+        blocks = encode_blocks_df(bucketed, schema, key, None)
         stats = (
             blocks.groupBy("column", "codec")
             .agg(

@@ -4,11 +4,12 @@ Generalizes the 2-bit fixed-width packing of COMBINE-lab/kmers
 (/root/reference, Rust) into a full codec suite — dictionary, RLE,
 FSST-style symbol tables, bit-packing, frame-of-reference — implemented
 as vectorized numpy/pyarrow kernels driven from PySpark DataFrames
-(applyInPandas / mapInArrow; no per-row Python anywhere).
+(applyInArrow / mapInArrow; no per-row Python anywhere).
 
 Layout:
     kernels/    pure numpy codec + domain kernels (no Spark imports)
-    codecs.py   codec registry: (pd.Series, type) -> (payload, meta) and back
+    arrowcodecs.py  codec registry: (pa.Array, type) -> (payload, meta) and back
+    codecs.py   pandas reference codec the tests check arrowcodecs against
     selector.py codec auto-selection from sampled column statistics
     operators/  Spark-side encode/decode jobs, partitioning, manifest
     functions/  DataFrame-level query operators (DNA semantics, dedup,

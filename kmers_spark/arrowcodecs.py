@@ -1,4 +1,4 @@
-"""Arrow-native codec layer — the hot path for the encode/decode jobs.
+"""Arrow-native codec layer — the one every encode/decode job runs.
 
 Produces payloads byte-compatible with codecs.encode_column (same block
 formats, same meta), but operates on Arrow buffers end-to-end:
@@ -263,8 +263,9 @@ def _intra(reps: np.ndarray) -> np.ndarray:
 # ------------------------------------------------------------------ stats
 
 def column_stats_arrow(arr: pa.Array, typ: str, sample_max: int = 8192) -> dict:
-    """Arrow-side mirror of selector.column_stats (same fields, computed
-    from buffers; no per-value Python objects)."""
+    """Deterministic stats over (a prefix sample of) one column chunk,
+    computed from buffers (no per-value Python objects);
+    selector.select_codec maps them to a codec."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     s = arr.slice(0, min(len(arr), sample_max))

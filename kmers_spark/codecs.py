@@ -1,9 +1,12 @@
-"""Column-level codec layer: pd.Series <-> (payload bytes, meta dict).
+"""Pandas reference codec: pd.Series <-> (payload bytes, meta dict).
 
-Sits between the Spark operators (operators/encode.py) and the numpy
-kernels. Handles what the reference deliberately does not store —
-logical lengths and validity — in block metadata, the lesson of
-`Naive::decode` emitting trailing pad symbols (SURVEY.md §2.2 D7:
+The engine encodes and decodes through arrowcodecs. This module is the
+reference implementation the tests compare the Arrow code against
+(same block formats, same meta), and it holds the shared helpers
+arrowcodecs imports. The block format stores what the kmers crate
+deliberately does not — logical lengths and validity — in block
+metadata, the lesson of `Naive::decode` emitting trailing pad symbols
+(SURVEY.md §2.2 D7:
 /root/reference/src/encoding/naive.rs:306,327 test comments).
 
 Block contract (all little-endian):

@@ -1,7 +1,7 @@
 """Per-bucket key Bloom filters (Iceberg puffin / Parquet bloom
 analogue), stored as sidecar files inside each wave directory.
 
-The filter is built INSIDE the encode kernels (make_encode_fn*) from
+The filter is built INSIDE the encode kernel (make_encode_fn_arrow) from
 the bucket's key column and written by the SAME executor task to
 `<wave_dir>/_blooms/b<bucket>_<uuid>.bloom` — no driver collect, no
 second job, and the underscore prefix keeps Spark and pyarrow dataset
@@ -224,16 +224,6 @@ def build_for_key_arrow(arr, typ: str,
     else:
         return None
     return build_from_hashes(h1, h2, bits_per_key, k)
-
-
-def build_for_key_pandas(series, typ: str,
-                         bits_per_key: int = DEFAULT_BITS_PER_KEY,
-                         k: int = DEFAULT_K) -> tuple[bytes, dict] | None:
-    import pyarrow as pa
-
-    return build_for_key_arrow(
-        pa.Array.from_pandas(series), typ, bits_per_key, k
-    )
 
 
 # ------------------------------------------------------------- sidecars

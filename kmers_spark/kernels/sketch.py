@@ -112,12 +112,6 @@ def hll_build_arrow(arr, typ: str) -> np.ndarray | None:
     return hll_from_hashes(h1)
 
 
-def hll_build_pandas(series, typ: str) -> np.ndarray | None:
-    import pyarrow as pa
-
-    return hll_build_arrow(pa.Array.from_pandas(series), typ)
-
-
 def merge(sketches: list[np.ndarray]) -> np.ndarray:
     """Register-wise max — exact union of the underlying value sets'
     sketches, whatever the overlap."""

@@ -407,8 +407,9 @@ def agg_table(spark: SparkSession, out_dir: str,
                         # greatest double; min of only-NaNs is NaN)
                         znull, znan = s.get("znull"), s.get("znan")
                         if znull is None or znan is None:
-                            decode_of[i].add(b)  # pre-znan snapshot /
-                            # pandas-path block: NaNs unknowable
+                            # stores written before znan/znull were
+                            # recorded are still on disk: NaNs unknowable
+                            decode_of[i].add(b)
                             continue
                         live = int(s.get("n_rows", 0)) - znull
                         if live == 0:

@@ -63,7 +63,6 @@ from .encode import (
     _blocks_path,
     _wave_name,
     _wave_rel,
-    make_encode_fn,
     make_encode_fn_arrow,
     sweep_orphan_waves,
 )
@@ -80,19 +79,19 @@ def _make_merge_fn_arrow(schema: dict[str, str], key: str,
                          bloom_cols: list[str] | None,
                          ndv_cols: list[str] | None):
     """(block rows of one bucket across generations, with _gen file
-    provenance) -> merged block rows. Decodes each generation with the
-    per-wave evolution allowance (null-fill what a generation
-    legitimately predates, RAISE on a corrupt post-evolution
-    generation), concatenates in generation order, and re-encodes
-    through the same kernel encode_table uses — codec re-selection,
-    zone maps, key ranges, blooms and sketches all regenerate for the
-    merged rows."""
+    provenance) -> merged block rows. Decodes each generation through
+    the bucket-decode kernel with the per-wave evolution allowance
+    (null-fill what a generation legitimately predates, RAISE on a
+    corrupt post-evolution generation), concatenates in generation
+    order, and re-encodes through the same kernel encode_table uses —
+    codec re-selection, zone maps, key ranges, blooms and sketches all
+    regenerate for the merged rows."""
 
     def fn(tbl):
         import pyarrow as pa
 
-        from .. import arrowcodecs, zonemap
-        from ..blockdecode import wave_of
+        from .. import arrowcodecs
+        from ..blockdecode import decode_bucket, split_rows, wave_of
 
         if tbl.num_rows == 0:
             from .delete import _empty_blocks_arrow
@@ -100,124 +99,30 @@ def _make_merge_fn_arrow(schema: dict[str, str], key: str,
             return _empty_blocks_arrow()
         arrowcodecs.pin_worker_threads()
         bucket_id = tbl.column("bucket")[0].as_py()
-        col_names = tbl.column("column").to_pylist()
-        metas = tbl.column("meta").to_pylist()
-        payloads = tbl.column("payload")
         waves = [wave_of(p) for p in tbl.column("_gen").to_pylist()]
-        gens: dict[str, dict[str, int]] = {}
-        for i, w in enumerate(waves):
-            if w not in wave_order:
-                raise ValueError(
-                    f"bucket {bucket_id}: block row from wave {w!r} which "
-                    "is not in the compaction's merge set (stray file?)"
-                )
-            cols_of = gens.setdefault(w, {})
-            if col_names[i] in cols_of:
-                raise ValueError(
-                    f"bucket {bucket_id}: column {col_names[i]!r} appears "
-                    f"twice in generation {w!r} (corrupt wave dir)"
-                )
-            cols_of[col_names[i]] = i
-        chunks: dict[str, list] = {c: [] for c in schema}
-        for w in sorted(gens, key=wave_order.__getitem__):
-            idx = gens[w]
-            allow = gen_allow.get(w, set()) if gen_allow else set()
-            stray = [c for c in idx if c not in schema]
-            absent = [c for c in schema if c not in idx and c not in allow]
-            if stray or absent:
-                raise ValueError(
-                    f"bucket {bucket_id} generation {w!r} is corrupt: "
-                    f"missing columns {absent}, stray columns {stray}"
-                )
-            n = json.loads(metas[next(iter(idx.values()))])["n"]
-            for c, typ in schema.items():
-                if c in idx:
-                    chunks[c].append(arrowcodecs.decode_column_arrow(
-                        payloads[idx[c]].as_py(), json.loads(metas[idx[c]])
-                    ))
-                else:  # generation predates the column: null rows
-                    chunks[c].append(pa.nulls(n, type=zonemap.arrow_type(typ)))
-        n_rows = sum(len(a) for a in chunks[next(iter(schema))])
-        merged = pa.table({
-            **{c: pa.concat_arrays([a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a for a in v])
-               for c, v in chunks.items()},
-            "bucket": pa.array([bucket_id] * n_rows, pa.int32()),
-        })
+        stray = sorted(set(waves) - set(wave_order))
+        if stray:
+            raise ValueError(
+                f"bucket {bucket_id}: block rows from waves {stray} which "
+                "are not in the compaction's merge set (stray file?)"
+            )
+        gens = split_rows(tbl.append_column("_w", pa.array(waves)), "_w")
+        decoded = []
+        for w, rows in sorted(gens, key=lambda g: wave_order[g[0]]):
+            try:
+                decoded.append(decode_bucket(
+                    rows, schema, allowed_missing=(gen_allow or {}).get(w, ())
+                ))
+            except ValueError as e:  # name the corrupt generation
+                raise ValueError(f"generation {w!r}: {e}") from e
+        merged = pa.concat_tables(decoded)
+        merged = merged.append_column(
+            "bucket", pa.array([bucket_id] * merged.num_rows, pa.int32())
+        )
         return make_encode_fn_arrow(schema, key, overrides, sort_by,
                                     bloom_dir=bloom_dir,
                                     bloom_cols=bloom_cols,
                                     ndv_cols=ndv_cols)(merged)
-
-    return fn
-
-
-def _make_merge_fn_pandas(schema: dict[str, str], key: str,
-                          overrides: dict[str, str] | None,
-                          sort_by: list[str] | None,
-                          wave_order: dict[str, int],
-                          gen_allow: dict[str, set] | None,
-                          bloom_dir: str | None,
-                          bloom_cols: list[str] | None,
-                          ndv_cols: list[str] | None):
-    """applyInPandas fallback of _make_merge_fn_arrow (same contract)."""
-    import pandas as pd
-
-    _BLOCK_COLS = ["bucket", "column", "codec", "n_rows",
-                   "raw_nbytes", "enc_nbytes", "payload", "meta"]
-
-    def fn(pdf: "pd.DataFrame"):
-        import numpy as np
-
-        from .. import codecs
-        from ..blockdecode import wave_of
-
-        if not len(pdf):
-            return pd.DataFrame(columns=_BLOCK_COLS)
-        bucket_id = int(pdf["bucket"].iloc[0])
-        pdf = pdf.assign(_w=pdf["_gen"].map(wave_of))
-        stray_w = set(pdf["_w"]) - set(wave_order)
-        if stray_w:
-            raise ValueError(
-                f"bucket {bucket_id}: block rows from waves {sorted(stray_w)} "
-                "not in the compaction's merge set (stray file?)"
-            )
-        parts: dict[str, list] = {c: [] for c in schema}
-        for w in sorted(set(pdf["_w"]), key=wave_order.__getitem__):
-            g = pdf[pdf["_w"] == w]
-            if g["column"].duplicated().any():
-                raise ValueError(
-                    f"bucket {bucket_id}: duplicate column rows in "
-                    f"generation {w!r} (corrupt wave dir)"
-                )
-            rows = {r["column"]: r for _, r in g.iterrows()}
-            allow = gen_allow.get(w, set()) if gen_allow else set()
-            stray = [c for c in rows if c not in schema]
-            absent = [c for c in schema if c not in rows and c not in allow]
-            if stray or absent:
-                raise ValueError(
-                    f"bucket {bucket_id} generation {w!r} is corrupt: "
-                    f"missing columns {absent}, stray columns {stray}"
-                )
-            n = json.loads(next(iter(rows.values()))["meta"])["n"]
-            for c, typ in schema.items():
-                if c in rows:
-                    s = codecs.decode_column(
-                        bytes(rows[c]["payload"]), json.loads(rows[c]["meta"])
-                    )
-                    if typ == "binary":
-                        s = s.map(lambda v: None if v is None else bytes(v))
-                else:
-                    s = pd.Series([None] * n, dtype=object) if typ in (
-                        "string", "binary", "float_array"
-                    ) else pd.Series(np.full(n, np.nan))
-                parts[c].append(s)
-        data = {c: pd.concat(v, ignore_index=True) for c, v in parts.items()}
-        out = pd.DataFrame(data)
-        out["bucket"] = bucket_id
-        return make_encode_fn(schema, key, overrides, sort_by,
-                              bloom_dir=bloom_dir,
-                              bloom_cols=bloom_cols,
-                              ndv_cols=ndv_cols)(out)
 
     return fn
 
@@ -284,23 +189,13 @@ def compact_stream(spark: SparkSession, out_dir: str, *,
 
     new_dir = f"{_blocks_path(out_dir)}/{_wave_name()}"
     bloom_dir = _bloomkern.stage_dir(new_dir)
-    gb = blocks.groupBy("bucket")
-    if hasattr(gb, "applyInArrow"):
-        merged = gb.applyInArrow(
-            _make_merge_fn_arrow(schema_order, key_col, overrides, None,
-                                 wave_order, gen_allow, bloom_dir,
-                                 m.get("bloom_columns"),
-                                 m.get("ndv_columns")),
-            BLOCK_SCHEMA,
-        )
-    else:
-        merged = gb.applyInPandas(
-            _make_merge_fn_pandas(schema_order, key_col, overrides, None,
-                                  wave_order, gen_allow, bloom_dir,
-                                  m.get("bloom_columns"),
-                                  m.get("ndv_columns")),
-            BLOCK_SCHEMA,
-        )
+    merged = blocks.groupBy("bucket").applyInArrow(
+        _make_merge_fn_arrow(schema_order, key_col, overrides, None,
+                             wave_order, gen_allow, bloom_dir,
+                             m.get("bloom_columns"),
+                             m.get("ndv_columns")),
+        BLOCK_SCHEMA,
+    )
     (
         merged.repartition(F.col("bucket"))
         .write.mode("error")

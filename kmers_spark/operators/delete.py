@@ -62,7 +62,6 @@ from .encode import (
     _blocks_path,
     _wave_name,
     _wave_rel,
-    make_encode_fn,
     make_encode_fn_arrow,
     migrate_legacy_layout,
     sweep_orphan_waves,
@@ -172,66 +171,6 @@ def _make_delete_fn_arrow(schema: dict[str, str], key: str,
                                     bloom_cols=bloom_cols,
                                     ndv_cols=ndv_cols,
                                     presorted=True)(tbl)
-
-    return fn
-
-
-def _make_delete_fn_pandas(schema: dict[str, str], key: str,
-                           overrides: dict[str, str] | None,
-                           sort_by: list[str] | None,
-                           bloom_dir: str | None = None,
-                           bloom_cols: list[str] | None = None,
-                           ndv_cols: list[str] | None = None):
-    """applyInPandas fallback of _make_delete_fn_arrow (same contract)."""
-    import pandas as pd
-
-    from .. import codecs
-
-    def fn(blocks_pdf: "pd.DataFrame", keys_pdf: "pd.DataFrame"):
-        if not len(blocks_pdf):
-            return pd.DataFrame(columns=_BLOCK_COLS)
-        if blocks_pdf["column"].duplicated().any():
-            raise ValueError(
-                f"duplicate block rows for bucket "
-                f"{blocks_pdf['bucket'].iloc[0]} during delete"
-            )
-        rows_by_col = {r["column"]: r for _, r in blocks_pdf.iterrows()}
-        if key not in rows_by_col:
-            raise ValueError(
-                f"bucket {blocks_pdf['bucket'].iloc[0]} has no block for "
-                f"key column {key!r}; cannot delete by key"
-            )
-        if not len(keys_pdf):
-            return blocks_pdf[_BLOCK_COLS]
-        bucket_id = int(blocks_pdf["bucket"].iloc[0])
-        krow = rows_by_col[key]
-        key_s = codecs.decode_column(bytes(krow["payload"]), json.loads(krow["meta"]))
-        doomed = set(keys_pdf[key].dropna())
-        hit = key_s.isin(doomed) & key_s.notna()
-        if not hit.any():
-            return blocks_pdf[_BLOCK_COLS]
-        keep = ~hit
-        if not keep.any():
-            return pd.DataFrame(columns=_BLOCK_COLS)
-        data = {}
-        for c in schema:
-            if c not in rows_by_col:
-                continue
-            if c == key:
-                s = key_s
-            else:
-                r = rows_by_col[c]
-                s = codecs.decode_column(bytes(r["payload"]), json.loads(r["meta"]))
-                if schema[c] == "binary":
-                    s = s.map(lambda v: None if v is None else bytes(v))
-            data[c] = s[keep.to_numpy()].reset_index(drop=True)
-        pdf = pd.DataFrame(data)
-        pdf["bucket"] = bucket_id
-        sub = {c: t for c, t in schema.items() if c in data}
-        return make_encode_fn(sub, key, overrides, sort_by,
-                              bloom_dir=bloom_dir,
-                              bloom_cols=bloom_cols,
-                              ndv_cols=ndv_cols)(pdf)
 
     return fn
 
@@ -446,23 +385,16 @@ def _delete_rewrite(spark: SparkSession, out_dir: str, m: dict, key_col: str,
         sort_by = [c for c in cl if c != key_col] + [key_col]
     new_dir = f"{_blocks_path(out_dir)}/{_wave_name()}"
     bloom_dir = _bloomkern.stage_dir(new_dir)
-    cg = rewrite.groupBy("bucket").cogroup(pairs.groupBy("bucket"))
-    if hasattr(cg, "applyInArrow"):
-        rewritten = cg.applyInArrow(
+    rewritten = (
+        rewrite.groupBy("bucket").cogroup(pairs.groupBy("bucket"))
+        .applyInArrow(
             _make_delete_fn_arrow(schema_order, key_col, overrides, sort_by,
                                   bloom_dir=bloom_dir,
                                   bloom_cols=m.get("bloom_columns"),
                                   ndv_cols=m.get("ndv_columns")),
             BLOCK_SCHEMA,
         )
-    else:
-        rewritten = cg.applyInPandas(
-            _make_delete_fn_pandas(schema_order, key_col, overrides, sort_by,
-                                   bloom_dir=bloom_dir,
-                                   bloom_cols=m.get("bloom_columns"),
-                                   ndv_cols=m.get("ndv_columns")),
-            BLOCK_SCHEMA,
-        )
+    )
     (
         # one partition per hash(bucket): every bucket's block rows land
         # whole in one file (decode_colocated's contract), same as

@@ -3,7 +3,7 @@
 Pipeline (all declarative until the codec kernels):
     input df
       -> salted skew-aware bucket assignment (partitioning.with_bucket)
-      -> groupBy(bucket).applyInPandas(encode kernels)   [Arrow batches]
+      -> groupBy(bucket).applyInArrow(encode kernels)    [Arrow batches]
       -> block table parquet, partitioned by bucket      [resume unit]
       -> manifest commit markers + per-block codec/size stats
 
@@ -22,10 +22,9 @@ import json
 import os
 import time
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .. import codecs, manifest, selector, zonemap
+from .. import manifest, selector, zonemap
 from ..kernels import bloom as bloomkern
 from ..kernels import sketch as sketchkern
 from . import partitioning
@@ -37,11 +36,10 @@ BLOCK_SCHEMA = (
 
 
 def assert_utc_session(spark: SparkSession, schema: dict[str, str]) -> None:
-    """tz-aware timestamps are stored as epoch-us; the pandas UDF path
-    receives session-local naive datetimes, so a non-UTC session would
-    write wall-clock micros while the Arrow path writes true epoch —
-    blocks from the two paths would disagree by the tz offset. Blocks are
-    only portable when the session is pinned to UTC (session.py does)."""
+    """tz-aware timestamps are stored as epoch-us. Any conversion that
+    sees session-local naive datetimes (pandas, for one) would shift
+    them by the tz offset under a non-UTC session, so blocks are only
+    portable when the session is pinned to UTC (session.py does)."""
     if "timestamp" in schema.values():
         tz = spark.conf.get("spark.sql.session.timeZone")
         if tz != "UTC":
@@ -51,134 +49,6 @@ def assert_utc_session(spark: SparkSession, schema: dict[str, str]) -> None:
             )
 
 
-def _raw_nbytes(series: pd.Series, typ: str) -> int:
-    if typ in ("int64", "timestamp", "timestamp_ntz", "double"):
-        return 8 * len(series)
-    if typ == "string":
-        return int(series.dropna().map(lambda v: len(v.encode("utf-8"))).sum())
-    if typ == "float_array":
-        return 4 * int(series.dropna().map(len).sum())
-    return int(series.dropna().map(len).sum())
-
-
-def make_encode_fn(schema: dict[str, str], key: str,
-                   codec_overrides: dict[str, str] | None,
-                   sort_by: list[str] | None = None,
-                   bloom_dir: str | None = None,
-                   bloom_cols: list[str] | None = None,
-                   ndv_cols: list[str] | None = None):
-    """Build the applyInPandas group encoder. Everything it captures is a
-    small plain dict (cheap closure pickling).
-
-    `sort_by` orders rows within the block (default: the key column).
-    Range-clustered stores pass [cluster_col, key]: a range predicate
-    then selects a CONTIGUOUS run of rows, so segmented codecs' mask-
-    driven segment skipping composes with bucket pruning on scans
-    (without it, the surviving buckets' intra-bucket scan is full)."""
-    overrides = codec_overrides or {}
-    sort_cols = sort_by or [key]
-
-    def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols, kind="mergesort").reset_index(drop=True)
-        bucket = int(pdf["bucket"].iloc[0]) if len(pdf) else -1
-        out = []
-        for col, typ in schema.items():
-            s = pdf[col]
-            codec = overrides.get(col) or selector.select_codec(
-                selector.column_stats(s, typ), typ
-            )
-            payload, meta = codecs.encode_column(s, codec, typ)
-            zb = zonemap.bounds_pandas(s, typ)
-            if zb is not None:
-                # per-block zone map (Iceberg column bounds analogue):
-                # lands in the manifest at commit; scan_table prunes
-                # buckets whose bounds exclude a filter, driver-side
-                meta = {**meta, "zmin": zb[0], "zmax": zb[1]}
-            # null count + (overflow-safe) int sum: metadata-only
-            # aggregates (agg.agg_table) answer count(col)/sum(col)
-            # from these without touching the payload. Pandas-path
-            # caveats (absent stats degrade agg_table to decode, never
-            # to wrong answers): doubles get no znull (pandas cannot
-            # tell a genuine NaN value from a null), and zsum requires
-            # an exact integer dtype (a nullable int64 delivered as
-            # float64 would round values >= 2^53 through the cast)
-            if typ != "double":
-                meta = {**meta, "znull": int(s.isna().sum())}
-            if typ == "int64" and zb is not None and s.dtype.kind == "i":
-                nn = len(s) - int(s.isna().sum())
-                if nn and max(abs(zb[0]), abs(zb[1])) * nn < 2**62:
-                    meta = {**meta, "zsum": int(
-                        s.dropna().to_numpy(dtype="int64").sum()
-                    )}
-            if col == key:
-                # distinct-key count — see make_encode_fn_arrow
-                meta = {**meta, "zndv": int(s.nunique())}
-            if ndv_cols and col in ndv_cols and typ in ("string", "int64"):
-                # ndv_columns= HLL sketch — see make_encode_fn_arrow.
-                # Same pandas honesty rule as zsum: a nullable int64
-                # arrives as float64 and values >= 2^53 would hash
-                # ROUNDED bits (breaking the sketch==decode determinism
-                # invariant) — omit the sketch; the bucket decodes
-                # through the exact kernel instead
-                if typ == "int64" and s.dtype.kind != "i":
-                    pass
-                else:
-                    regs = sketchkern.hll_build_pandas(s, typ)
-                    if regs is not None:
-                        meta = {**meta, "zhll": sketchkern.pack(regs)}
-            if col == key and len(s) and typ in ("string", "int64"):
-                # Iceberg file-stats analogue: the block's key range rides
-                # in the key column's meta and lands in the manifest at
-                # commit (decode.lookup_keys prunes buckets whose range
-                # excludes every probe key). min/max over non-null keys —
-                # valid whatever sort_by ordered the rows by (a null key
-                # can never match a probe, so dropping nulls keeps the
-                # range a total bound for probeable keys).
-                # JSON-safe types only (numpy scalars coerced to native).
-                nn = s.dropna()
-                if len(nn):
-                    lo, hi = nn.min(), nn.max()
-                    lo = lo.item() if hasattr(lo, "item") else lo
-                    hi = hi.item() if hasattr(hi, "item") else hi
-                    if isinstance(lo, (str, int)) and isinstance(hi, (str, int)):
-                        meta = {**meta, "key_min": lo, "key_max": hi}
-            out.append(
-                {
-                    "bucket": bucket,
-                    "column": col,
-                    # meta carries the ACTUAL codec (encode may fall back,
-                    # e.g. dec_scale -> xor_float on an inexact block)
-                    "codec": meta.get("codec", codec),
-                    "n_rows": len(s),
-                    "raw_nbytes": _raw_nbytes(s, typ),
-                    "enc_nbytes": len(payload),
-                    "payload": payload,
-                    "meta": json.dumps(meta, sort_keys=True),
-                }
-            )
-        # key Bloom sidecar (kernels/bloom.py): written by this task in
-        # the same pass, regenerated by every bucket rewrite;
-        # lookup_keys probes it to skip decoding buckets that
-        # definitely lack a probe key
-        if bloom_dir is not None:
-            bl = bloomkern.build_for_key_pandas(pdf[key], schema[key])
-            if bl is not None:
-                bloomkern.write_sidecar(bloom_dir, bucket, *bl)
-            # bloom_columns= sidecars: equality-scan pruning on non-key
-            # columns (decode.bloom_prune_filters). A column absent from
-            # this rewrite's sub-schema (evolved gap) is skipped —
-            # readers treat the missing filter as maybe-present.
-            for c in bloom_cols or ():
-                if c == key or c not in schema or c not in pdf.columns:
-                    continue
-                bl = bloomkern.build_for_key_pandas(pdf[c], schema[c])
-                if bl is not None:
-                    bloomkern.write_col_sidecar(bloom_dir, bucket, c, *bl)
-        return pd.DataFrame(out)
-
-    return encode_group
-
-
 def make_encode_fn_arrow(schema: dict[str, str], key: str,
                          codec_overrides: dict[str, str] | None,
                          sort_by: list[str] | None = None,
@@ -186,12 +56,16 @@ def make_encode_fn_arrow(schema: dict[str, str], key: str,
                          bloom_cols: list[str] | None = None,
                          ndv_cols: list[str] | None = None,
                          presorted: bool = False):
-    """Arrow-native group encoder (the hot path): rows stay in Arrow
-    buffers end-to-end; sort/dictionary/token work happens in C++ and
-    the bit-level kernels in numpy. ~10x less allocator traffic than the
-    pandas path, which is what lets 32 cores actually scale (BENCH).
-    `sort_by`: see make_encode_fn — [cluster_col, key] for range-
-    clustered stores so segment skipping composes with bucket pruning.
+    """Build the group encoder: one bucket's rows -> its block rows.
+    Rows stay in Arrow buffers end-to-end; sort/dictionary/token work
+    happens in C++ and the bit-level kernels in numpy. Everything it
+    captures is a small plain dict (cheap closure pickling).
+
+    `sort_by` orders rows within the block (default: the key column).
+    Range-clustered stores pass [cluster_col, key]: a range predicate
+    then selects a CONTIGUOUS run of rows, so segmented codecs' mask-
+    driven segment skipping composes with bucket pruning on scans
+    (without it, the surviving buckets' intra-bucket scan is full).
     `presorted=True` skips the in-kernel sort AND its full-table take()
     copy — for callers whose rows already arrive in sort_by order (the
     encode job's JVM sortWithinPartitions pre-sort; delete's survivors,
@@ -222,16 +96,22 @@ def make_encode_fn_arrow(schema: dict[str, str], key: str,
                 arrowcodecs.column_stats_arrow(arr, typ), typ
             )
             payload, meta = arrowcodecs.encode_column_arrow(arr, codec, typ)
+            # meta carries the ACTUAL codec (encode may fall back, e.g.
+            # dec_scale -> xor_float on an inexact block)
             codec = meta.get("codec", codec)
             zb = zonemap.bounds_arrow(arr, typ)
             if zb is not None:
+                # per-block zone map (Iceberg column bounds analogue):
+                # lands in the manifest at commit; scan_table prunes
+                # buckets whose bounds exclude a filter, driver-side
                 meta = {**meta, "zmin": zb[0], "zmax": zb[1]}
-            # null count + (overflow-safe) int sum for metadata-only
-            # aggregates — see make_encode_fn. Doubles also record a
-            # NaN count: Arrow's min_max SKIPS NaN, so zone bounds are
-            # NaN-blind (sound for pruning — NaN matches no comparison)
-            # but SQL max must return NaN when one exists, and a
-            # filter-contained block must not count NaN rows as
+            # null count + (overflow-safe) int sum: metadata-only
+            # aggregates (agg.agg_table) answer count(col)/sum(col)
+            # from these without touching the payload. Doubles also
+            # record a NaN count: Arrow's min_max SKIPS NaN, so zone
+            # bounds are NaN-blind (sound for pruning — NaN matches no
+            # comparison) but SQL max must return NaN when one exists,
+            # and a filter-contained block must not count NaN rows as
             # matching; znan lets agg_table know without decoding
             meta = {**meta, "znull": arr.null_count}
             if typ == "double":
@@ -261,9 +141,13 @@ def make_encode_fn_arrow(schema: dict[str, str], key: str,
                 if regs is not None:
                     meta = {**meta, "zhll": sketchkern.pack(regs)}
             if col == key and len(arr) and typ in ("string", "int64"):
-                # key range for manifest pruning: non-null min/max
-                # (order-independent — sort_by may not lead with the
-                # key; a null key never matches a probe)
+                # Iceberg file-stats analogue: the block's key range rides
+                # in the key column's meta and lands in the manifest at
+                # commit (decode.lookup_keys prunes buckets whose range
+                # excludes every probe key). Non-null min/max: valid
+                # whatever sort_by ordered the rows by, and a null key
+                # never matches a probe, so the range bounds every
+                # probeable key. JSON-safe types only.
                 mm = pc.min_max(arr)
                 lo, hi = mm["min"].as_py(), mm["max"].as_py()
                 if isinstance(lo, (str, int)) and isinstance(hi, (str, int)):
@@ -285,12 +169,19 @@ def make_encode_fn_arrow(schema: dict[str, str], key: str,
             rows["enc_nbytes"].append(len(payload))
             rows["payload"].append(payload)
             rows["meta"].append(json.dumps(meta, sort_keys=True))
-        # key Bloom sidecar — see make_encode_fn
+        # key Bloom sidecar (kernels/bloom.py): written by this task in
+        # the same pass, regenerated by every bucket rewrite;
+        # lookup_keys probes it to skip decoding buckets that
+        # definitely lack a probe key
         if bloom_dir is not None:
             bl = bloomkern.build_for_key_arrow(table.column(key), schema[key])
             if bl is not None:
                 bloomkern.write_sidecar(bloom_dir, bucket, *bl)
-            for c in bloom_cols or ():  # bloom_columns= — see make_encode_fn
+            # bloom_columns= sidecars: equality-scan pruning on non-key
+            # columns (decode.bloom_prune_filters). A column absent from
+            # this rewrite's sub-schema (evolved gap) is skipped —
+            # readers treat the missing filter as maybe-present.
+            for c in bloom_cols or ():
                 if c == key or c not in schema or c not in table.column_names:
                     continue
                 bl = bloomkern.build_for_key_arrow(table.column(c), schema[c])
@@ -318,7 +209,7 @@ def encode_blocks_df(bucketed: DataFrame, schema: dict[str, str], key: str,
                      bloom_dir: str | None = None,
                      bloom_cols: list[str] | None = None,
                      ndv_cols: list[str] | None = None) -> DataFrame:
-    """groupBy(bucket) -> block rows, preferring the Arrow path.
+    """groupBy(bucket) -> block rows (applyInArrow).
 
     Measured dead end (r6, kept as a record): pre-sorting rows JVM-side
     (repartition(bucket) + sortWithinPartitions(bucket, *sort_by) +
@@ -328,18 +219,10 @@ def encode_blocks_df(bucketed: DataFrame, schema: dict[str, str], key: str,
     string sort over whole partitions costs what the per-bucket Arrow
     sort saved. The groupBy path stays; presorted=True remains the win
     where order already exists (delete's survivors)."""
-    grouped = bucketed.groupBy("bucket")
-    if hasattr(grouped, "applyInArrow"):
-        return grouped.applyInArrow(
-            make_encode_fn_arrow(schema, key, codec_overrides,
-                                 sort_by=sort_by, bloom_dir=bloom_dir,
-                                 bloom_cols=bloom_cols, ndv_cols=ndv_cols),
-            BLOCK_SCHEMA,
-        )
-    return grouped.applyInPandas(
-        make_encode_fn(schema, key, codec_overrides,
-                       sort_by=sort_by, bloom_dir=bloom_dir,
-                       bloom_cols=bloom_cols, ndv_cols=ndv_cols),
+    return bucketed.groupBy("bucket").applyInArrow(
+        make_encode_fn_arrow(schema, key, codec_overrides,
+                             sort_by=sort_by, bloom_dir=bloom_dir,
+                             bloom_cols=bloom_cols, ndv_cols=ndv_cols),
         BLOCK_SCHEMA,
     )
 

@@ -10,7 +10,7 @@ The salt is derived from the row itself (url), so assignment is
 deterministic and recorded in the manifest — decode doesn't need it
 (blocks are self-describing) but resume does (identical re-assignment).
 
-AQE's skew handling only covers joins, not applyInPandas groups — hence
+AQE's skew handling only covers joins, not applyInArrow groups — hence
 explicit salting here (SURVEY.md §4).
 """
 

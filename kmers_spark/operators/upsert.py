@@ -327,18 +327,16 @@ def _upsert_rewrite(spark: SparkSession, out_dir: str, m: dict,
         sort_by = [c for c in cl if c != key_col] + [key_col]
     new_dir = f"{_blocks_path(out_dir)}/{_wave_name()}"
     bloom_dir = _bloomkern.stage_dir(new_dir)
-    cg = rewrite.groupBy("bucket").cogroup(bdf.groupBy("bucket"))
-    fn = _make_upsert_fn_arrow(schema, key_col, overrides, sort_by,
-                               bloom_dir=bloom_dir,
-                               bloom_cols=m.get("bloom_columns"),
-                               ndv_cols=m.get("ndv_columns"))
-    if hasattr(cg, "applyInArrow"):
-        rewritten = cg.applyInArrow(fn, BLOCK_SCHEMA)
-    else:  # pandas-era Spark: route the rows through Arrow ourselves
-        raise NotImplementedError(
-            "upsert_table requires Spark with cogroup applyInArrow "
-            "(Spark >= 4.0)"
+    rewritten = (
+        rewrite.groupBy("bucket").cogroup(bdf.groupBy("bucket"))
+        .applyInArrow(
+            _make_upsert_fn_arrow(schema, key_col, overrides, sort_by,
+                                  bloom_dir=bloom_dir,
+                                  bloom_cols=m.get("bloom_columns"),
+                                  ndv_cols=m.get("ndv_columns")),
+            BLOCK_SCHEMA,
         )
+    )
 
     out = rewritten if verbatim is None else rewritten.unionByName(verbatim)
     (

@@ -4,8 +4,9 @@ The reference hard-codes one dictionary of 4 and picks among 24 code
 assignments (encoding/naive.rs:49-74); here the "assignment" decision is
 generalized to *which codec family* fits the sampled distribution:
 
-    stats: n, distinct (exact on the sample), mean run length,
-           byte entropy (strings), sortedness (ints/timestamps)
+    stats (arrowcodecs.column_stats_arrow): n, distinct (exact on the
+           sample), mean run length, byte entropy (strings),
+           sortedness (ints/timestamps)
 
     decision tree (recorded per block in the lineage manifest):
       string/binary:
@@ -30,90 +31,10 @@ deterministic and its decisions are reproducible from the manifest.
 
 from __future__ import annotations
 
-import math
-
-import numpy as np
-import pandas as pd
-
 DICT_MAX_CARD_FRAC = 0.1      # dictionary pays off when distinct/n below this
 DICT_MAX_CARD_ABS = 1 << 16   # and dictionary small enough to broadcast in-block
 RLE_MIN_MEAN_RUN = 2.0        # mean run length where RLE beats plain codes
 FSST_MAX_ENTROPY = 6.5        # bits/byte; above this, text is incompressible
-
-
-def column_stats(series: pd.Series, typ: str, sample_max: int = 8192) -> dict:
-    """Deterministic stats over (a prefix sample of) one column chunk."""
-    s = series.iloc[:sample_max]
-    n = len(s)
-    mask = s.notna()
-    dense = s[mask]
-    stats: dict = {"n": n, "n_null": int((~mask).sum()), "n_total": len(series)}
-    if typ == "float_array":
-        # vector values are unhashable (no distinct/run stats) and the
-        # only codec is vec_plain (float32 payloads are ~incompressible;
-        # the generic entropy backstop still applies at encode)
-        return stats
-    if n == 0 or len(dense) == 0:
-        stats.update(distinct=0, mean_run=0.0)
-        return stats
-
-    vals = dense.to_numpy(dtype=object)
-    stats["distinct"] = int(pd.unique(dense).shape[0])
-
-    # mean run length over the full (null-filled) sequence
-    codes, _ = pd.factorize(s, use_na_sentinel=False)
-    changes = int((codes[1:] != codes[:-1]).sum()) + 1 if n > 1 else 1
-    stats["mean_run"] = n / changes
-
-    if typ in ("string", "binary"):
-        blob = b"".join(
-            v.encode("utf-8") if isinstance(v, str) else bytes(v) for v in vals[:1024]
-        )
-        if blob:
-            counts = np.bincount(np.frombuffer(blob, dtype=np.uint8), minlength=256)
-            p = counts[counts > 0] / len(blob)
-            stats["byte_entropy"] = float(-(p * np.log2(p)).sum())
-        else:
-            stats["byte_entropy"] = 0.0
-        stats["avg_len"] = float(np.mean([len(v) for v in vals]))
-        # consecutive common-prefix stat (front coding pays off on the
-        # sorted key column; order within a block is part of the format)
-        if len(vals) > 1:
-            from .kernels.prefix import _common_prefix_lens
-
-            sb = [v.encode("utf-8") if isinstance(v, str) else bytes(v) for v in vals[:512]]
-            stats["avg_common_prefix"] = float(_common_prefix_lens(sb)[1:].mean())
-        # token stats for the word-dictionary codec (space-separated text)
-        sample_bytes = [
-            v.encode("utf-8") if isinstance(v, str) else bytes(v) for v in vals[:1024]
-        ]
-        tok_lists = [v.split(b" ") for v in sample_bytes]
-        n_tok = sum(len(t) for t in tok_lists)
-        if n_tok:
-            uniq_toks = set()
-            tok_len = 0
-            for t in tok_lists:
-                uniq_toks.update(t)
-                tok_len += sum(len(x) for x in t)
-            stats["tokens_per_value"] = n_tok / max(len(sample_bytes), 1)
-            stats["distinct_tokens"] = len(uniq_toks)
-            stats["avg_tok_len"] = tok_len / n_tok
-    elif typ in ("int64", "timestamp", "timestamp_ntz"):
-        iv = (
-            dense.astype("datetime64[us]").to_numpy().view(np.int64)
-            if typ.startswith("timestamp")
-            else dense.astype("Int64").to_numpy(dtype=np.int64)
-        )
-        stats["sortedness"] = float((np.diff(iv) >= 0).mean()) if len(iv) > 1 else 1.0
-        rng = int(iv.max()) - int(iv.min())
-        stats["range_bits"] = max(rng, 0).bit_length()
-    elif typ == "double":
-        from .kernels import floats
-
-        fv = np.ascontiguousarray(dense.to_numpy(dtype=np.float64))
-        stats["dec_scale"] = floats.find_dec_scale(fv)
-        stats["xor_zero_frac"] = floats.xor_zero_frac(fv)
-    return stats
 
 
 FSST_GAIN = 0.62   # measured FSST-lite body ratio on English-like text

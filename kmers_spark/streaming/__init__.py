@@ -1,2 +1,3 @@
-"""Structured Streaming paths: micro-batch encode with exactly-once
-block commits via foreachBatch + the manifest's commit markers."""
+"""Structured Streaming helpers beside the `kmers` DataSource (whose
+writeStream sink is the streaming encode): incremental decode of
+committed waves to a parquet sink, and a stateful sessionizer."""

@@ -401,10 +401,10 @@ def _float_mask_arrow(arr, op: str, bv, pa, pc):
 
 
 def pandas_mask(get_col, norm: list[tuple], schema: dict[str, str]):
-    """numpy twin of arrow_mask for the pandas decode fallback path.
+    """numpy twin of arrow_mask: the reference implementation the tests
+    compare arrow_mask against (every read path runs arrow_mask).
 
-    Known limitation (legacy path only — every Spark 4 deployment takes
-    the Arrow kernels): pandas conflates null and NaN in float columns,
+    Known limitation: pandas conflates null and NaN in float columns,
     so this mask cannot replicate Spark's NaN-is-greatest comparison
     semantics for doubles; NaN rows filter like nulls here."""
     import numpy as np

@@ -407,34 +407,6 @@ def test_double_nan_max_semantics(spark, tmp_path):
     assert r["min_d"] == truth_min == 0.0
 
 
-def test_pandas_encoder_stats_honesty():
-    """The applyInPandas fallback must NOT record stats it cannot
-    compute exactly: no znull for doubles (pandas can't tell NaN from
-    null) and no zsum for float64-backed int columns (values >= 2^53
-    would round through the cast). Absent stats degrade agg_table to
-    decode — never to a wrong stats-first answer."""
-    import json as _json
-
-    import pandas as pd
-
-    from kmers_spark.operators.encode import make_encode_fn
-
-    pdf = pd.DataFrame({
-        "k": [f"k{i}" for i in range(10)],
-        "v": pd.array([2**60 + i for i in range(10)],
-                      dtype="float64"),  # float-backed "int64" column
-        "d": [float("nan"), 1.0] * 5,
-        "bucket": [0] * 10,
-    })
-    fn = make_encode_fn({"k": "string", "v": "int64", "d": "double"},
-                    "k", None)
-    out = fn(pdf)
-    metas = {r["column"]: _json.loads(r["meta"]) for _, r in out.iterrows()}
-    assert "zsum" not in metas["v"]  # inexact dtype: no recorded sum
-    assert "znull" not in metas["d"]  # NaN-vs-null ambiguity: no count
-    assert metas["k"]["znull"] == 0
-
-
 def test_double_filter_nan_semantics(spark, tmp_path):
     """Spark SQL (and DuckDB) order NaN as the GREATEST double: NaN
     rows MATCH >/>= predicates and fail </<=. Zone bounds are NaN-blind

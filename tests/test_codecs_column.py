@@ -2,11 +2,12 @@
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from kmers_spark import codecs, selector
+from kmers_spark import arrowcodecs, codecs, selector
 
 
 def _assert_series_equal(out: pd.Series, expect: pd.Series, typ: str):
@@ -87,7 +88,7 @@ def test_string_property_all_codecs(vals):
 class TestSelector:
     def test_low_card_runs_picks_dict_rle(self):
         s = pd.Series(["en"] * 600 + ["de"] * 100 + ["fr"] * 50, dtype=object)
-        stats = selector.column_stats(s, "string")
+        stats = arrowcodecs.column_stats_arrow(pa.array(s), "string")
         assert selector.select_codec(stats, "string") == "dict_rle"
 
     def test_selector_near_optimal_across_distributions(self):
@@ -101,7 +102,7 @@ class TestSelector:
         }
         for name, vals in cases.items():
             s = pd.Series(vals, dtype=object)
-            choice = selector.select_codec(selector.column_stats(s, "string"), "string")
+            choice = selector.select_codec(arrowcodecs.column_stats_arrow(pa.array(s), "string"), "string")
             sizes = {}
             for codec in codecs.STRING_CODECS:
                 p, _ = codecs.encode_column(s, codec, "string")
@@ -111,7 +112,7 @@ class TestSelector:
 
     def test_sorted_urls_pick_prefix(self):
         s = pd.Series(sorted(f"https://example.com/products/item-{i}" for i in range(500)), dtype=object)
-        stats = selector.column_stats(s, "string")
+        stats = arrowcodecs.column_stats_arrow(pa.array(s), "string")
         assert selector.select_codec(stats, "string") == "prefix"
 
     def test_wordy_text_picks_words(self):
@@ -121,25 +122,25 @@ class TestSelector:
             [" ".join(rng.choice(words, 25)) + f" u{i}" for i in range(500)],
             dtype=object,
         )
-        stats = selector.column_stats(s, "string")
+        stats = arrowcodecs.column_stats_arrow(pa.array(s), "string")
         assert selector.select_codec(stats, "string") == "words"
 
     def test_random_binary_picks_plain(self):
         rng = np.random.default_rng(3)
         s = pd.Series([rng.bytes(64) for _ in range(300)], dtype=object)
-        stats = selector.column_stats(s, "binary")
+        stats = arrowcodecs.column_stats_arrow(pa.array(s), "binary")
         assert selector.select_codec(stats, "binary") == "plain"
 
     def test_near_sorted_ts_picks_for(self):
         ts = pd.Series(
             pd.to_datetime(1_700_000_000_000_000 + np.cumsum(np.arange(1000) % 600), unit="us")
         ).astype("datetime64[us]")
-        stats = selector.column_stats(ts, "timestamp")
+        stats = arrowcodecs.column_stats_arrow(pa.array(ts), "timestamp")
         assert selector.select_codec(stats, "timestamp") == "for_bitpack"
 
     def test_constant_picks_rle(self):
         s = pd.Series([7] * 100, dtype="Int64")
-        stats = selector.column_stats(s, "int64")
+        stats = arrowcodecs.column_stats_arrow(pa.array(s), "int64")
         assert selector.select_codec(stats, "int64") == "rle_int"
 
     def test_selected_codec_always_roundtrips(self):
@@ -150,7 +151,7 @@ class TestSelector:
             (pd.Series([1, 1, 1, 2, 2, 3] * 20, dtype="Int64"), "int64"),
         ]
         for s, typ in cases:
-            codec = selector.select_codec(selector.column_stats(s, typ), typ)
+            codec = selector.select_codec(arrowcodecs.column_stats_arrow(pa.array(s), typ), typ)
             payload, meta = codecs.encode_column(s, codec, typ)
             _assert_series_equal(codecs.decode_column(payload, meta), s, typ)
 
@@ -211,12 +212,8 @@ class TestFloatArray:
         assert got.to_pylist() == arr.filter(pa.array(sel)).to_pylist()
 
     def test_selector_picks_vec_plain(self):
-        import pandas as pd
-
-        from kmers_spark import selector
-
-        s = pd.Series([[1.0, 2.0]] * 10, dtype=object)
-        stats = selector.column_stats(s, "float_array")
+        s = pa.array([[1.0, 2.0]] * 10, pa.list_(pa.float32()))
+        stats = arrowcodecs.column_stats_arrow(s, "float_array")
         assert selector.select_codec(stats, "float_array") == "vec_plain"
 
     def test_spark_store_roundtrip_bit_identical(self, spark, tmp_path):

@@ -257,6 +257,61 @@ def test_evolution_before_compaction_hardens(spark, tmp_path):
         decode_colocated(spark, out).toPandas()
 
 
+@pytest.fixture(scope="module")
+def two_gen_store(spark, tmp_path_factory):
+    """A streamed store of 2 sink batches (2 generations per bucket),
+    not compacted; tests corrupt copies of it."""
+    root = tmp_path_factory.mktemp("twogen")
+    src, out, ckpt = str(root / "src"), str(root / "snap"), str(root / "ckpt")
+    df = pages.pages_df(spark, 400, seed=29, partitions=2).cache()
+    datasource.register(spark)
+    for part in _thirds(df)[:2]:
+        part.write.mode("append").parquet(src)
+        _run_sink(spark, src, df.schema, out, ckpt)
+    assert len(manifest.load(out)["wave_dirs"]) == 2
+    return out
+
+
+@pytest.mark.parametrize("how,msg", [
+    ("missing", r"generation 'w_\w+': bucket \d+ block set is corrupt: "
+                r"missing columns \['lang'\]"),
+    ("duplicate", r"generation 'w_\w+': duplicate block rows for bucket"),
+])
+def test_corrupt_generation_fails_compaction(spark, two_gen_store, tmp_path,
+                                             how, msg):
+    """The merge decodes each generation through the bucket-decode
+    kernel: a generation missing a column the schema never evolved, or
+    holding a column twice, fails the compaction instead of merging
+    silently wrong rows — and the store keeps its generations."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "snap")
+    shutil.copytree(two_gen_store, out)
+    m = manifest.load(out)
+    f = sorted(glob.glob(f"{out}/{m['wave_dirs'][0]}/*.parquet"))[0]
+    t = pq.read_table(f)
+    in_b = pc.equal(t.column("bucket"), t.column("bucket")[0])
+    lang = pc.and_(in_b, pc.equal(t.column("column"), "lang"))
+    if how == "missing":
+        t = t.filter(pc.invert(lang))
+    else:
+        t = pa.concat_tables([t, t.filter(lang)])
+    pq.write_table(t, f, compression="none")
+    d, base = f.rsplit("/", 1)
+    if os.path.exists(f"{d}/.{base}.crc"):  # Spark checks the checksum
+        os.unlink(f"{d}/.{base}.crc")
+
+    with pytest.raises(Exception, match=msg):
+        compact_stream(spark, out)
+    assert manifest.load(out)["wave_dirs"] == m["wave_dirs"]
+
+
 def test_evolution_after_compaction_allows_merged_wave(spark, tmp_path):
     """A column evolved AFTER a compaction: the merged wave predates it
     and must keep the null-fill allowance (remap must not over-harden)."""

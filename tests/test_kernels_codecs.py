@@ -192,8 +192,9 @@ class TestWords:
 
     def test_selector_picks_words_for_zipf_text(self):
         import pandas as pd
+        import pyarrow as pa
 
-        from kmers_spark import selector
+        from kmers_spark import arrowcodecs, selector
 
         vocab = [f"w{i}" for i in range(128)]
         s = pd.Series(
@@ -202,7 +203,7 @@ class TestWords:
                 for i in range(800)
             ]
         )
-        stats = selector.column_stats(s, "string")
+        stats = arrowcodecs.column_stats_arrow(pa.array(s), "string")
         assert selector.select_codec(stats, "string") == "words"
 
 
@@ -278,16 +279,18 @@ class TestFloatCodecs:
         assert (back.view(np.uint64) == v.view(np.uint64)).all()
 
     def test_selector_picks_float_codecs(self):
-        import pandas as pd
-        from kmers_spark import selector
+        import pyarrow as pa
+
+        from kmers_spark import arrowcodecs, selector
+
+        def pick(v):
+            return selector.select_codec(
+                arrowcodecs.column_stats_arrow(pa.array(v), "double"), "double")
 
         rng = np.random.default_rng(2)
-        fixed = pd.Series(np.round(rng.exponential(40, 4000), 2))
-        assert selector.select_codec(selector.column_stats(fixed, "double"), "double") == "dec_scale"
-        rand = pd.Series(rng.random(4000) * 1e9)
-        assert selector.select_codec(selector.column_stats(rand, "double"), "double") == "plain"
-        smooth = pd.Series(np.cumsum(rng.normal(0, 1e-6, 4000)) + 123.0)
-        assert selector.select_codec(selector.column_stats(smooth, "double"), "double") == "xor_float"
+        assert pick(np.round(rng.exponential(40, 4000), 2)) == "dec_scale"
+        assert pick(rng.random(4000) * 1e9) == "plain"
+        assert pick(np.cumsum(rng.normal(0, 1e-6, 4000)) + 123.0) == "xor_float"
 
     def test_arrow_path_byte_compatible(self):
         import pyarrow as pa
@@ -381,7 +384,9 @@ class TestGcdAndSortDelta:
         reorder rows, dropping the perm); the selector must not pick it
         on representative fixtures."""
         import pandas as pd
-        from kmers_spark import codecs, selector
+        import pyarrow as pa
+
+        from kmers_spark import arrowcodecs, codecs, selector
 
         rng = np.random.default_rng(3)
         fixtures = [
@@ -391,7 +396,7 @@ class TestGcdAndSortDelta:
         ]
         for v in fixtures:
             v = v.astype(np.int64)
-            st = selector.column_stats(pd.Series(v), "int64")
+            st = arrowcodecs.column_stats_arrow(pa.array(v), "int64")
             assert selector.select_codec(st, "int64") != "sortdelta"
             pf, _ = codecs.encode_column(pd.Series(v), "for_bitpack", "int64")
             ps, ms = codecs.encode_column(pd.Series(v), "sortdelta", "int64")

@@ -143,3 +143,21 @@ def test_no_query_plan_contains_cartesian(spark):
         if "CartesianProduct" in plan:
             offenders[name] = True
     assert not offenders, f"cartesian joins in: {sorted(offenders)}"
+
+
+def test_entry_one_row_per_table_column(spark):
+    """The driver-contract flagship encodes every table through the
+    encode job's kernel: one codec/ratio row per (table, column), and
+    each column's block row counts add up to the table's row count."""
+    import __spark_entry__ as entrymod
+
+    rows = entrymod.entry(spark).collect()
+    got = {}
+    for r in rows:
+        assert (r["table"], r["column"]) not in got, r
+        got[(r["table"], r["column"])] = r["n_rows"]
+    for table in ("documents", "events", "embeddings"):
+        df = spark.read.parquet(f"{SF}/{table}.parquet")
+        assert {c for t, c in got if t == table} == set(df.columns)
+        n = df.count()
+        assert all(v == n for (t, _), v in got.items() if t == table), table

@@ -1,47 +1,10 @@
-"""Structured Streaming encode: micro-batches -> blocks -> decode identity."""
+"""Structured Streaming: windowed aggregation, stateful sessionizing and
+the incremental decode of committed waves."""
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from kmers_spark import pages, selector
-from kmers_spark.streaming import encode_stream as es
-
-
-@pytest.mark.slow
-def test_stream_encode_decode(spark, tmp_path):
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    # two parquet "arrivals" of the deterministic pages stream
-    df1 = pages.pages_df(spark, 300, partitions=2)
-    df1.write.mode("overwrite").parquet(src)
-
-    schema = {f.name: selector.spark_type_name(f.dataType) for f in df1.schema.fields}
-    stream = (
-        spark.readStream.schema(df1.schema).option("maxFilesPerTrigger", 2).parquet(src)
-    )
-    q = es.encode_stream(stream, out, key="url", num_buckets=4, checkpoint=ckpt)
-    q.processAllAvailable()
-    q.stop()
-
-    decoded = es.decode_stream_output(spark, out, schema)
-    orig = spark.read.parquet(src)
-    assert decoded.count() == orig.count()
-    bad = (
-        orig.alias("a")
-        .join(decoded.alias("b"), "url")
-        .filter(
-            ~(
-                (F.col("a.html") == F.col("b.html"))
-                & (F.col("a.lang") == F.col("b.lang"))
-                & (F.col("a.warc_ts") == F.col("b.warc_ts"))
-            )
-        )
-        .count()
-    )
-    assert bad == 0
+from kmers_spark import pages
 
 
 @pytest.mark.slow
