@@ -383,7 +383,8 @@ def carry_forward(
     out_dir: str, m: dict, retired: list[str], new_dir: str,
     changed: set[int], changed_cols: set[int] | None = None,
 ) -> tuple[list[int], dict[str, list[int]]]:
-    """Consolidating rewrites (delete/upsert) retire whole wave dirs;
+    """Consolidating rewrites (operators/rewrite.commit_rewrite, behind
+    delete_keys, upsert_table and compact_waves) retire whole wave dirs;
     buckets that passed through verbatim keep EXACTLY their old key
     set, so their old filters stay exact — copy them into the new
     wave's bloom dir (small driver-side metadata copies, the spilled-
@@ -392,13 +393,13 @@ def carry_forward(
     absent for an emptied bucket) are never copied.
 
     `changed_cols` plays the same role for NON-key column sidecars
-    (bloom_cols registration) and may be WIDER than `changed`: an
-    equal-count upsert replaces rows key-for-key (old KEY filter stays
-    exact) but may change every non-key VALUE, so upsert passes its
-    whole affected set here — a stale value filter would prune rows
-    that exist. Defaults to `changed` (delete: verbatim pass-through
-    keeps all values, so count-unchanged buckets are exact for every
-    column).
+    (bloom_cols registration) and may be WIDER than `changed`: a
+    rewrite that appends rows may replace them key-for-key (old KEY
+    filter stays exact) yet change every non-key VALUE, so such a
+    rewrite passes its whole rewritten set here — a stale value filter
+    would prune rows that exist. Defaults to `changed` (a rewrite that
+    only removes rows keeps every surviving value, so count-unchanged
+    buckets are exact for every column).
 
     Returns (key bloom-bucket list, {column: bucket list}) for the
     manifest swap."""
@@ -479,11 +480,12 @@ def swap_registration(cur: dict, retired: set[str], new_rel: str,
 
 def changed_buckets(affected, fresh: dict, old_stats: dict,
                     rows_of) -> set[int]:
-    """Buckets whose row count changed across a rewrite — their key
-    sets differ, so their OLD filters must not be carried forward
-    (equal counts imply an unchanged key set on these paths: a
-    zero-hit delete passes through verbatim, and an equal-count upsert
-    replaced rows key-for-key — both keep the old filter exact)."""
+    """Buckets whose row count changed across a merge-on-write rewrite
+    — their key sets differ, so their OLD filters must not be carried
+    forward (equal counts imply an unchanged key set: a bucket no probe
+    hit passes through verbatim, and an equal-count rewrite that
+    appended rows replaced them key-for-key — both keep the old filter
+    exact)."""
     return {
         b for b in affected
         if rows_of(fresh[b]) != rows_of(old_stats.get(str(b), []))

@@ -57,7 +57,6 @@ from pyspark.sql import functions as F
 
 from .. import manifest
 from ..kernels import bloom as _bloomkern
-from .delete import collect_fresh_stats
 from .encode import (
     BLOCK_SCHEMA,
     _blocks_path,
@@ -66,13 +65,11 @@ from .encode import (
     make_encode_fn_arrow,
     sweep_orphan_waves,
 )
-
-_GEN_SCHEMA = BLOCK_SCHEMA + ", _gen string"
+from .rewrite import collect_fresh_stats, empty_blocks_arrow
 
 
 def _make_merge_fn_arrow(schema: dict[str, str], key: str,
                          overrides: dict[str, str] | None,
-                         sort_by: list[str] | None,
                          wave_order: dict[str, int],
                          gen_allow: dict[str, set] | None,
                          bloom_dir: str | None,
@@ -94,9 +91,7 @@ def _make_merge_fn_arrow(schema: dict[str, str], key: str,
         from ..blockdecode import decode_bucket, split_rows, wave_of
 
         if tbl.num_rows == 0:
-            from .delete import _empty_blocks_arrow
-
-            return _empty_blocks_arrow()
+            return empty_blocks_arrow()
         arrowcodecs.pin_worker_threads()
         bucket_id = tbl.column("bucket")[0].as_py()
         waves = [wave_of(p) for p in tbl.column("_gen").to_pylist()]
@@ -119,7 +114,7 @@ def _make_merge_fn_arrow(schema: dict[str, str], key: str,
         merged = merged.append_column(
             "bucket", pa.array([bucket_id] * merged.num_rows, pa.int32())
         )
-        return make_encode_fn_arrow(schema, key, overrides, sort_by,
+        return make_encode_fn_arrow(schema, key, overrides,
                                     bloom_dir=bloom_dir,
                                     bloom_cols=bloom_cols,
                                     ndv_cols=ndv_cols)(merged)
@@ -190,7 +185,7 @@ def compact_stream(spark: SparkSession, out_dir: str, *,
     new_dir = f"{_blocks_path(out_dir)}/{_wave_name()}"
     bloom_dir = _bloomkern.stage_dir(new_dir)
     merged = blocks.groupBy("bucket").applyInArrow(
-        _make_merge_fn_arrow(schema_order, key_col, overrides, None,
+        _make_merge_fn_arrow(schema_order, key_col, overrides,
                              wave_order, gen_allow, bloom_dir,
                              m.get("bloom_columns"),
                              m.get("ndv_columns")),

@@ -67,9 +67,9 @@ def make_encode_fn_arrow(schema: dict[str, str], key: str,
     driven segment skipping composes with bucket pruning on scans
     (without it, the surviving buckets' intra-bucket scan is full).
     `presorted=True` skips the in-kernel sort AND its full-table take()
-    copy — for callers whose rows already arrive in sort_by order (the
-    encode job's JVM sortWithinPartitions pre-sort; delete's survivors,
-    which keep the stored block order)."""
+    copy — for callers whose rows already arrive in sort_by order (a
+    merge-on-write rewrite that appends nothing: its survivors keep the
+    stored block order)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -178,12 +178,11 @@ def make_encode_fn_arrow(schema: dict[str, str], key: str,
             if bl is not None:
                 bloomkern.write_sidecar(bloom_dir, bucket, *bl)
             # bloom_columns= sidecars: equality-scan pruning on non-key
-            # columns (decode.bloom_prune_filters). A column absent from
-            # this rewrite's sub-schema (evolved gap) is skipped —
-            # readers treat the missing filter as maybe-present.
+            # columns (decode.bloom_prune_filters). Every writer passes
+            # the full schema (rewrites materialize an evolved gap as
+            # nulls), and the listed columns are validated non-key
+            # schema columns, so each is present.
             for c in bloom_cols or ():
-                if c == key or c not in schema or c not in table.column_names:
-                    continue
                 bl = bloomkern.build_for_key_arrow(table.column(c), schema[c])
                 if bl is not None:
                     bloomkern.write_col_sidecar(bloom_dir, bucket, c, *bl)
@@ -218,7 +217,8 @@ def encode_blocks_df(bucketed: DataFrame, schema: dict[str, str], key: str,
     cores (old min 27.9s vs new 28.4s over 3 pairs, 4M rows): the JVM
     string sort over whole partitions costs what the per-bucket Arrow
     sort saved. The groupBy path stays; presorted=True remains the win
-    where order already exists (delete's survivors)."""
+    where order already exists (the survivors of a rewrite that appends
+    nothing)."""
     return bucketed.groupBy("bucket").applyInArrow(
         make_encode_fn_arrow(schema, key, codec_overrides,
                              sort_by=sort_by, bloom_dir=bloom_dir,
@@ -653,21 +653,8 @@ def encode_table(
             wave_df = bucketed if len(wave) == num_buckets else bucketed.filter(
                 F.col("bucket").isin(wave)
             )
-            # range-clustered stores sort rows by (cluster_col, key)
-            # INSIDE each bucket: a range scan's surviving buckets then
-            # hold the matching rows contiguously, so segmented codecs
-            # skip the non-matching segments (pruning composes: bucket
-            # layer drops whole buckets, segment layer most of the rest)
-            sort_by = None
-            cl = m.get("cluster_by")
-            if scheme == partitioning.RANGE_SCHEME and cl and cl != key:
-                sort_by = [cl, key]
-            elif scheme == partitioning.ZORDER_SCHEME and cl:
-                # lexicographic (a, b, key) inside each bucket: not a
-                # true z-sort, but a bucket spans few cells per
-                # dimension, so runs stay contiguous enough for
-                # segmented codecs to skip on either leading column
-                sort_by = [c for c in cl if c != key] + [key]
+            sort_by = partitioning.block_sort_by(scheme, m.get("cluster_by"),
+                                                 key)
             # Each wave lands in its own directory and only becomes
             # visible when the manifest commit below registers it
             # (Iceberg manifest-list discipline): a crash between write
@@ -917,7 +904,7 @@ def compact_waves(spark: SparkSession, out_dir: str) -> dict:
     retries against fresh state (Iceberg's validate-and-retry).
 
     Returns the updated manifest."""
-    import shutil
+    from .rewrite import commit_rewrite  # rewrite imports this module
 
     m = manifest.load(out_dir)
     if m is None:
@@ -952,78 +939,9 @@ def compact_waves(spark: SparkSession, out_dir: str) -> dict:
         .option("compression", "none")
         .parquet(new_dir)
     )
-    old_set = set(old)
-    new_rel = _wave_rel(new_dir, out_dir)
-
-    # spilled block-stats files live INSIDE wave dirs; retiring the old
-    # dirs would take their stats with them — consolidate every retired
-    # spill into one stats file in the new dir (written before the CAS
-    # swap, so it shares the new wave's visibility)
-    def _owner(rel: str) -> str:
-        return rel.rsplit("/", 1)[0]
-
-    retired_spills = [
-        rel for rel in m.get("stats_files", []) if _owner(rel) in old_set
-    ]
-    new_stats_rel = None
-    if retired_spills:
-        merged_stats: dict = {}
-        for rel in retired_spills:
-            with open(os.path.join(out_dir, rel)) as f:
-                merged_stats.update(json.load(f))
-        new_stats_rel = f"{new_rel}/{manifest.BLOCK_STATS_NAME}"
-        with open(os.path.join(out_dir, new_stats_rel), "w") as f:
-            json.dump(merged_stats, f, sort_keys=True)
-            f.flush()
-            os.fsync(f.fileno())
-
-    # Bloom sidecars live inside wave dirs too; the rewrite moved
-    # payloads verbatim (key sets AND values unchanged), so every
-    # retired filter — key and column — stays exact: copy them all
-    new_bloom, new_bloom_cols = bloomkern.carry_forward(
-        out_dir, m, old, new_dir, set()
-    )
-
-    def swap(m: dict | None) -> dict:
-        if m is None:
-            raise FileNotFoundError(f"no manifest in {out_dir}")
-        # waves committed during the rewrite stay registered
-        kept = [d for d in m.get("wave_dirs", []) if d not in old_set]
-        m["wave_dirs"] = [new_rel] + kept
-        wb = m.get("wave_buckets", {})
-        if all(d in wb for d in old):
-            merged = sorted({b for d in old for b in wb[d]})
-        else:  # a legacy wave had no bucket list: safe superset
-            merged = sorted(m["committed_buckets"])
-        m["wave_buckets"] = {k: v for k, v in wb.items() if k not in old_set}
-        m["wave_buckets"][new_rel] = merged
-        if "stats_files" in m:
-            m["stats_files"] = [
-                rel for rel in m["stats_files"] if _owner(rel) not in old_set
-            ]
-            if new_stats_rel:
-                m["stats_files"].append(new_stats_rel)
-            if not m["stats_files"]:
-                del m["stats_files"]
-        bloomkern.swap_registration(m, old_set, new_rel, new_bloom,
-                                    new_bloom_cols)
-        return m
-
-    m = manifest.commit(out_dir, swap)
-    # The swap unregistered `old`, but a reader that loaded the pre-swap
-    # manifest may still be scanning those dirs — deleting them now
-    # would fail it mid-flight. Touch them instead: as fresh
-    # unregistered dirs they sit out sweep_orphan_waves' grace window
-    # (readers finish), then the next sweep reclaims them. Same reader
-    # contract as Iceberg: expire/vacuum lags the metadata swap.
-    now = time.time()
-    for d in old:
-        try:
-            os.utime(os.path.join(out_dir, d), (now, now))
-        except OSError:
-            pass
-    sweep_orphan_waves(out_dir)  # reclaims PREVIOUSLY retired dirs
-    return m
+    # payloads moved verbatim (key sets AND values unchanged): every
+    # retired stats entry and Bloom filter stays exact
+    return commit_rewrite(out_dir, m, old, new_dir)
 
 
 def rebuild_snapshot(spark: SparkSession, src_dir: str, dst_dir: str, *,

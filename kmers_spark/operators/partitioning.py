@@ -52,6 +52,21 @@ RANGE_SAMPLE_N = 100_000
 RANGE_STR_BOUND = 64
 
 
+def block_sort_by(scheme: str | None, cluster_by, key: str) -> list[str] | None:
+    """Row order inside a block, the one rule encode and every rewrite
+    apply (None: by key). Range-clustered stores sort by (cluster_col,
+    key): a range scan's surviving buckets then hold the matching rows
+    contiguously, so segmented codecs skip the non-matching segments.
+    Zorder stores sort lexicographically by (a, b, key): not a true
+    z-sort, but a bucket spans few cells per dimension, so runs stay
+    contiguous enough to skip on either leading column."""
+    if scheme == RANGE_SCHEME and cluster_by and cluster_by != key:
+        return [cluster_by, key]
+    if scheme == ZORDER_SCHEME and cluster_by:
+        return [c for c in cluster_by if c != key] + [key]
+    return None
+
+
 def with_host(df: DataFrame, url_col: str = "url",
               scheme: str = BUCKET_SCHEME) -> DataFrame:
     """Grouping host for bucketing: the url's host when the key is

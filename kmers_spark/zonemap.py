@@ -317,7 +317,7 @@ def normalize_filters(filters: list[tuple], schema: dict[str, str]) -> list[tupl
 
 
 def arrow_type(typ: str):
-    """Arrow type decode_column_arrow emits for a logical type."""
+    """Arrow type the block decoder (arrowcodecs) emits for a logical type."""
     import pyarrow as pa
 
     return {

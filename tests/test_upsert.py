@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kmers_spark import manifest
+from kmers_spark.operators import partitioning
 from kmers_spark.operators.decode import decode_table, lookup_keys
 from kmers_spark.operators.delete import delete_keys
 from kmers_spark.operators.encode import encode_table
@@ -207,6 +208,36 @@ class TestEvolution:
             assert r["score"] == float(len(r["url"]))
         # old rows in untouched buckets still read as null
         assert got.filter(F.col("score").isNull()).count() == 570
+
+    def test_delete_on_evolved_store(self, spark, tmp_path):
+        base = pages_df(spark, 600, seed=13, partitions=2).cache()
+        out = str(tmp_path / "snap")
+        encode_table(base, out, key="url", num_buckets=4)
+        manifest.evolve_schema(out, {"score": "double"})
+        m = manifest.load(out)
+
+        def bucket(url):
+            return partitioning.bucket_for_key(
+                url, 4, m.get("hot_keys") or {}, scheme=m["bucket_scheme"])
+
+        urls = sorted(r["url"] for r in base.select("url").collect())
+        b0 = [u for u in urls if bucket(u) == 0]
+        b1 = [u for u in urls if bucket(u) == 1]
+        # bucket 0 gets a real score block; bucket 1 predates the column
+        upsert_table(spark, out, base.filter(F.col("url").isin(b0[:10]))
+                     .withColumn("score", F.length("url").cast("double")))
+        before = _sorted_rows(decode_table(spark, out))
+        doomed = [b0[0], b0[-1], b1[0]]  # scored, null, pre-evolution
+        res = delete_keys(spark, out, doomed)
+        assert res["rows_deleted"] == 3
+        got = _sorted_rows(decode_table(spark, out))
+        url_at = decode_table(spark, out).columns.index("url")
+        assert got == [r for r in before if r[url_at] not in doomed]
+        assert lookup_keys(spark, out, doomed).count() == 0
+        # the rewrite materialized the gap column as nulls
+        cols = {s["column"] for s in manifest.block_stats(
+            out, manifest.load(out))[str(1)]}
+        assert "score" in cols
 
 
 class TestRefusals:
