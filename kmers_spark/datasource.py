@@ -626,139 +626,35 @@ def _writer(options, schema, overwrite: bool) -> "KmersWriter":
 
 
 try:  # writer API: Spark 4.0+
-    from dataclasses import dataclass, field
-
-    from pyspark.sql.datasource import DataSourceArrowWriter, WriterCommitMessage
-
-    @dataclass
-    class _WaveCommit(WriterCommitMessage):
-        stats: dict = field(default_factory=dict)       # bucket -> [block stats]
-        key_ranges: dict = field(default_factory=dict)  # bucket -> [lo, hi]
-        staged_file: str | None = None                  # hidden part file name
-        bloom_files: dict = field(default_factory=dict)  # bucket -> staged name
-        col_bloom_files: dict = field(default_factory=dict)  # bucket -> {col: staged name}
+    from pyspark.sql.datasource import DataSourceArrowWriter
 
     def _encode_to_staged(iterator, table_schema, key, codec_overrides,
-                          staging_dir: str,
-                          bloom_cols=None, ndv_cols=None) -> "_WaveCommit":
+                          staging_dir: str, bloom_cols=None, ndv_cols=None):
         """Task side of both sinks (batch + stream): encode this
-        partition's whole buckets into ONE hidden staged parquet file
+        partition's whole buckets and stage them through the write
+        protocol (kmers_spark/wavewrite.py) as ONE hidden parquet file
         under `staging_dir`; the driver's commit publishes only the
-        files of successful attempts — a retried/speculative attempt's
-        stale or partial file never becomes visible (the parquet
-        committer's _temporary discipline, hand-rolled)."""
-        import json
-        import os
-        import uuid
-
+        files of successful attempts."""
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
-        from .kernels import bloom as bloomkern
+        from . import wavewrite
         from .operators.encode import make_encode_fn_arrow
 
-        fn = make_encode_fn_arrow(table_schema, key, codec_overrides,
-                                  ndv_cols=ndv_cols)
+        fn = wavewrite.with_blooms(
+            make_encode_fn_arrow(table_schema, key, codec_overrides,
+                                 ndv_cols=ndv_cols),
+            table_schema, key, bloom_cols)
         tables = [pa.Table.from_batches([b]) for b in iterator]
-        msg = _WaveCommit()
         if not tables:
-            return msg
+            return wavewrite.WaveCommit()
         table = pa.concat_tables(tables).combine_chunks()
-        if table.num_rows == 0:
-            return msg
-        outs = []
-        for b in pc.unique(table.column("bucket")).to_pylist():
-            sub = table.filter(pc.equal(table.column("bucket"), b))
-            blocks = fn(sub)
-            outs.append(blocks)
-            stats = []
-            for i in range(blocks.num_rows):
-                meta = json.loads(blocks.column("meta")[i].as_py())
-                s = {
-                    "column": blocks.column("column")[i].as_py(),
-                    "codec": blocks.column("codec")[i].as_py(),
-                    "n_rows": blocks.column("n_rows")[i].as_py(),
-                    "raw_nbytes": blocks.column("raw_nbytes")[i].as_py(),
-                    "enc_nbytes": blocks.column("enc_nbytes")[i].as_py(),
-                }
-                if "zmin" in meta:
-                    s["zmin"], s["zmax"] = meta["zmin"], meta["zmax"]
-                if "znull" in meta:
-                    s["znull"] = meta["znull"]
-                if "zsum" in meta:
-                    s["zsum"] = meta["zsum"]
-                if "znan" in meta:
-                    s["znan"] = meta["znan"]
-                if "zndv" in meta:
-                    s["zndv"] = meta["zndv"]
-                if "zhll" in meta:
-                    s["zhll"] = meta["zhll"]
-                if "key_min" in meta:
-                    msg.key_ranges[int(b)] = [meta["key_min"], meta["key_max"]]
-                stats.append(s)
-            msg.stats[int(b)] = stats
-            # key Bloom sidecar: staged hidden like the data file; the
-            # driver's commit moves claimed files into <wave>/_blooms
-            # and registers coverage — a replayed/aborted batch's
-            # staged blooms are cleaned with its data
-            bl = bloomkern.build_for_key_arrow(
-                sub.column(key), table_schema.get(key, "")
-            )
-            if bl is not None:
-                bname = (f".staged-bloom-b{int(b)}-"
-                         f"{uuid.uuid4().hex[:12]}")
-                bloomkern.write_named(staging_dir, bname, *bl)
-                msg.bloom_files[int(b)] = bname
-            for c in bloom_cols or ():  # bloomColumns= column filters
-                if c == key or c not in table_schema:
-                    continue
-                bl = bloomkern.build_for_key_arrow(
-                    sub.column(c), table_schema.get(c, "")
-                )
-                if bl is not None:
-                    bname = (f".staged-cbloom-b{int(b)}-"
-                             f"{c.encode('utf-8').hex()}-"
-                             f"{uuid.uuid4().hex[:12]}")
-                    bloomkern.write_named(staging_dir, bname, *bl)
-                    msg.col_bloom_files.setdefault(int(b), {})[c] = bname
-        os.makedirs(staging_dir, exist_ok=True)
-        staged = f".staged-{uuid.uuid4().hex[:12]}.parquet"
-        pq.write_table(
-            pa.concat_tables(outs), f"{staging_dir}/{staged}",
-            compression="none",
-        )
-        msg.staged_file = staged
-        return msg
-
-    def _publish_staged_blooms(staging_dir: str, wave_dir: str,
-                               bloom_files: dict[int, str],
-                               col_bloom_files: dict | None = None) -> None:
-        """Move claimed staged bloom files into <wave_dir>/_blooms under
-        their canonical b<bucket>_<uuid>.bloom (key) and
-        c<bucket>_<colhex>_<uuid>.bloom (column) names."""
-        import os
-
-        from .kernels import bloom as bloomkern
-
-        if not bloom_files and not col_bloom_files:
-            return
-        bdir = os.path.join(wave_dir, bloomkern.BLOOM_DIR)
-        os.makedirs(bdir, exist_ok=True)
-        for b, name in bloom_files.items():
-            suffix = name.rsplit("-", 1)[-1]
-            os.replace(
-                os.path.join(staging_dir, name),
-                os.path.join(bdir, f"b{int(b)}_{suffix}{bloomkern.SUFFIX}"),
-            )
-        for b, cols in (col_bloom_files or {}).items():
-            for c, name in cols.items():
-                suffix = name.rsplit("-", 1)[-1]
-                os.replace(
-                    os.path.join(staging_dir, name),
-                    os.path.join(bdir, f"c{int(b)}_{c.encode().hex()}_"
-                                       f"{suffix}{bloomkern.SUFFIX}"),
-                )
+        blocks = [wavewrite.empty_blocks_arrow()] + [
+            fn(table.filter(pc.equal(table.column("bucket"), b)))
+            for b in pc.unique(table.column("bucket")).to_pylist()
+        ]
+        return wavewrite.stage_blocks(pa.concat_tables(blocks), staging_dir,
+                                      table_schema, key)
 
     class KmersWriter(DataSourceArrowWriter):
         """df.write.format("kmers"): each task encodes whole buckets of
@@ -795,47 +691,22 @@ try:  # writer API: Spark 4.0+
                                      ndv_cols=self.ndv_columns)
 
         def commit(self, messages) -> None:
-            import os
             import time
 
-            from . import manifest
+            from . import manifest, wavewrite
             from .operators import partitioning
 
-            stats: dict[int, list] = {}
-            key_ranges: dict[int, list] = {}
-            staged: list[str] = []
-            bloom_files: dict[int, str] = {}
-            col_bloom_files: dict[int, dict] = {}
-            for msg in messages:
-                if msg is None:
-                    continue
-                if msg.staged_file:
-                    staged.append(msg.staged_file)
-                for b, s in msg.stats.items():
-                    if int(b) in stats:
-                        raise ValueError(
-                            f"bucket {b} spans multiple write tasks — "
-                            "repartition('bucket') before writing so each "
-                            "bucket lands whole in one partition"
-                        )
-                    stats[int(b)] = s
-                key_ranges.update({int(b): r for b, r in msg.key_ranges.items()})
-                # getattr: commit messages from an older writer (or a
-                # test double) may predate the bloom field
-                bloom_files.update({
-                    int(b): n
-                    for b, n in getattr(msg, "bloom_files", {}).items()
-                })
-                col_bloom_files.update({
-                    int(b): dict(cols)
-                    for b, cols in getattr(msg, "col_bloom_files", {}).items()
-                })
-            if not stats:
+            if not any(msg is not None and msg.stats for msg in messages):
                 # every task saw zero rows: registering the (never
                 # created) wave dir would make ALL later decodes fail on
                 # a missing path — a no-op write commits nothing
                 self.abort(messages)
                 return
+            # publish ONLY successful attempts' files into the (still
+            # unregistered) wave dir; a failed check below aborts, and
+            # the abort removes the dir
+            stats, key_ranges, bloom_buckets, bloom_cols = wavewrite.publish(
+                messages, self._wave_dir(), self._wave_dir())
 
             m = manifest.load(self.path)
             if m is not None:
@@ -902,29 +773,10 @@ try:  # writer API: Spark 4.0+
                 return cur
 
             manifest.commit(self.path, create_or_check)
-            # publish ONLY successful attempts' files: hidden staged
-            # names -> visible part names; anything still hidden after
-            # (retried/speculative attempts) is deleted, so readers of
-            # the registered wave see exactly the committed block rows
-            wd = self._wave_dir()
-            for name in staged:
-                os.replace(
-                    os.path.join(wd, name),
-                    os.path.join(wd, name.replace(".staged-", "part-", 1)),
-                )
-            _publish_staged_blooms(wd, wd, bloom_files, col_bloom_files)
-            for name in os.listdir(wd):
-                if name.startswith(".staged-"):
-                    os.unlink(os.path.join(wd, name))
-            col_reg: dict[str, list[int]] = {}
-            for b, cols in col_bloom_files.items():
-                for c in cols:
-                    col_reg.setdefault(c, []).append(int(b))
             manifest.commit_buckets(
                 self.path, stats, wave_dir=f"blocks/{self.wave_name}",
-                key_ranges=key_ranges or None,
-                bloom_buckets=sorted(bloom_files),
-                bloom_cols={c: sorted(v) for c, v in col_reg.items()} or None,
+                key_ranges=key_ranges or None, bloom_buckets=bloom_buckets,
+                bloom_cols=bloom_cols,
             )
 
         def abort(self, messages) -> None:
@@ -986,47 +838,15 @@ try:  # writer API: Spark 4.0+
                     pass
 
         def commit(self, messages, batchId) -> None:  # noqa: N803 (Spark API)
-            import os
+            import shutil
             import time
             import uuid
 
-            from . import manifest
+            from . import manifest, wavewrite
             from .operators import partitioning
 
-            stats: dict[int, list] = {}
-            key_ranges: dict[int, list] = {}
-            staged: list[str] = []
-            bloom_files: dict[int, str] = {}
-            col_bloom_files: dict[int, dict] = {}
-            for msg in messages:
-                if msg is None:
-                    continue
-                if msg.staged_file:
-                    staged.append(msg.staged_file)
-                for b, s in msg.stats.items():
-                    if int(b) in stats:
-                        raise ValueError(
-                            f"bucket {b} spans multiple write tasks in batch "
-                            f"{batchId} — repartition('bucket') the stream so "
-                            "each bucket lands whole in one partition"
-                        )
-                    stats[int(b)] = s
-                key_ranges.update({int(b): r for b, r in msg.key_ranges.items()})
-                # getattr: commit messages from an older writer (or a
-                # test double) may predate the bloom field
-                bloom_files.update({
-                    int(b): n
-                    for b, n in getattr(msg, "bloom_files", {}).items()
-                })
-                col_bloom_files.update({
-                    int(b): dict(cols)
-                    for b, cols in getattr(msg, "col_bloom_files", {}).items()
-                })
-            all_staged_blooms = list(bloom_files.values()) + [
-                n for cols in col_bloom_files.values() for n in cols.values()
-            ]
-            if not stats:
-                self._clean_staged(staged + all_staged_blooms)
+            if not any(msg is not None and msg.stats for msg in messages):
+                self._clean_staged(wavewrite.staged_names(messages))
                 return  # empty batch: nothing to register
 
             def create_or_check(cur):
@@ -1078,37 +898,24 @@ try:  # writer API: Spark 4.0+
             known = m.get("stream_epochs", {}).get(self.stream_id, {})
             if manifest.is_replayed_epoch(known, batchId, self.stream_id):
                 # replayed batch: its rows are already in
-                self._clean_staged(staged + all_staged_blooms)
+                self._clean_staged(wavewrite.staged_names(messages))
                 return
             # publish the wave BEFORE registering it (a crash in between
             # leaves an unregistered w_ dir for the orphan sweep)
             wave_name = f"w_stream{batchId}_{uuid.uuid4().hex[:8]}"
             wave_dir = f"{self.path}/blocks/{wave_name}"
-            os.makedirs(wave_dir, exist_ok=True)
-            for name in staged:
-                os.replace(
-                    os.path.join(self._staging(), name),
-                    os.path.join(wave_dir, name.replace(".staged-", "part-", 1)),
-                )
-            _publish_staged_blooms(self._staging(), wave_dir, bloom_files,
-                                   col_bloom_files)
+            stats, key_ranges, bloom_buckets, bloom_cols = wavewrite.publish(
+                messages, self._staging(), wave_dir)
             wave_rel = f"blocks/{wave_name}"
-            col_reg: dict[str, list[int]] = {}
-            for b, cols in col_bloom_files.items():
-                for c in cols:
-                    col_reg.setdefault(c, []).append(int(b))
             m = manifest.commit_wave_append(
                 self.path, stats, wave_rel, batchId,
                 key_ranges=key_ranges or None, stream_id=self.stream_id,
-                bloom_buckets=sorted(bloom_files),
-                bloom_cols={c: sorted(v) for c, v in col_reg.items()} or None,
+                bloom_buckets=bloom_buckets, bloom_cols=bloom_cols,
             )
             if m.get("stream_epochs", {}).get(self.stream_id, {}) \
                     .get(str(batchId)) != wave_rel:
                 # lost an epoch race (another attempt of this batch
                 # committed concurrently): our wave stays unregistered
-                import shutil
-
                 shutil.rmtree(wave_dir, ignore_errors=True)
             self._sweep_staging()
 
@@ -1138,16 +945,9 @@ try:  # writer API: Spark 4.0+
                     pass
 
         def abort(self, messages, batchId) -> None:  # noqa: N803
-            staged = [m.staged_file for m in messages
-                      if m is not None and m.staged_file]
-            for m in messages:
-                if m is not None:
-                    staged.extend(getattr(m, "bloom_files", {}).values())
-                    staged.extend(
-                        n for cols in getattr(m, "col_bloom_files", {}).values()
-                        for n in cols.values()
-                    )
-            self._clean_staged(staged)
+            from . import wavewrite
+
+            self._clean_staged(wavewrite.staged_names(messages))
 
     def _ds_writer(self, schema, overwrite):
         return _writer(self.options, schema, overwrite)

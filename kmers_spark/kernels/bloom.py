@@ -1,26 +1,28 @@
 """Per-bucket key Bloom filters (Iceberg puffin / Parquet bloom
 analogue), stored as sidecar files inside each wave directory.
 
-The filter is built INSIDE the encode kernel (make_encode_fn_arrow) from
-the bucket's key column and written by the SAME executor task to
+The filter is built from the bucket's key column in the same task pass
+that encodes the bucket (wavewrite.with_blooms, beside
+make_encode_fn_arrow) and handed to the write protocol
+(kmers_spark/wavewrite.py) as a tagged row of the block stream. The
+writing task stages it as a hidden file beside the bucket's staged
+data file; the driver's publish renames the claimed file to
 `<wave_dir>/_blooms/b<bucket>_<uuid>.bloom` — no driver collect, no
 second job, and the underscore prefix keeps Spark and pyarrow dataset
-listings blind to it (the same convention the spilled stats files
-rely on). Task retries / speculative attempts write duplicate files
-with identical content (the bit array is order-independent), so
-readers may pick any. The commit registers which buckets of the wave
-carry a filter (manifest `bloom_buckets`, one listdir at commit), so
-readers never have to guess coverage from file existence alone.
+listings blind to it (the same convention the spilled stats files rely
+on). A failed or speculative attempt's staged filter is never claimed,
+so a filter is visible iff its bucket's data is, and each bucket of a
+wave has at most one. The commit registers which buckets of the wave
+carry a filter (manifest `bloom_buckets`, from the claimed records),
+so readers never have to guess coverage from file existence alone.
 
-Every writer that re-encodes a bucket (delete/upsert merge-on-write,
-rebuild_snapshot) regenerates its filter in the same pass; blooms of
-untouched buckets consolidated into a rewrite wave are copied forward
-driver-side (small metadata files, like the spilled-stats
-consolidation in compact_waves). The DataSource sinks (batch write
-AND the exactly-once writeStream sink) stage bloom files hidden
-alongside their data files and publish them at commit — a replayed or
-aborted micro-batch's staged blooms are cleaned with its data, so a
-generation's filter is visible iff the generation is. Readers treat a
+Every writer (encode_table, the delete/upsert merge-on-write,
+compact_stream, both DataSource sinks) stages filters this one way,
+and every writer that re-encodes a bucket regenerates its filter in
+the same pass; blooms of untouched buckets consolidated into a rewrite
+wave are copied forward driver-side (small metadata files, like the
+spilled-stats consolidation in compact_waves). A replayed or aborted
+micro-batch's staged blooms are cleaned with its data. Readers treat a
 missing filter as "maybe present" — pre-bloom snapshots and partial
 coverage degrade to today's behavior, never to wrong answers.
 
@@ -228,41 +230,13 @@ def build_for_key_arrow(arr, typ: str,
 
 # ------------------------------------------------------------- sidecars
 
-def stage_dir(wave_dir: str) -> str:
-    """Hidden SIBLING staging dir for a wave's sidecars. Encode tasks
-    must not create the wave dir itself: Spark's mode("error") write
-    checks path existence after AQE has already run the leading shuffle
-    stages (where the encode UDF executes), so a task-side makedirs
-    INSIDE the wave dir would fail the whole write with
-    PATH_ALREADY_EXISTS. Tasks write here; finalize() moves the files
-    into <wave_dir>/_blooms once the parquet write has completed."""
-    return os.path.join(os.path.dirname(wave_dir),
-                        f".bloomstage-{os.path.basename(wave_dir)}")
-
-
-def finalize(wave_dir: str) -> None:
-    """Move staged sidecars into the wave dir (same-fs renames; files
-    were already written atomically). No-op without a staging dir."""
-    import shutil
-
-    stage = stage_dir(wave_dir)
-    try:
-        names = os.listdir(stage)
-    except FileNotFoundError:
-        return
-    dest = os.path.join(wave_dir, BLOOM_DIR)
-    os.makedirs(dest, exist_ok=True)
-    for n in names:
-        if n.endswith(SUFFIX):
-            os.replace(os.path.join(stage, n), os.path.join(dest, n))
-    shutil.rmtree(stage, ignore_errors=True)
-
-
 def sweep_stages(blocks_root: str, live_basenames: set[str],
                  grace_sec: float) -> None:
-    """Remove bloom staging dirs whose wave is gone or whose write
-    crashed (same grace rule as sweep_orphan_waves, which calls this —
-    a stage for a LIVE in-flight wave is younger than the grace)."""
+    """Remove `.bloomstage-<wave>` dirs, where writers older than the
+    staged-file protocol (kmers_spark/wavewrite.py) staged filters,
+    whose wave is gone or whose write crashed (same grace rule as
+    sweep_orphan_waves, which calls this — a stage for a LIVE in-flight
+    wave is younger than the grace)."""
     import shutil
     import time
 
@@ -306,7 +280,7 @@ def sidecar_name(bucket: int) -> str:
 
 def write_sidecar(bloom_dir: str, bucket: int, payload: bytes,
                   meta: dict) -> str:
-    """Executor-side write under the canonical b<bucket>_<uuid> name."""
+    """Write under the canonical b<bucket>_<uuid> name."""
     return write_named(bloom_dir, sidecar_name(bucket), payload, meta)
 
 
@@ -318,12 +292,6 @@ def col_sidecar_name(bucket: int, col: str) -> str:
     ignores these and pre-column-bloom readers never misparse one."""
     return (f"c{int(bucket)}_{col.encode('utf-8').hex()}_"
             f"{uuid.uuid4().hex[:12]}{SUFFIX}")
-
-
-def write_col_sidecar(bloom_dir: str, bucket: int, col: str,
-                      payload: bytes, meta: dict) -> str:
-    return write_named(bloom_dir, col_sidecar_name(bucket, col),
-                       payload, {**meta, "column": col})
 
 
 def read_sidecar(path: str) -> tuple[bytes, dict]:
@@ -389,7 +357,7 @@ def carry_forward(
     set, so their old filters stay exact — copy them into the new
     wave's bloom dir (small driver-side metadata copies, the spilled-
     stats consolidation pattern). `changed` buckets (key set altered,
-    fresh filter side-written by the re-encode kernel or intentionally
+    fresh filter published with the re-encoded bucket or intentionally
     absent for an emptied bucket) are never copied.
 
     `changed_cols` plays the same role for NON-key column sidecars

@@ -14,11 +14,12 @@ or mutation surface (SURVEY §2.7) — this is part of the engine's own
 100-TB ingestion story, like delete/upsert.
 
 Scale shape:
-  * one Spark job: block rows of the merged waves, grouped per bucket
-    (applyInArrow); per-task memory is bounded at one bucket's
-    generations (the same bound every read of that bucket already
-    pays). Payload bytes never visit the driver; the driver collects
-    the usual per-(bucket, column) stat scalars.
+  * one Spark write job: block rows of the merged waves, grouped per
+    bucket (applyInArrow), staged through the write protocol
+    (kmers_spark/wavewrite.py); per-task memory is bounded at one
+    bucket's generations (the same bound every read of that bucket
+    already pays). Payload bytes never visit the driver; the write
+    tasks return the per-(bucket, column) stat scalars.
   * concurrency: appends may land DURING the compaction. The manifest
     swap is a CAS mutation that re-validates the merged waves are
     still the list's PREFIX (wave_dirs is append-only for streamed
@@ -55,8 +56,9 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .. import manifest
+from .. import manifest, wavewrite
 from ..kernels import bloom as _bloomkern
+from ..wavewrite import empty_blocks_arrow
 from .encode import (
     BLOCK_SCHEMA,
     _blocks_path,
@@ -65,14 +67,12 @@ from .encode import (
     make_encode_fn_arrow,
     sweep_orphan_waves,
 )
-from .rewrite import collect_fresh_stats, empty_blocks_arrow
 
 
 def _make_merge_fn_arrow(schema: dict[str, str], key: str,
                          overrides: dict[str, str] | None,
                          wave_order: dict[str, int],
                          gen_allow: dict[str, set] | None,
-                         bloom_dir: str | None,
                          bloom_cols: list[str] | None,
                          ndv_cols: list[str] | None):
     """(block rows of one bucket across generations, with _gen file
@@ -114,10 +114,9 @@ def _make_merge_fn_arrow(schema: dict[str, str], key: str,
         merged = merged.append_column(
             "bucket", pa.array([bucket_id] * merged.num_rows, pa.int32())
         )
-        return make_encode_fn_arrow(schema, key, overrides,
-                                    bloom_dir=bloom_dir,
-                                    bloom_cols=bloom_cols,
-                                    ndv_cols=ndv_cols)(merged)
+        return wavewrite.with_blooms(
+            make_encode_fn_arrow(schema, key, overrides, ndv_cols=ndv_cols),
+            schema, key, bloom_cols)(merged)
 
     return fn
 
@@ -183,28 +182,19 @@ def compact_stream(spark: SparkSession, out_dir: str, *,
         old_inline_len = {}
 
     new_dir = f"{_blocks_path(out_dir)}/{_wave_name()}"
-    bloom_dir = _bloomkern.stage_dir(new_dir)
     merged = blocks.groupBy("bucket").applyInArrow(
         _make_merge_fn_arrow(schema_order, key_col, overrides,
-                             wave_order, gen_allow, bloom_dir,
+                             wave_order, gen_allow,
                              m.get("bloom_columns"),
                              m.get("ndv_columns")),
         BLOCK_SCHEMA,
     )
-    (
-        merged.repartition(F.col("bucket"))
-        .write.mode("error")
-        .option("compression", "none")
-        .parquet(new_dir)
-    )
-    _bloomkern.finalize(new_dir)
-    fresh, key_ranges = collect_fresh_stats(
-        spark, new_dir, affected, m, key_col
-    )
+    # each group is a whole bucket, so the write tasks hold whole
+    # buckets; every Bloom filter is rebuilt fresh (nothing to carry)
+    stats, key_ranges, new_bloom, new_bloom_cols = wavewrite.write_wave(
+        merged, new_dir, schema_order, key_col)
+    fresh = {b: stats.get(b, []) for b in affected}
     new_rel = _wave_rel(new_dir, out_dir)
-    new_bloom, new_bloom_cols = _bloomkern.carry_forward(
-        out_dir, m, [], new_dir, set()  # nothing to copy: all rebuilt fresh
-    )
 
     # fresh stats spill to the new wave's file when the store already
     # runs spilled (or the merged stats alone cross the threshold) —

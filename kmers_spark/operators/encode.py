@@ -4,7 +4,9 @@ Pipeline (all declarative until the codec kernels):
     input df
       -> salted skew-aware bucket assignment (partitioning.with_bucket)
       -> groupBy(bucket).applyInArrow(encode kernels)    [Arrow batches]
-      -> block table parquet, partitioned by bucket      [resume unit]
+      -> mapInArrow: each task stages one block parquet file of whole
+         buckets and returns their stats (kmers_spark/wavewrite.py)
+      -> driver publishes the claimed files as a wave     [resume unit]
       -> manifest commit markers + per-block codec/size stats
 
 Block row: (bucket, column, codec, n_rows, raw_nbytes, enc_nbytes,
@@ -24,7 +26,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .. import manifest, selector, zonemap
+from .. import manifest, selector, wavewrite, zonemap
 from ..kernels import bloom as bloomkern
 from ..kernels import sketch as sketchkern
 from . import partitioning
@@ -52,14 +54,15 @@ def assert_utc_session(spark: SparkSession, schema: dict[str, str]) -> None:
 def make_encode_fn_arrow(schema: dict[str, str], key: str,
                          codec_overrides: dict[str, str] | None,
                          sort_by: list[str] | None = None,
-                         bloom_dir: str | None = None,
-                         bloom_cols: list[str] | None = None,
                          ndv_cols: list[str] | None = None,
                          presorted: bool = False):
     """Build the group encoder: one bucket's rows -> its block rows.
     Rows stay in Arrow buffers end-to-end; sort/dictionary/token work
     happens in C++ and the bit-level kernels in numpy. Everything it
-    captures is a small plain dict (cheap closure pickling).
+    captures is a small plain dict (cheap closure pickling). It touches
+    no storage: writers add the bucket's Bloom payloads with
+    wavewrite.with_blooms and stage everything through the write
+    protocol (kmers_spark/wavewrite.py).
 
     `sort_by` orders rows within the block (default: the key column).
     Range-clustered stores pass [cluster_col, key]: a range predicate
@@ -73,7 +76,7 @@ def make_encode_fn_arrow(schema: dict[str, str], key: str,
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from .. import arrowcodecs
+    from .. import arrowcodecs, wavewrite
 
     overrides = codec_overrides or {}
     sort_cols = sort_by or [key]
@@ -169,46 +172,17 @@ def make_encode_fn_arrow(schema: dict[str, str], key: str,
             rows["enc_nbytes"].append(len(payload))
             rows["payload"].append(payload)
             rows["meta"].append(json.dumps(meta, sort_keys=True))
-        # key Bloom sidecar (kernels/bloom.py): written by this task in
-        # the same pass, regenerated by every bucket rewrite;
-        # lookup_keys probes it to skip decoding buckets that
-        # definitely lack a probe key
-        if bloom_dir is not None:
-            bl = bloomkern.build_for_key_arrow(table.column(key), schema[key])
-            if bl is not None:
-                bloomkern.write_sidecar(bloom_dir, bucket, *bl)
-            # bloom_columns= sidecars: equality-scan pruning on non-key
-            # columns (decode.bloom_prune_filters). Every writer passes
-            # the full schema (rewrites materialize an evolved gap as
-            # nulls), and the listed columns are validated non-key
-            # schema columns, so each is present.
-            for c in bloom_cols or ():
-                bl = bloomkern.build_for_key_arrow(table.column(c), schema[c])
-                if bl is not None:
-                    bloomkern.write_col_sidecar(bloom_dir, bucket, c, *bl)
-        return pa.table(
-            {
-                "bucket": pa.array(rows["bucket"], pa.int32()),
-                "column": pa.array(rows["column"], pa.string()),
-                "codec": pa.array(rows["codec"], pa.string()),
-                "n_rows": pa.array(rows["n_rows"], pa.int64()),
-                "raw_nbytes": pa.array(rows["raw_nbytes"], pa.int64()),
-                "enc_nbytes": pa.array(rows["enc_nbytes"], pa.int64()),
-                "payload": pa.array(rows["payload"], pa.binary()),
-                "meta": pa.array(rows["meta"], pa.string()),
-            }
-        )
+        return wavewrite.block_table(rows)
 
     return encode_group
 
 
 def encode_blocks_df(bucketed: DataFrame, schema: dict[str, str], key: str,
-                     codec_overrides: dict[str, str] | None,
-                     sort_by: list[str] | None = None,
-                     bloom_dir: str | None = None,
-                     bloom_cols: list[str] | None = None,
-                     ndv_cols: list[str] | None = None) -> DataFrame:
-    """groupBy(bucket) -> block rows (applyInArrow).
+                     codec_overrides: dict[str, str] | None) -> DataFrame:
+    """groupBy(bucket) -> block rows (applyInArrow), without Bloom rows:
+    the in-memory form the round trip and the entry point's codec
+    report read. encode_table runs the same plan with Bloom rows and
+    writes its output through the write protocol.
 
     Measured dead end (r6, kept as a record): pre-sorting rows JVM-side
     (repartition(bucket) + sortWithinPartitions(bucket, *sort_by) +
@@ -220,11 +194,7 @@ def encode_blocks_df(bucketed: DataFrame, schema: dict[str, str], key: str,
     where order already exists (the survivors of a rewrite that appends
     nothing)."""
     return bucketed.groupBy("bucket").applyInArrow(
-        make_encode_fn_arrow(schema, key, codec_overrides,
-                             sort_by=sort_by, bloom_dir=bloom_dir,
-                             bloom_cols=bloom_cols, ndv_cols=ndv_cols),
-        BLOCK_SCHEMA,
-    )
+        make_encode_fn_arrow(schema, key, codec_overrides), BLOCK_SCHEMA)
 
 
 def plan_buckets(df: DataFrame, num_buckets: int, hot_keys: dict[str, int],
@@ -316,11 +286,13 @@ def encode_table(
     `commit_every` splits the pending buckets into waves of that size,
     each written AND manifest-committed before the next starts: a job
     killed (even kill -9) mid-run loses only the in-flight wave — its
-    partial output sits in the committer's _temporary dir, which the
-    parquet reader ignores — and resume picks up from the last
-    committed wave. At 100 TB this bounds recomputation to
-    commit_every buckets instead of the whole snapshot; the cost is one
-    Spark job per wave instead of one total.
+    output is hidden staged files in a wave dir the manifest never
+    registered, which readers never open and sweep_orphan_waves
+    reclaims — and resume picks up from the last committed wave. At
+    100 TB this bounds recomputation to commit_every buckets instead of
+    the whole snapshot; the cost is one write job per wave instead of
+    one total (kmers_spark/wavewrite.py: the tasks return their block
+    stats, so no job reads a wave back).
 
     `fail_buckets_over` keeps only buckets < N (test hook: simulates a
     job killed partway so resume can be exercised — FIXTURES.md §4).
@@ -660,98 +632,23 @@ def encode_table(
             # (Iceberg manifest-list discipline): a crash between write
             # and commit leaves an orphan dir that readers never see.
             wave_dir = f"{_blocks_path(out_dir)}/{_wave_name()}"
-            blocks = encode_blocks_df(
-                wave_df, schema, key, codec_overrides, sort_by=sort_by,
-                # key Bloom sidecars: staged by the encode tasks in a
-                # hidden sibling dir (tasks must not pre-create the
-                # wave dir — bloom.stage_dir), moved in after the
-                # write, registered at commit
-                bloom_dir=bloomkern.stage_dir(wave_dir),
-                bloom_cols=eff_bloom_cols,
-                ndv_cols=eff_ndv_cols,
+            blocks = wave_df.groupBy("bucket").applyInArrow(
+                wavewrite.with_blooms(
+                    make_encode_fn_arrow(schema, key, codec_overrides,
+                                         sort_by=sort_by,
+                                         ndv_cols=eff_ndv_cols),
+                    schema, key, eff_bloom_cols),
+                BLOCK_SCHEMA,
             )
-            (
-                blocks.write.mode("error")
-                # bucket stays a regular column: parquet row-group stats
-                # prune bucket-filtered reads, and a plain write scales
-                # where the dynamic-partition writer serializes (BENCH)
-                # payloads are already entropy-coded; snappy only burns CPU
-                .option("compression", "none")
-                .parquet(wave_dir)
-            )
-            bloomkern.finalize(wave_dir)
-            # read back the stats (not the payloads: column pruning is
-            # cheap). Explicit schema: a wave of hash-empty buckets
-            # writes a dir with no part files, which schema inference
-            # would reject.
-            written = (
-                df.sparkSession.read.schema(BLOCK_SCHEMA).parquet(wave_dir)
-                .select(
-                    "bucket", "column", "codec", "n_rows", "raw_nbytes", "enc_nbytes",
-                    # the key column's meta carries the block's key range;
-                    # other columns' meta stays pruned out of the collect —
-                    # zone bounds are plucked out JVM-side (meta can carry
-                    # per-miniblock width arrays; only 2 scalars cross)
-                    F.when(F.col("column") == key, F.col("meta")).alias("key_meta"),
-                    F.get_json_object(F.col("meta"), "$.zmin").alias("zmin"),
-                    F.get_json_object(F.col("meta"), "$.zmax").alias("zmax"),
-                    F.get_json_object(F.col("meta"), "$.znull").alias("znull"),
-                    F.get_json_object(F.col("meta"), "$.zsum").alias("zsum"),
-                    F.get_json_object(F.col("meta"), "$.znan").alias("znan"),
-                    F.get_json_object(F.col("meta"), "$.zndv").alias("zndv"),
-                    F.get_json_object(F.col("meta"), "$.zhll").alias("zhll"),
-                )
-                .collect()
-            )
-            stats: dict[int, list[dict]] = {}
-            key_ranges: dict[int, list] = {}
-            for b in wave:
-                stats[b] = []  # hash-empty buckets commit too (else they
-                # stay pending forever and every resume rewrites nothing)
-            for r in written:
-                stat = {
-                    "column": r["column"],
-                    "codec": r["codec"],
-                    "n_rows": r["n_rows"],
-                    "raw_nbytes": r["raw_nbytes"],
-                    "enc_nbytes": r["enc_nbytes"],
-                }
-                if r["zmin"] is not None and r["zmax"] is not None:
-                    typ = schema[r["column"]]
-                    if typ in ("int64", "timestamp", "timestamp_ntz"):
-                        stat["zmin"], stat["zmax"] = int(r["zmin"]), int(r["zmax"])
-                    elif typ == "double":
-                        stat["zmin"], stat["zmax"] = float(r["zmin"]), float(r["zmax"])
-                    else:
-                        stat["zmin"], stat["zmax"] = r["zmin"], r["zmax"]
-                if r["znull"] is not None:
-                    stat["znull"] = int(r["znull"])
-                if r["zsum"] is not None:
-                    stat["zsum"] = int(r["zsum"])
-                if r["znan"] is not None:
-                    stat["znan"] = int(r["znan"])
-                if r["zndv"] is not None:
-                    stat["zndv"] = int(r["zndv"])
-                if r["zhll"] is not None:
-                    stat["zhll"] = r["zhll"]
-                stats.setdefault(int(r["bucket"]), []).append(stat)
-                if r["key_meta"] is not None:
-                    km = json.loads(r["key_meta"])
-                    if "key_min" in km:
-                        key_ranges[int(r["bucket"])] = [km["key_min"], km["key_max"]]
-            bloom_listing_dir = os.path.join(wave_dir, bloomkern.BLOOM_DIR)
+            stats, key_ranges, bloom_buckets, bloom_cols = \
+                wavewrite.write_wave(blocks, wave_dir, schema, key)
+            # hash-empty buckets commit too (else they stay pending
+            # forever and every resume rewrites nothing)
+            stats = {**{b: [] for b in wave}, **stats}
             m = manifest.commit_buckets(
                 out_dir, stats, wave_dir=_wave_rel(wave_dir, out_dir),
-                key_ranges=key_ranges,
-                # one listdir: which buckets the encode tasks wrote a
-                # Bloom sidecar for (all-null key groups have none)
-                bloom_buckets=sorted(bloomkern.list_sidecars(bloom_listing_dir)),
-                bloom_cols={
-                    c: sorted(bkts)
-                    for c, bkts in bloomkern.list_col_sidecars(
-                        bloom_listing_dir
-                    ).items()
-                } or None,
+                key_ranges=key_ranges, bloom_buckets=bloom_buckets,
+                bloom_cols=bloom_cols,
             )
     finally:
         if persisted:
@@ -872,7 +769,8 @@ def sweep_orphan_waves(out_dir: str, grace_sec: float = SWEEP_GRACE_SEC) -> None
         except OSError:
             continue  # vanished concurrently
         shutil.rmtree(p, ignore_errors=True)
-    # bloom staging dirs of crashed writes follow the same grace rule
+    # `.bloomstage-*` dirs left by writers older than the staged-file
+    # protocol (kmers_spark/wavewrite.py) follow the same grace rule
     bloomkern.sweep_stages(
         root, {d.rsplit("/", 1)[-1] for d in committed}, grace_sec
     )
@@ -929,16 +827,12 @@ def compact_waves(spark: SparkSession, out_dir: str) -> dict:
         return m
     blocks = read_blocks(spark, out_dir)
     new_dir = f"{_blocks_path(out_dir)}/{_wave_name()}"
-    (
-        # repartition on bucket: every bucket's rows land in ONE output
-        # file, preserving the whole-bucket-per-scan-partition contract
-        # decode_colocated depends on (a plain rewrite would split block
-        # files > maxPartitionBytes at row-group boundaries)
-        blocks.repartition(F.col("bucket"))
-        .write.mode("error")
-        .option("compression", "none")
-        .parquet(new_dir)
-    )
+    # repartition on bucket: every bucket's rows land in ONE output
+    # file, preserving the whole-bucket-per-scan-partition contract
+    # decode_colocated depends on (a plain rewrite would split block
+    # files > maxPartitionBytes at row-group boundaries)
+    wavewrite.write_wave(blocks.repartition(F.col("bucket")), new_dir,
+                         manifest.ordered_schema(m), m["key"])
     # payloads moved verbatim (key sets AND values unchanged): every
     # retired stats entry and Bloom filter stays exact
     return commit_rewrite(out_dir, m, old, new_dir)
@@ -1018,36 +912,3 @@ def rebuild_snapshot(spark: SparkSession, src_dir: str, dst_dir: str, *,
         ndv_columns=ndv_columns,
     )
 
-
-def encode_colocated_df(df: DataFrame, schema: dict[str, str], key: str,
-                        codec_overrides: dict[str, str] | None = None) -> DataFrame:
-    """Shuffle-free encode over a pre-bucketed table (mapInArrow).
-
-    For repeated encodes at 10^12-row scale the input should live
-    bucket-clustered on storage (Iceberg bucket partitioning / Spark
-    bucketBy); then each scan partition already holds whole buckets and
-    the encode is scan -> kernels -> write with NO shuffle — the
-    bucketed-join discipline from the PySpark guide applied to encoding.
-    Input must carry a `bucket` column; a partition may hold several
-    buckets (each becomes its own block set) but a bucket must not span
-    partitions.
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    fn = make_encode_fn_arrow(schema, key, codec_overrides)
-
-    def encode_partition(batches):
-        tables = [pa.Table.from_batches([b]) for b in batches]
-        if not tables:
-            return
-        table = pa.concat_tables(tables).combine_chunks()
-        if table.num_rows == 0:
-            return
-        buckets = pc.unique(table.column("bucket"))
-        for b in buckets:
-            sub = table.filter(pc.equal(table.column("bucket"), b))
-            for batch in fn(sub).to_batches():
-                yield batch
-
-    return df.mapInArrow(encode_partition, BLOCK_SCHEMA)

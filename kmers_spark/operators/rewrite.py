@@ -28,9 +28,13 @@ upsert whose placed rows are all probes. The protocol:
     Rewritten buckets keep their bucket ids: salted rows must NOT be
     re-assigned (a hot key's surviving rows re-hashing into a bucket
     owned by an untouched wave would duplicate block rows there).
-  * the new wave is written one file per bucket (decode_colocated's
-    contract), its Bloom sidecars are finalized, and the rewritten
-    buckets' stats are collected (a handful of scalars per column).
+  * the cogroup output and the verbatim rows are repartitioned by
+    bucket and staged through the write protocol
+    (kmers_spark/wavewrite.py): each task writes its whole buckets
+    (decode_colocated's contract) and their fresh Bloom sidecars as
+    hidden files and returns their block stats, so the write job's
+    collect is the last Spark job; the driver claims and publishes
+    the collected files.
   * commit_rewrite, shared with compact_waves: retired waves' spilled
     stats consolidate into the new wave (rewritten buckets replaced by
     their fresh stats), still-exact Bloom sidecars carry forward, and
@@ -53,8 +57,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import manifest
+from .. import manifest, wavewrite
 from ..kernels import bloom as bloomkern
+from ..wavewrite import empty_blocks_arrow
 from .encode import (
     BLOCK_SCHEMA,
     _blocks_path,
@@ -73,21 +78,6 @@ BLOCK_COLS = [
 # placed-row flag: True = key probe only (drop stored rows of this key),
 # False = a row to append
 PROBE = "__delete_only"
-
-
-def empty_blocks_arrow():
-    import pyarrow as pa
-
-    return pa.table({
-        "bucket": pa.array([], pa.int32()),
-        "column": pa.array([], pa.string()),
-        "codec": pa.array([], pa.string()),
-        "n_rows": pa.array([], pa.int64()),
-        "raw_nbytes": pa.array([], pa.int64()),
-        "enc_nbytes": pa.array([], pa.int64()),
-        "payload": pa.array([], pa.binary()),
-        "meta": pa.array([], pa.string()),
-    })
 
 
 def open_batch_store(out_dir: str, op: str) -> dict:
@@ -110,8 +100,7 @@ def open_batch_store(out_dir: str, op: str) -> dict:
 
 def _make_merge_fn(schema: dict[str, str], key: str,
                    overrides: dict[str, str], sort_by: list[str] | None,
-                   missing: dict[int, set], bloom_dir: str,
-                   bloom_cols: list[str] | None,
+                   missing: dict[int, set], bloom_cols: list[str] | None,
                    ndv_cols: list[str] | None):
     """Cogrouped (block rows of one bucket, its placed rows) -> new block
     rows. `missing` is the readers' evolution allowance per bucket."""
@@ -159,68 +148,13 @@ def _make_merge_fn(schema: dict[str, str], key: str,
             return empty_blocks_arrow()
         rows = rows.append_column(
             "bucket", pa.array([bucket_id] * rows.num_rows, pa.int32()))
-        return make_encode_fn_arrow(schema, key, overrides, sort_by,
-                                    bloom_dir=bloom_dir,
-                                    bloom_cols=bloom_cols,
-                                    ndv_cols=ndv_cols,
-                                    presorted=append.num_rows == 0)(rows)
+        return wavewrite.with_blooms(
+            make_encode_fn_arrow(schema, key, overrides, sort_by,
+                                 ndv_cols=ndv_cols,
+                                 presorted=append.num_rows == 0),
+            schema, key, bloom_cols)(rows)
 
     return fn
-
-
-def collect_fresh_stats(spark: SparkSession, new_dir: str, affected: list,
-                        m: dict, key_col: str):
-    """Per-bucket block stats + key ranges of the freshly written wave,
-    restricted to the rewritten buckets (verbatim buckets keep their
-    committed stats) — the same bounded collect encode_table does:
-    a handful of scalars per (bucket, column), never payloads."""
-    written = (
-        spark.read.schema(BLOCK_SCHEMA).parquet(new_dir)
-        .filter(F.col("bucket").isin(list(affected)))
-        .select(
-            "bucket", "column", "codec", "n_rows", "raw_nbytes", "enc_nbytes",
-            F.when(F.col("column") == key_col, F.col("meta")).alias("key_meta"),
-            F.get_json_object(F.col("meta"), "$.zmin").alias("zmin"),
-            F.get_json_object(F.col("meta"), "$.zmax").alias("zmax"),
-            F.get_json_object(F.col("meta"), "$.znull").alias("znull"),
-            F.get_json_object(F.col("meta"), "$.zsum").alias("zsum"),
-            F.get_json_object(F.col("meta"), "$.znan").alias("znan"),
-            F.get_json_object(F.col("meta"), "$.zndv").alias("zndv"),
-            F.get_json_object(F.col("meta"), "$.zhll").alias("zhll"),
-        )
-        .collect()
-    )
-    fresh: dict[int, list[dict]] = {b: [] for b in affected}
-    key_ranges: dict[int, list] = {}
-    for r in written:
-        st = {
-            "column": r["column"], "codec": r["codec"], "n_rows": r["n_rows"],
-            "raw_nbytes": r["raw_nbytes"], "enc_nbytes": r["enc_nbytes"],
-        }
-        if r["zmin"] is not None and r["zmax"] is not None:
-            typ = m["schema"][r["column"]]
-            if typ in ("int64", "timestamp", "timestamp_ntz"):
-                st["zmin"], st["zmax"] = int(r["zmin"]), int(r["zmax"])
-            elif typ == "double":
-                st["zmin"], st["zmax"] = float(r["zmin"]), float(r["zmax"])
-            else:
-                st["zmin"], st["zmax"] = r["zmin"], r["zmax"]
-        if r["znull"] is not None:
-            st["znull"] = int(r["znull"])
-        if r["zsum"] is not None:
-            st["zsum"] = int(r["zsum"])
-        if r["znan"] is not None:
-            st["znan"] = int(r["znan"])
-        if r["zndv"] is not None:
-            st["zndv"] = int(r["zndv"])
-        if r["zhll"] is not None:
-            st["zhll"] = r["zhll"]
-        fresh.setdefault(int(r["bucket"]), []).append(st)
-        if r["key_meta"] is not None:
-            km = json.loads(r["key_meta"])
-            if "key_min" in km:
-                key_ranges[int(r["bucket"])] = [km["key_min"], km["key_max"]]
-    return fresh, key_ranges
 
 
 def rewrite_buckets(spark: SparkSession, out_dir: str, m: dict,
@@ -271,23 +205,17 @@ def rewrite_buckets(spark: SparkSession, out_dir: str, m: dict,
                 schema, key_col, m.get("codec_overrides") or {},
                 block_sort_by(m.get("bucket_scheme"), m.get("cluster_by"),
                               key_col),
-                missing, bloomkern.stage_dir(new_dir),
-                m.get("bloom_columns"), m.get("ndv_columns")),
+                missing, m.get("bloom_columns"), m.get("ndv_columns")),
             BLOCK_SCHEMA,
         )
     )
     out = rewritten if verbatim is None else rewritten.unionByName(verbatim)
-    (
-        # one partition per hash(bucket): every bucket's block rows land
-        # whole in one file (decode_colocated's contract)
-        out.repartition(F.col("bucket"))
-        .write.mode("error")
-        .option("compression", "none")
-        .parquet(new_dir)
-    )
-    bloomkern.finalize(new_dir)
-    fresh, key_ranges = collect_fresh_stats(spark, new_dir, affected, m,
-                                            key_col)
+    # one partition per hash(bucket): every bucket's block rows land
+    # whole in one file (decode_colocated's contract)
+    stats, key_ranges, _bb, _bc = wavewrite.write_wave(
+        out.repartition(F.col("bucket")), new_dir, schema, key_col)
+    # verbatim buckets keep their committed stats
+    fresh = {b: stats.get(b, []) for b in affected}
     rows_after = sum(rows_of(fresh[b]) for b in affected)
     m2 = commit_rewrite(
         out_dir, m, retired, new_dir, fresh, key_ranges,

@@ -143,21 +143,26 @@ def test_pages_generator_deterministic(spark):
 
 
 def test_colocated_encode_matches_shuffled(spark, pages_df, tmp_path):
-    """Shuffle-free mapInArrow encode over a pre-bucketed layout produces
-    the same blocks (bucket, column, payload md5) as the groupBy path."""
+    """The shuffle-free path over a pre-bucketed layout (the kmers sink
+    encodes each partition's whole buckets where they sit) produces the
+    same blocks (bucket, column, payload md5) as the groupBy path."""
     from pyspark.sql import functions as F
 
-    from kmers_spark import selector
-    from kmers_spark.operators.encode import encode_blocks_df, encode_colocated_df
+    from kmers_spark import datasource, selector
+    from kmers_spark.operators.encode import encode_blocks_df
 
     schema = {f.name: selector.spark_type_name(f.dataType) for f in pages_df.schema.fields}
     b = pages_df.withColumn(
         "bucket", F.pmod(F.xxhash64("url"), F.lit(N_BUCKETS)).cast("int")
     )
     shuffled = encode_blocks_df(b, schema, "url", None)
-    colocated = encode_colocated_df(
-        b.repartition(N_BUCKETS, "bucket"), schema, "url", None
+    out = str(tmp_path / "snap_colocated")
+    datasource.register(spark)
+    (
+        b.repartition("bucket").write.format("kmers").option("key", "url")
+        .option("numBuckets", str(N_BUCKETS)).mode("append").save(out)
     )
+    colocated = enc.read_blocks(spark, out)
     h = lambda df: sorted(
         (r["bucket"], r["column"], r["h"])
         for r in df.select("bucket", "column", F.md5("payload").alias("h")).collect()
@@ -280,10 +285,10 @@ def test_lookup_keys_prunes_buckets(spark, pages_df, tmp_path, monkeypatch):
 def test_kill9_resume_preserves_committed_waves(spark, tmp_path):
     """TRUE crash resume: a subprocess encode job (commit_every=2) is
     SIGKILLed once the manifest shows >= 2 committed buckets; the
-    in-flight wave's partial output lives in the committer's _temporary
-    dir (ignored by the reader), and a resume run completes exactly the
-    missing buckets with a bit-identical round trip and no duplicate
-    block rows."""
+    in-flight wave's output is hidden staged files in a wave dir the
+    manifest never registered (never read), and a resume run completes
+    exactly the missing buckets with a bit-identical round trip and no
+    duplicate block rows."""
     import os
     import signal
     import subprocess

@@ -1,7 +1,7 @@
 """The merge-on-write path (operators/rewrite.py) that delete_keys and
 upsert_table share: a corrupt block set raises the readers' error
-instead of committing a rewrite, and each mutation's Spark job count
-stays within its pinned bound."""
+instead of committing a rewrite, and each mutation's (and a multi-wave
+encode's) Spark job count stays within its pinned bound."""
 from __future__ import annotations
 
 import pytest
@@ -51,10 +51,13 @@ def test_corrupt_bucket_is_not_rewritten(spark, tmp_path, op, how):
     assert manifest.current_version(out) == version
 
 
-# Spark jobs each mutation launched before delete and upsert shared one
-# rewrite path (2,000 rows, 8 hash buckets, local[4]): the bounds below
-DELETE_JOBS = 10
-UPSERT_JOBS = 11
+# Spark jobs each operation launches since every writer's tasks return
+# their block stats instead of a job reading the wave back (2,000 rows,
+# 8 hash buckets, local[4]): the bounds below. With the read-back they
+# were delete 10, upsert 11 and a 4-wave encode 19.
+DELETE_JOBS = 9
+UPSERT_JOBS = 10
+ENCODE_4_WAVES_JOBS = 15
 
 
 def test_mutation_job_counts(spark, tmp_path):
@@ -71,3 +74,12 @@ def test_mutation_job_counts(spark, tmp_path):
     res, jobs = _jobs_of(spark, lambda: upsert_table(spark, out, recrawl))
     assert (res["rows_inserted"], res["rows_replaced"]) == (5, 5)
     assert jobs <= UPSERT_JOBS
+
+
+def test_encode_job_count_per_wave(spark, tmp_path):
+    df = pages.pages_df(spark, 2000, seed=7, partitions=4).cache()
+    df.count()
+    m, jobs = _jobs_of(spark, lambda: encode_table(
+        df, str(tmp_path / "snap"), num_buckets=8, commit_every=2))
+    assert len(m["wave_dirs"]) == 4
+    assert jobs <= ENCODE_4_WAVES_JOBS
