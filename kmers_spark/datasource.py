@@ -638,9 +638,10 @@ try:  # writer API: Spark 4.0+
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        from . import wavewrite
+        from . import arrowcodecs, wavewrite
         from .operators.encode import make_encode_fn_arrow
 
+        arrowcodecs.pin_worker_threads()
         fn = wavewrite.with_blooms(
             make_encode_fn_arrow(table_schema, key, codec_overrides,
                                  ndv_cols=ndv_cols),

@@ -453,6 +453,54 @@ def bloom_prune_filters(out_dir: str, m: dict, norm: list[tuple],
     return sorted(surviving)
 
 
+def key_buckets(m: dict, key) -> list[int]:
+    """Buckets of the snapshot `m` that could hold `key` (typed like the
+    key column: a str, or an int for an int64 key) under its bucket
+    rule. The one placement rule of lookup_keys and of delete_keys'
+    driver plan: the driver twin of delete._candidate_pairs, which
+    must return the same set on every scheme.
+
+      * hash schemes (and pre-scheme snapshots): exactly one bucket,
+        from the golden-tested xxhash64 mirror. An explicit ALLOWLIST:
+        hash-deriving under a layout this code has never seen would
+        silently report present keys absent.
+      * range-bucketed ON the key: exactly one bucket, the same
+        searchsorted rule encode used (driver-side bisect), heavy-value
+        overflow salt included — with cluster == key the salt input is
+        the key itself.
+      * every other scheme (external, zorder, range on another column,
+        a future one): the key does not determine placement, so the
+        candidates are the committed buckets whose recorded
+        [key_min, key_max] may hold it (blocks are key-sorted, so the
+        recorded range stays exact)."""
+    from . import partitioning
+
+    key_col = m["key"]
+    scheme = m.get("bucket_scheme", partitioning.LEGACY_SCHEME)
+    if scheme in (partitioning.BUCKET_SCHEME, partitioning.LEGACY_SCHEME):
+        return [partitioning.bucket_for_key(key, m["num_buckets"],
+                                            m.get("hot_keys") or {},
+                                            scheme=scheme)]
+    if scheme == partitioning.RANGE_SCHEME and m.get("cluster_by") == key_col:
+        return [partitioning.range_bucket_for_key(
+            key, m["range_boundaries"], m["schema"][key_col])]
+    ranges = m.get("bucket_key_ranges", {})
+    return [b for b in sorted(int(x) for x in m.get("committed_buckets", []))
+            if may_hold(ranges.get(str(b)), key)]
+
+
+def may_hold(rng, key) -> bool:
+    """Can the recorded [key_min, key_max] contain `key` (typed like
+    the key column)? Only a range of the key's own type proves
+    absence; a missing or differently-typed range keeps the bucket."""
+    if rng is None or type(key) not in (str, int):
+        return True
+    lo, hi = rng
+    if type(lo) is type(hi) is type(key):
+        return lo <= key <= hi
+    return True
+
+
 def lookup_keys(spark: SparkSession, out_dir: str, keys: list[str]) -> DataFrame:
     """Point lookups against the COMPRESSED store: re-derive each key's
     bucket from the manifest (same salted hash the encode job used —
@@ -474,69 +522,25 @@ def lookup_keys(spark: SparkSession, out_dir: str, keys: list[str]) -> DataFrame
     has set semantics: each stored row is returned once, however often
     its key is probed. A probe matches when it equals the stored key
     rendered as a string (int key 7 matches "7", not "007")."""
-    from . import partitioning
-
     m = manifest.load(out_dir)
     if m is None:
         raise FileNotFoundError(f"no manifest in {out_dir}")
     key_col = m["key"]
-    hot = m.get("hot_keys") or {}
     ranges = m.get("bucket_key_ranges", {})
-    scheme = m.get("bucket_scheme", partitioning.LEGACY_SCHEME)
-
-    def candidates(k: str) -> list[int]:
-        """Buckets that could hold key k under the snapshot's scheme."""
-        if scheme in (partitioning.BUCKET_SCHEME, partitioning.LEGACY_SCHEME):
-            # explicit ALLOWLIST for hash-deriving a single bucket: any
-            # scheme this code has never seen must fall to the
-            # all-committed-buckets path below — hash-deriving under a
-            # zorder/external layout silently reports present keys
-            # absent (the key does not determine the bucket there)
-            return [partitioning.bucket_for_key(k, m["num_buckets"], hot,
-                                                scheme=scheme)]
-        if scheme != partitioning.RANGE_SCHEME:
-            # external (caller-bucketed sink), zorder (bucket is a
-            # function of the cluster columns' z-value), or a future
-            # scheme: no key rule is trustworthy — every committed
-            # bucket is a candidate and the recorded per-bucket key
-            # ranges + Bloom sidecars below do the pruning
-            return list(m.get("committed_buckets", []))
-        if m.get("cluster_by") == key_col and m["schema"][key_col] == "string":
-            # range-bucketed ON the key: exact bucket via the same
-            # searchsorted rule encode used (driver-side bisect),
-            # including the heavy-value overflow salt — with
-            # cluster == key the salt input is the probe itself
-            return [partitioning.range_bucket_for_key(
-                k, m["range_boundaries"], "string"
-            )]
-        # range-bucketed on a DIFFERENT column: the key hash says nothing
-        # about placement — every committed bucket is a candidate, and the
-        # per-bucket key ranges below do the pruning (blocks are key-
-        # sorted, so the recorded [key_min, key_max] stays exact)
-        return list(m.get("committed_buckets", []))
-
-    def may_hold(rng, k: str) -> bool:
-        """Can the recorded [key_min, key_max] contain probe k? Probes
-        arrive as strings; int64-key snapshots record INT ranges, so the
-        probe is parsed for the compare (a non-numeric probe against an
-        int range proves absence). Unknown/mixed shapes keep the
-        bucket."""
-        if rng is None:
-            return True
-        lo, hi = rng
-        if isinstance(lo, str) and isinstance(hi, str):
-            return lo <= k <= hi
-        if isinstance(lo, int) and isinstance(hi, int):
-            try:
-                return lo <= int(k) <= hi
-            except ValueError:
-                return False  # can't be an int64 key at all
-        return True
-
+    int_key = m["schema"].get(key_col) == "int64"
     bucket_keys: dict[int, list[str]] = {}
     for k in keys:
-        for b in candidates(k):
-            if may_hold(ranges.get(str(b)), k):
+        if int_key:
+            # int64-key snapshots place and range typed ints; a
+            # non-numeric probe cannot be a stored key at all
+            try:
+                typed = int(k)
+            except (TypeError, ValueError):
+                continue
+        else:
+            typed = k
+        for b in key_buckets(m, typed):
+            if may_hold(ranges.get(str(b)), typed):
                 bucket_keys.setdefault(int(b), []).append(k)
     # key Bloom sidecars (kernels/bloom.py): drop every candidate
     # bucket whose covering waves all carry a filter and every probe

@@ -14,25 +14,30 @@ merge-on-write path, described there) rewrites those buckets.
 Scale shape (what bounds what at 100 TB):
 
   * doomed keys -> candidate buckets through the snapshot's OWN bucket
-    rule — the same JVM expressions the encode job used (hot-key and
-    heavy-boundary salts are key-deterministic, so under the hash
-    scheme and the cluster==key range scheme every key maps to exactly
-    one bucket). Range-on-another-column and externally-bucketed
-    stores fall back to the recorded per-bucket [key_min, key_max]
-    ranges (lookup_keys' rule, run as a broadcast range join instead
-    of a driver loop so a billion-key doomed set never leaves the
-    executors).
-  * ONE bounded driver collect: the distinct candidate-bucket ids
-    (<= num_buckets ints, whatever the doomed-set cardinality).
+    rule (hot-key and heavy-boundary salts are key-deterministic, so
+    under the hash scheme and the cluster==key range scheme every key
+    maps to exactly one bucket). Range-on-another-column, zorder and
+    externally-bucketed stores fall back to the recorded per-bucket
+    [key_min, key_max] ranges.
+  * a key LIST is placed in the driver (decode.key_buckets, the rule
+    lookup_keys uses) and hands the rewrite driver-side probe rows:
+    on a small store (rewrite.py's read budget) the whole delete then
+    runs in the driver and launches no Spark job.
+  * a key DATAFRAME (a dedup job's output) never leaves the executors:
+    the same rule runs as the JVM expressions encode used, or as a
+    broadcast range join, and ONE bounded driver collect fetches the
+    distinct candidate-bucket ids (<= num_buckets ints, whatever the
+    doomed-set cardinality).
   * rewrite I/O = the wave dirs that HOLD affected buckets.
 """
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import manifest
-from . import partitioning
+from .. import manifest, zonemap
+from . import decode, partitioning
 from .rewrite import PROBE, open_batch_store, rewrite_buckets
 
 # probes join/compare against the key column; same restriction as the
@@ -78,10 +83,30 @@ def _candidate_pairs(spark: SparkSession, kdf: DataFrame, m: dict,
     return pairs.select(F.col("bucket").cast("int").alias("bucket"), key_col)
 
 
+def _place_in_driver(m: dict, keys: list, ktype: str) -> "pa.Table | None":
+    """A key list's probe rows (bucket, key, PROBE), placed in the
+    driver by decode.key_buckets over the committed buckets; None when
+    a key is not of the key column's Python type (str, or int for an
+    int64 key), which the Spark plan's cast then judges."""
+    want = str if ktype == "string" else int
+    keys = [k for k in dict.fromkeys(keys) if k is not None]
+    if not all(type(k) is want for k in keys):
+        return None
+    committed = {int(b) for b in m.get("committed_buckets", [])}
+    pairs = [(b, k) for k in keys for b in decode.key_buckets(m, k)
+             if b in committed]
+    return pa.table({
+        "bucket": pa.array([b for b, _k in pairs], pa.int32()),
+        m["key"]: pa.array([k for _b, k in pairs], zonemap.arrow_type(ktype)),
+        PROBE: pa.array([True] * len(pairs), pa.bool_()),
+    })
+
+
 def delete_keys(spark: SparkSession, out_dir: str,
                 keys: "DataFrame | list") -> dict:
     """Delete every row whose key column equals a doomed key; returns
-    {"rows_deleted", "buckets_rewritten", "waves_rewritten", "manifest"}.
+    {"rows_deleted", "buckets_rewritten", "waves_rewritten", "manifest",
+    "plan"} (plan: "driver" or "spark", see operators/rewrite.py).
 
     `keys`: a list of key values, or a DataFrame whose single column
     (or column named like the snapshot's key) holds them — the
@@ -96,8 +121,13 @@ def delete_keys(spark: SparkSession, out_dir: str,
             f"{key_col!r} is {ktype!r}"
         )
     spark_type = manifest.SPARK_DDL_TYPES[ktype]
-    noop = {"rows_deleted": 0, "buckets_rewritten": [],
-            "waves_rewritten": [], "manifest": m}
+
+    def rewrite(probes, affected: list[int], plan: str) -> dict:
+        if not affected:
+            return {"rows_deleted": 0, "buckets_rewritten": [],
+                    "waves_rewritten": [], "manifest": m, "plan": plan}
+        res = rewrite_buckets(spark, out_dir, m, probes, affected, 0)
+        return {"rows_deleted": res.pop("rows_removed"), **res}
 
     if isinstance(keys, DataFrame):
         if key_col in keys.columns:
@@ -111,8 +141,10 @@ def delete_keys(spark: SparkSession, out_dir: str,
             )
     else:
         keys = list(keys)
-        if not keys:
-            return noop
+        placed = _place_in_driver(m, keys, ktype)
+        if placed is not None:
+            return rewrite(placed, sorted(set(
+                placed.column("bucket").to_pylist())), "driver")
         kdf = spark.createDataFrame(
             [(k,) for k in keys], f"`{key_col}` {spark_type}"
         )
@@ -133,11 +165,8 @@ def delete_keys(spark: SparkSession, out_dir: str,
             {int(r["bucket"]) for r in pairs.select("bucket").distinct().collect()}
             & committed
         )
-        if not affected:
-            return noop
         probes = pairs.filter(F.col("bucket").isin(affected)) \
             .withColumn(PROBE, F.lit(True))
-        res = rewrite_buckets(spark, out_dir, m, probes, affected, 0)
-        return {"rows_deleted": res.pop("rows_removed"), **res}
+        return rewrite(probes, affected, "spark")
     finally:
         pairs.unpersist()

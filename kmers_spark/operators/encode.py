@@ -26,7 +26,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .. import manifest, selector, wavewrite, zonemap
+from .. import arrowcodecs, manifest, selector, wavewrite, zonemap
 from ..kernels import bloom as bloomkern
 from ..kernels import sketch as sketchkern
 from . import partitioning
@@ -82,7 +82,6 @@ def make_encode_fn_arrow(schema: dict[str, str], key: str,
     sort_cols = sort_by or [key]
 
     def encode_group(table: "pa.Table") -> "pa.Table":
-        arrowcodecs.pin_worker_threads()
         if not presorted:
             idx = pc.sort_indices(
                 table, sort_keys=[(c, "ascending") for c in sort_cols]
@@ -194,7 +193,8 @@ def encode_blocks_df(bucketed: DataFrame, schema: dict[str, str], key: str,
     where order already exists (the survivors of a rewrite that appends
     nothing)."""
     return bucketed.groupBy("bucket").applyInArrow(
-        make_encode_fn_arrow(schema, key, codec_overrides), BLOCK_SCHEMA)
+        arrowcodecs.pinned(make_encode_fn_arrow(schema, key, codec_overrides)),
+        BLOCK_SCHEMA)
 
 
 def plan_buckets(df: DataFrame, num_buckets: int, hot_keys: dict[str, int],
@@ -633,11 +633,11 @@ def encode_table(
             # and commit leaves an orphan dir that readers never see.
             wave_dir = f"{_blocks_path(out_dir)}/{_wave_name()}"
             blocks = wave_df.groupBy("bucket").applyInArrow(
-                wavewrite.with_blooms(
+                arrowcodecs.pinned(wavewrite.with_blooms(
                     make_encode_fn_arrow(schema, key, codec_overrides,
                                          sort_by=sort_by,
                                          ndv_cols=eff_ndv_cols),
-                    schema, key, eff_bloom_cols),
+                    schema, key, eff_bloom_cols)),
                 BLOCK_SCHEMA,
             )
             stats, key_ranges, bloom_buckets, bloom_cols = \

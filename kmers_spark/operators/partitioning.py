@@ -563,12 +563,13 @@ def range_bucket_for_value(value, boundaries: list, typ: str) -> int:
     return bisect.bisect_right(boundaries, bv)
 
 
-def range_bucket_for_key(key_value: str, boundaries: list, typ: str) -> int:
+def range_bucket_for_key(key_value, boundaries: list, typ: str) -> int:
     """Driver-side mirror of with_bucket_range(..., key=cluster) for a
     cluster==key snapshot: the base bisect rule PLUS the heavy-value
     overflow salt — with cluster == key the salt input IS the probe
     value, so the salted bucket is exactly computable (one bucket per
-    probe, no fan-out)."""
+    probe, no fan-out). `key_value` is typed like the key column (a
+    str, or an int for an int64 key), as the salt hashes it."""
     from .. import sparkhash
 
     heavy = heavy_boundary_values(boundaries)
@@ -584,21 +585,26 @@ def range_bucket_for_key(key_value: str, boundaries: list, typ: str) -> int:
     return range_bucket_for_value(key_value, boundaries, typ)
 
 
-def bucket_for_key(key: str, num_buckets: int, hot_keys: dict[str, int],
+def bucket_for_key(key, num_buckets: int, hot_keys: dict[str, int],
                    scheme: str = BUCKET_SCHEME) -> int:
     """Driver-side mirror of with_bucket for ONE key: same regex host
     extraction, same salt rule, same xxhash64 chaining — golden-tested
     against the Spark expression (test_encode_e2e). Lets point lookups
     map probe keys to buckets without running a Spark job. `scheme`
     must be the snapshot's recorded bucket_scheme — probing with the
-    wrong one silently misses keys in pre-scheme snapshots."""
+    wrong one silently misses keys in pre-scheme snapshots.
+
+    `key` is typed like the key column (a str, or an int for an int64
+    key): the host comes from its string form, as with_host casts, but
+    a hot key's salt hashes the typed value, as with_bucket does."""
     from .. import sparkhash
 
-    m = _HOST_RE.match(key)
+    text = key if isinstance(key, str) else str(key)
+    m = _HOST_RE.match(text)
     if scheme == LEGACY_SCHEME:
         host = m.group(1) if m else ""  # regexp_extract "" on no match
     else:
-        host = m.group(1) if m else key  # non-url key: the key itself
+        host = m.group(1) if m else text  # non-url key: the key itself
     n_salts = hot_keys.get(host)
     salt = sparkhash.pmod(sparkhash.xxhash64(key), n_salts) if n_salts else 0
     return sparkhash.pmod(sparkhash.xxhash64(host, salt), num_buckets)

@@ -13,28 +13,39 @@ upsert whose placed rows are all probes. The protocol:
     documented trade against a per-bucket tombstone design, which would
     touch only affected bytes but put a merge-on-read anti-join in every
     reader's hot path forever.
-  * ONE Spark job cogroups the affected buckets' block rows with their
-    placed rows (so a billion-key probe set never broadcasts). The
-    kernel decodes through blockdecode.decode_bucket — the readers'
-    block-set integrity checks and schema-evolution allowance, so a
-    corrupt bucket raises instead of committing a rewrite — drops the
-    probed keys (Arrow `is_in` anti-filter), appends the new rows and
-    re-encodes through the kernel encode_table runs: codec selection,
-    zone maps, key ranges, Bloom filters and sketches regenerate. An
-    evolved gap column is materialized as nulls. Rows are re-sorted
-    only when some were appended; survivors alone keep the stored order.
-    An affected bucket no probe hits, and every co-resident unaffected
-    bucket, is copied payload-verbatim (only its key column decodes).
+  * the merge kernel (_make_merge_fn) pairs each affected bucket's
+    block rows with its placed rows. It decodes through
+    blockdecode.decode_bucket — the readers' block-set integrity checks
+    and schema-evolution allowance, so a corrupt bucket raises instead
+    of committing a rewrite — drops the probed keys (Arrow `is_in`
+    anti-filter), appends the new rows and re-encodes through the
+    kernel encode_table runs: codec selection, zone maps, key ranges,
+    Bloom filters and sketches regenerate. An evolved gap column is
+    materialized as nulls. Rows are re-sorted only when some were
+    appended; survivors alone keep the stored order. An affected
+    bucket no probe hits, and every co-resident unaffected bucket, is
+    copied payload-verbatim (only its key column decodes).
     Rewritten buckets keep their bucket ids: salted rows must NOT be
     re-assigned (a hot key's surviving rows re-hashing into a bucket
     owned by an untouched wave would duplicate block rows there).
-  * the cogroup output and the verbatim rows are repartitioned by
-    bucket and staged through the write protocol
-    (kmers_spark/wavewrite.py): each task writes its whole buckets
-    (decode_colocated's contract) and their fresh Bloom sidecars as
-    hidden files and returns their block stats, so the write job's
-    collect is the last Spark job; the driver claims and publishes
-    the collected files.
+  * two plans run that kernel; they differ only in how the new wave's
+    block records are produced, and write identical block rows:
+      - the DRIVER plan, when the placed rows are in the driver (a
+        key list, a LocalRelation batch) and the retired waves'
+        committed payload (block-stats enc_nbytes over every bucket
+        in their wave_buckets lists) plus the batch's Arrow bytes is
+        at most decode.LOCAL_READ_MAX_BYTES: pyarrow reads the retired
+        waves' block rows, the kernel runs bucket by bucket in one
+        thread, and the merged and verbatim buckets are staged as one
+        record. No Spark job runs.
+      - the SPARK plan otherwise: one job cogroups the affected
+        buckets' block rows with their placed rows (so a billion-key
+        probe set never broadcasts), and its write tasks stage the
+        merged and verbatim buckets by bucket.
+    Both stage through the write protocol (kmers_spark/wavewrite.py):
+    whole buckets per file (decode_colocated's contract) and their
+    fresh Bloom sidecars as hidden files plus their block stats, which
+    the driver claims and publishes.
   * commit_rewrite, shared with compact_waves: retired waves' spilled
     stats consolidate into the new wave (rewritten buckets replaced by
     their fresh stats), still-exact Bloom sidecars carry forward, and
@@ -54,10 +65,11 @@ import json
 import os
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import manifest, wavewrite
+from .. import arrowcodecs, manifest, wavewrite
 from ..kernels import bloom as bloomkern
 from ..wavewrite import empty_blocks_arrow
 from .encode import (
@@ -69,6 +81,7 @@ from .encode import (
     migrate_legacy_layout,
     sweep_orphan_waves,
 )
+from . import decode
 from .partitioning import block_sort_by
 
 BLOCK_COLS = [
@@ -109,13 +122,12 @@ def _make_merge_fn(schema: dict[str, str], key: str,
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        from .. import arrowcodecs, blockdecode
+        from .. import blockdecode
 
         if placed.num_rows == 0:  # defensive: blocks are filtered to
             return blocks_tbl.select(BLOCK_COLS)  # affected buckets
         bucket_id = placed.column("bucket")[0].as_py()
         append = placed.filter(pc.invert(placed.column(PROBE).combine_chunks()))
-        arrowcodecs.pin_worker_threads()
         if blocks_tbl.num_rows == 0:
             # committed row-less bucket: encode the appended rows directly
             if append.num_rows == 0:
@@ -158,13 +170,17 @@ def _make_merge_fn(schema: dict[str, str], key: str,
 
 
 def rewrite_buckets(spark: SparkSession, out_dir: str, m: dict,
-                    placed: DataFrame, affected: list[int],
+                    placed: "DataFrame | pa.Table", affected: list[int],
                     n_appended: int) -> dict:
     """Merge `placed` (bucket, key, PROBE and, for appended rows, every
     schema column; restricted to `affected`) into the affected buckets
-    and commit. `n_appended` counts the non-probe rows. Returns
-    {"rows_removed", "buckets_rewritten", "waves_rewritten", "manifest"};
-    rows_removed counts stored rows whose key was probed."""
+    and commit. `n_appended` counts the non-probe rows. A DataFrame
+    runs the Spark plan; a driver-side Arrow table runs the driver plan
+    when the retired waves fit the read budget (module docstring).
+    Returns {"rows_removed", "buckets_rewritten", "waves_rewritten",
+    "manifest", "plan"}; rows_removed counts stored rows whose key was
+    probed, plan is "driver" or "spark"."""
+    local = isinstance(placed, pa.Table)
     aset = set(affected)
     wb = m.get("wave_buckets", {})
     retired = [
@@ -173,10 +189,12 @@ def rewrite_buckets(spark: SparkSession, out_dir: str, m: dict,
     ]
     if not retired and not n_appended:
         return {"rows_removed": 0, "buckets_rewritten": [],
-                "waves_rewritten": [], "manifest": m}
+                "waves_rewritten": [], "manifest": m,
+                "plan": "driver" if local else "spark"}
     key_col = m["key"]
     schema = manifest.ordered_schema(m)
-    old_stats = manifest.block_stats(out_dir, m, buckets=affected)
+    held = {int(b) for w in retired for b in wb.get(w, ())}
+    old_stats = manifest.block_stats(out_dir, m, buckets=sorted(aset | held))
 
     def rows_of(stats_list) -> int:
         for st in stats_list:
@@ -185,35 +203,29 @@ def rewrite_buckets(spark: SparkSession, out_dir: str, m: dict,
         return max((int(st.get("n_rows", 0)) for st in stats_list), default=0)
 
     rows_before = sum(rows_of(old_stats.get(str(b), [])) for b in affected)
-
-    if retired:
-        blocks = spark.read.schema(BLOCK_SCHEMA).parquet(
-            *[os.path.join(out_dir, w) for w in retired]
-        )
-        rewrite = blocks.filter(F.col("bucket").isin(affected))
-        verbatim = blocks.filter(~F.col("bucket").isin(affected))
-    else:
-        rewrite = spark.createDataFrame([], BLOCK_SCHEMA)
-        verbatim = None
     missing = manifest.missing_columns(m, list(schema), old_stats) \
         if m.get("evolved") else {}
+    merge = _make_merge_fn(
+        schema, key_col, m.get("codec_overrides") or {},
+        block_sort_by(m.get("bucket_scheme"), m.get("cluster_by"), key_col),
+        missing, m.get("bloom_columns"), m.get("ndv_columns"))
     new_dir = f"{_blocks_path(out_dir)}/{_wave_name()}"
-    rewritten = (
-        rewrite.groupBy("bucket").cogroup(placed.groupBy("bucket"))
-        .applyInArrow(
-            _make_merge_fn(
-                schema, key_col, m.get("codec_overrides") or {},
-                block_sort_by(m.get("bucket_scheme"), m.get("cluster_by"),
-                              key_col),
-                missing, m.get("bloom_columns"), m.get("ndv_columns")),
-            BLOCK_SCHEMA,
-        )
-    )
-    out = rewritten if verbatim is None else rewritten.unionByName(verbatim)
-    # one partition per hash(bucket): every bucket's block rows land
-    # whole in one file (decode_colocated's contract)
-    stats, key_ranges, _bb, _bc = wavewrite.write_wave(
-        out.repartition(F.col("bucket")), new_dir, schema, key_col)
+    # the read budget: every retired wave's committed payload (a wave
+    # without a bucket list, or a bucket without stats, has no bound)
+    plan = "spark"
+    if local and all(w in wb for w in retired) \
+            and all(str(b) in old_stats for b in held) \
+            and decode._payload_bytes(old_stats, held, schema) \
+            + placed.nbytes <= decode.LOCAL_READ_MAX_BYTES:
+        plan = "driver"
+        published = _write_in_driver(out_dir, retired, affected, placed,
+                                     merge, new_dir, schema, key_col)
+    else:
+        if local:
+            placed = spark.createDataFrame(placed)
+        published = _write_in_spark(spark, out_dir, retired, affected, placed,
+                                    merge, new_dir, schema, key_col)
+    stats, key_ranges, _bb, _bc = published
     # verbatim buckets keep their committed stats
     fresh = {b: stats.get(b, []) for b in affected}
     rows_after = sum(rows_of(fresh[b]) for b in affected)
@@ -228,7 +240,70 @@ def rewrite_buckets(spark: SparkSession, out_dir: str, m: dict,
         "buckets_rewritten": affected,
         "waves_rewritten": retired,
         "manifest": m2,
+        "plan": plan,
     }
+
+
+def _write_in_spark(spark: SparkSession, out_dir: str, retired: list[str],
+                    affected: list[int], placed: DataFrame, merge,
+                    new_dir: str, schema: dict[str, str], key_col: str):
+    """The Spark plan: one job cogroups the affected buckets' block rows
+    with their placed rows, and its write tasks stage the merged and the
+    verbatim buckets. Returns what wavewrite.publish returns."""
+    if retired:
+        blocks = spark.read.schema(BLOCK_SCHEMA).parquet(
+            *[os.path.join(out_dir, w) for w in retired]
+        )
+        rewrite = blocks.filter(F.col("bucket").isin(affected))
+        verbatim = blocks.filter(~F.col("bucket").isin(affected))
+    else:
+        rewrite = spark.createDataFrame([], BLOCK_SCHEMA)
+        verbatim = None
+
+    def merge_in_task(blocks_tbl, placed_tbl):
+        arrowcodecs.pin_worker_threads()
+        return merge(blocks_tbl, placed_tbl)
+
+    rewritten = (
+        rewrite.groupBy("bucket").cogroup(placed.groupBy("bucket"))
+        .applyInArrow(merge_in_task, BLOCK_SCHEMA)
+    )
+    out = rewritten if verbatim is None else rewritten.unionByName(verbatim)
+    # one partition per hash(bucket): every bucket's block rows land
+    # whole in one file (decode_colocated's contract)
+    return wavewrite.write_wave(out.repartition(F.col("bucket")), new_dir,
+                                schema, key_col)
+
+
+def _write_in_driver(out_dir: str, retired: list[str], affected: list[int],
+                     placed: pa.Table, merge, new_dir: str,
+                     schema: dict[str, str], key_col: str):
+    """The driver plan: the retired waves' block rows are read with
+    pyarrow (as decode_colocated's local plan reads them), the merge
+    kernel runs bucket by bucket in this thread, and the merged and the
+    verbatim buckets are staged as one record. Returns what
+    wavewrite.publish returns."""
+    import pyarrow.dataset as pads
+
+    from .. import blockdecode
+
+    empty = empty_blocks_arrow()
+    tables = [
+        frag.to_table(columns=BLOCK_COLS).cast(empty.schema)
+        for w in retired
+        for frag in pads.dataset(os.path.join(out_dir, w),
+                                 format="parquet").get_fragments()
+    ]
+    blocks = dict(blockdecode.split_rows(pa.concat_tables(tables))) \
+        if tables else {}
+    placed_by = dict(blockdecode.split_rows(placed))
+    # one thread: the kernel holds the GIL for most of its work, so a
+    # pool only adds contention
+    merged = [merge(blocks.pop(b, empty), placed_by[b]) for b in affected]
+    rec = wavewrite.stage_blocks(
+        pa.concat_tables([empty, *merged, *blocks.values()]), new_dir,
+        schema, key_col)
+    return wavewrite.publish([rec], new_dir, new_dir)
 
 
 def commit_rewrite(out_dir: str, m: dict, retired: list[str], new_dir: str,

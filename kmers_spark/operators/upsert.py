@@ -13,11 +13,19 @@ The incoming rows are placed and handed to operators/rewrite.py, the
 one merge-on-write path (protocol, crash safety and time travel are
 described there). What is upsert's own:
 
-  * incoming rows are bucketed by the snapshot's OWN rule — the same
-    JVM expressions encode used (salted hot keys and heavy boundary
-    values stay key-deterministic). Externally-bucketed stores are
-    refused: no recorded rule can place a NEW row.
-  * ONE bounded driver collect: the distinct incoming bucket ids.
+  * incoming rows are bucketed by the snapshot's OWN rule (salted hot
+    keys and heavy boundary values stay key-deterministic).
+    Externally-bucketed stores are refused: no recorded rule can place
+    a NEW row.
+  * a driver-local batch (a LocalRelation: createDataFrame of pandas
+    or Arrow data) on a hash store, or on a store range-clustered on
+    its key, comes back by one collect() that launches no job and is
+    placed by the driver mirrors of that rule; on a small store
+    (rewrite.py's read budget) the whole upsert then runs in the
+    driver and launches no Spark job.
+  * any other batch is placed by the JVM expressions encode used, and
+    ONE bounded driver collect fetches the distinct incoming bucket
+    ids.
   * committed but row-less buckets take the same path with an empty
     blocks side: the incoming rows encode directly. Uncommitted bucket
     ids are refused — they mean an in-progress encode whose resume
@@ -33,10 +41,11 @@ rewritten block then materializes the column for the whole bucket.
 """
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import manifest
+from .. import manifest, zonemap
 from . import partitioning
 from .delete import KEY_TYPES, _candidate_pairs
 from .rewrite import PROBE, open_batch_store, rewrite_buckets
@@ -67,10 +76,50 @@ def _place(df: DataFrame, m: dict, key_col: str) -> DataFrame:
     )
 
 
+def _place_in_driver(df: DataFrame, m: dict,
+                     schema: dict[str, str]) -> "pa.Table | None":
+    """The placed rows of a driver-local batch (`df`, already cast to
+    the snapshot schema): the rows come back by one collect(), which a
+    projection over a LocalRelation serves without a Spark job, and are
+    placed by the key mirrors of the snapshot's bucket rule. None when
+    the driver cannot place them: a scheme where upsert also probes
+    other buckets for a key's old rows, a key type without a mirror,
+    or a null key."""
+    key_col = m["key"]
+    ktype = schema[key_col]
+    scheme = m.get("bucket_scheme", partitioning.LEGACY_SCHEME)
+    hashed = scheme in (partitioning.BUCKET_SCHEME, partitioning.LEGACY_SCHEME)
+    on_key = scheme == partitioning.RANGE_SCHEME \
+        and m.get("cluster_by") == key_col
+    if ktype not in KEY_TYPES or not (hashed or on_key):
+        return None
+    # tz-aware timestamps travel as epoch-us ints: collect() would turn
+    # them into naive datetimes in the driver's local time zone
+    rows = df.select(*[
+        F.unix_micros(c).alias(c) if t == "timestamp" else F.col(c)
+        for c, t in schema.items()
+    ]).collect()
+    keys = [r[key_col] for r in rows]
+    if any(k is None for k in keys):
+        return None
+    if hashed:
+        hot = m.get("hot_keys") or {}
+        buckets = [partitioning.bucket_for_key(k, m["num_buckets"], hot,
+                                               scheme=scheme) for k in keys]
+    else:
+        buckets = [partitioning.range_bucket_for_key(
+            k, m["range_boundaries"], ktype) for k in keys]
+    cols = {c: pa.array([r[i] for r in rows], zonemap.arrow_type(t))
+            for i, (c, t) in enumerate(schema.items())}
+    return pa.table({"bucket": pa.array(buckets, pa.int32()), **cols,
+                     PROBE: pa.array([False] * len(rows), pa.bool_())})
+
+
 def upsert_table(spark: SparkSession, out_dir: str, df: DataFrame) -> dict:
     """Merge the incoming rows into the snapshot by key; returns
     {"rows_inserted", "rows_replaced", "buckets_rewritten",
-    "waves_rewritten", "manifest"}."""
+    "waves_rewritten", "manifest", "plan"} (plan: "driver" or "spark",
+    see operators/rewrite.py)."""
     m = open_batch_store(out_dir, "upsert_table")
     key_col = m["key"]
     schema = manifest.ordered_schema(m)
@@ -81,10 +130,16 @@ def upsert_table(spark: SparkSession, out_dir: str, df: DataFrame) -> dict:
             f"incoming columns must match the snapshot schema exactly; "
             f"missing={sorted(missing)} extra={sorted(extra)}"
         )
+    local = df.isLocal()  # a LocalRelation: the rows are in the driver
     df = df.select(*[
         F.col(c).cast(manifest.SPARK_DDL_TYPES[t]).alias(c)
         for c, t in schema.items()
     ])
+    placed = _place_in_driver(df, m, schema) if local else None
+    if placed is not None:
+        return _merge(spark, out_dir, m, placed,
+                      sorted(set(placed.column("bucket").to_pylist())),
+                      placed.num_rows)
 
     bdf = _place(df, m, key_col).withColumn(PROBE, F.lit(False))
     cl = m.get("cluster_by")
@@ -127,23 +182,31 @@ def upsert_table(spark: SparkSession, out_dir: str, df: DataFrame) -> dict:
             int(r["bucket"]) for r in bdf.select("bucket").distinct().collect()
         )
         n_in = bdf.filter(~F.col(PROBE)).count()
-        if n_in == 0:
-            return {"rows_inserted": 0, "rows_replaced": 0,
-                    "buckets_rewritten": [], "waves_rewritten": [],
-                    "manifest": m}
-        committed = {int(b) for b in m.get("committed_buckets", [])}
-        born = [b for b in affected if b not in committed]
-        if born:
-            # a complete snapshot commits EVERY bucket id (row-less ones
-            # included); an uncommitted id means an in-progress encode
-            # whose resume would re-encode those buckets from source and
-            # duplicate the upserted keys in a second wave
-            raise ValueError(
-                f"buckets {born} are not committed — the snapshot has an "
-                "in-progress encode; resume it to completion before upserting"
-            )
-        res = rewrite_buckets(spark, out_dir, m, bdf, affected, n_in)
-        return {"rows_inserted": n_in, "rows_replaced": res.pop("rows_removed"),
-                **res}
+        return _merge(spark, out_dir, m, bdf, affected, n_in)
     finally:
         bdf.unpersist()
+
+
+def _merge(spark: SparkSession, out_dir: str, m: dict,
+           placed: "DataFrame | pa.Table", affected: list[int],
+           n_in: int) -> dict:
+    """Both plans' tail: refuse uncommitted buckets, then rewrite."""
+    if n_in == 0:
+        return {"rows_inserted": 0, "rows_replaced": 0,
+                "buckets_rewritten": [], "waves_rewritten": [],
+                "manifest": m,
+                "plan": "driver" if isinstance(placed, pa.Table) else "spark"}
+    committed = {int(b) for b in m.get("committed_buckets", [])}
+    born = [b for b in affected if b not in committed]
+    if born:
+        # a complete snapshot commits EVERY bucket id (row-less ones
+        # included); an uncommitted id means an in-progress encode
+        # whose resume would re-encode those buckets from source and
+        # duplicate the upserted keys in a second wave
+        raise ValueError(
+            f"buckets {born} are not committed — the snapshot has an "
+            "in-progress encode; resume it to completion before upserting"
+        )
+    res = rewrite_buckets(spark, out_dir, m, placed, affected, n_in)
+    return {"rows_inserted": n_in, "rows_replaced": res.pop("rows_removed"),
+            **res}

@@ -391,3 +391,68 @@ def test_refusals_and_noop(spark, tmp_path):
     with pytest.raises(ValueError, match="readStream"):
         decode_new_waves(spark, out, str(tmp_path / "sink"),
                          str(tmp_path / "st.json"))
+
+
+# Spark jobs of a compact_stream over 3 generations (one evolved):
+# the merge's read and its write. Counting each bucket's inline stat
+# entries with a job of its own cost 2 more.
+COMPACT_STREAM_JOBS = 2
+
+
+@pytest.mark.parametrize("legacy", [False, True], ids=["watermarked", "legacy"])
+def test_compact_stream_jobs_and_inline_stats(spark, tmp_path, legacy):
+    """The merged generations' inline stat entries are counted from the
+    manifest (no Spark job): each bucket's list becomes the merged
+    wave's fresh stats followed by the kept generation's entries —
+    what counting the merged waves' block rows gives. A legacy
+    manifest, whose evolution has no watermark, counts the block rows
+    in the driver instead."""
+    import os
+
+    import pyarrow.dataset as pads
+
+    from kmers_spark import wavewrite
+    from tests.test_local_read import _jobs_of
+
+    src1, src2 = str(tmp_path / "s1"), str(tmp_path / "s2")
+    out, ck1, ck2 = (str(tmp_path / n) for n in ("snap", "c1", "c2"))
+    df = pages.pages_df(spark, 600, seed=83, partitions=2).cache()
+    datasource.register(spark)
+    first, second, third = _thirds(df)
+    first.write.parquet(src1)
+    _run_sink(spark, src1, df.schema, out, ck1)
+    manifest.evolve_schema(out, {"score": "double"})
+    for part in (second, third):
+        part = part.withColumn("score", F.length("text").cast("double"))
+        part.write.mode("append").parquet(src2)
+        _run_sink(spark, src2, part.schema, out, ck2, stream_id="gen2")
+    if legacy:
+        def drop_watermarks(cur):
+            cur.pop("evolution_waves", None)
+            return cur
+
+        manifest.commit(out, drop_watermarks)
+    m0 = manifest.load(out)
+    assert len(m0["wave_dirs"]) == 3 and "stats_files" not in m0
+    old = m0["wave_dirs"][:2]
+    rows = pads.dataset([pads.dataset(os.path.join(out, d), format="parquet")
+                         for d in old]).to_table(columns=["bucket"])
+    old_len: dict[int, int] = {}
+    for b in rows.column("bucket").to_pylist():
+        old_len[b] = old_len.get(b, 0) + 1
+
+    res, jobs = _jobs_of(spark, lambda: compact_stream(spark, out, keep_last=1))
+    assert res["merged_waves"] == old
+    assert jobs == COMPACT_STREAM_JOBS
+    m1 = manifest.load(out)
+    schema = manifest.ordered_schema(m1)
+    merged = pads.dataset(os.path.join(out, m1["wave_dirs"][0]),
+                          format="parquet").to_table()
+    fresh, _ranges = wavewrite.blockstats(merged, schema, m1["key"])
+    assert sorted(fresh) == res["buckets"]
+    for b in res["buckets"]:
+        head = sorted(fresh[b], key=lambda s: s["column"])
+        got = m1["blocks"][str(b)]
+        assert sorted(got[:len(head)], key=lambda s: s["column"]) == head
+        assert got[len(head):] == m0["blocks"][str(b)][old_len[b]:]
+    assert decode_colocated(spark, out).count() == 600

@@ -689,6 +689,43 @@ def test_bucket_for_key_matches_spark_expression(spark):
     for u in urls:
         assert partitioning.bucket_for_key(u, 16, hot) == expected[u], u
 
+    # int64 keys: the host is the key's string form, but a hot key's
+    # salt hashes the typed bigint column
+    ids = [7, 0, -3, 2**40 + 5, *range(100, 140)]
+    hot = {"7": 5, "-3": 2}
+    df = spark.createDataFrame([(i,) for i in ids], "id bigint")
+    expected = {
+        r["id"]: r["bucket"]
+        for r in partitioning.with_bucket(df, 16, hot, url_col="id").collect()
+    }
+    for i in ids:
+        assert partitioning.bucket_for_key(i, 16, hot) == expected[i], i
+
+
+def test_hot_int64_key_lookup_and_delete(spark, tmp_path):
+    """A hot int64 key's rows are salted by the typed key: a lookup
+    finds every one of them, and a key-list delete (driver plan)
+    removes every one of them."""
+    out = str(tmp_path / "snap_hot_int")
+    df = spark.range(1000).select(
+        F.when(F.col("id") < 500, F.lit(7)).otherwise(F.col("id") + 1000)
+        .alias("id"),
+        F.format_string("v-%d", F.col("id")).alias("v"),
+    )
+    enc.encode_table(df, out, key="id", num_buckets=4, detect_skew=True)
+    m = manifest.load(out)
+    assert m["hot_keys"].get("7", 0) > 1
+    assert dec.lookup_keys(spark, out, ["7"]).count() == 500
+    assert dec.lookup_keys(spark, out, ["1500"]).count() == 1
+
+    from kmers_spark.operators.delete import delete_keys
+
+    res = delete_keys(spark, out, [7, 1500])
+    assert res["plan"] == "driver"
+    assert res["rows_deleted"] == 501
+    assert dec.lookup_keys(spark, out, ["7", "1500"]).count() == 0
+    assert dec.decode_table(spark, out).count() == 499
+
 
 def test_lookup_keys_key_range_pruning(spark, pages_df, tmp_path):
     """Per-bucket key ranges recorded at commit prune buckets whose

@@ -11,12 +11,14 @@ import os
 import pyarrow as pa
 import pyarrow.dataset as pads
 import pytest
+from pyspark.sql import functions as F
 
 from kmers_spark import datasource, manifest, pages, wavewrite
 from kmers_spark.kernels import bloom
-from kmers_spark.operators import partitioning
+from kmers_spark.operators import decode, partitioning
 from kmers_spark.operators.decode import decode_table, lookup_keys
 from kmers_spark.operators.delete import delete_keys
+from kmers_spark.operators.upsert import upsert_table
 from kmers_spark.operators.encode import (
     encode_table,
     make_encode_fn_arrow,
@@ -110,30 +112,44 @@ def _wave_dirs_on_disk(out: str) -> set[str]:
     return {f"blocks/{n}" for n in os.listdir(root) if n.startswith("w_")}
 
 
-@pytest.mark.parametrize("op", ["encode", "delete"])
-def test_failed_commit_leaves_only_an_orphan(spark, tmp_path, op):
+@pytest.mark.parametrize("op,plan", [
+    ("encode", None), ("delete", "driver"), ("delete", "spark"),
+    ("upsert", "driver"), ("upsert", "spark"),
+], ids=["encode", "delete", "delete-spark", "upsert", "upsert-spark"])
+def test_failed_commit_leaves_only_an_orphan(spark, tmp_path, monkeypatch,
+                                             op, plan):
     out = str(tmp_path / "snap")
     df = pages.pages_df(spark, 400, seed=11, partitions=2).cache()
     encode_table(df, out, num_buckets=8, detect_skew=False, commit_every=4,
                  fail_buckets_over=4 if op == "encode" else None)
     urls = sorted(r["url"] for r in df.select("url").collect())
+    # a driver-local batch, so that the driver plan can run
+    batch = spark.createDataFrame(
+        df.filter(F.col("url").isin(urls[:3])).withColumn("lang", F.lit("xx"))
+        .toArrow())
     version = manifest.current_version(out)
     before = sorted(decode_table(spark, out).collect())
     registered = set(manifest.load(out)["wave_dirs"])
+    if plan == "spark":
+        monkeypatch.setattr(decode, "LOCAL_READ_MAX_BYTES", 0)
     prev = manifest.set_publish_backend(_FailingBackend())
     try:
         with pytest.raises(OSError, match="injected CAS failure"):
             if op == "encode":
                 encode_table(df, out, num_buckets=8, detect_skew=False,
                              commit_every=4)
-            else:
+            elif op == "delete":
                 delete_keys(spark, out, urls[:3])
+            else:
+                upsert_table(spark, out, batch)
     finally:
         manifest.set_publish_backend(prev)
     assert manifest.current_version(out) == version
     assert sorted(decode_table(spark, out).collect()) == before
-    if op == "delete":
-        assert lookup_keys(spark, out, urls[:3]).count() == 3
+    if op != "encode":
+        got = lookup_keys(spark, out, urls[:3]).collect()
+        assert sorted(r["url"] for r in got) == urls[:3]
+        assert {r["lang"] for r in got} != {"xx"}
     orphans = _wave_dirs_on_disk(out) - registered
     assert len(orphans) == 1
     sweep_orphan_waves(out, grace_sec=0)
