@@ -33,18 +33,6 @@ def pin_worker_threads() -> None:
         _PINNED = True
 
 
-def pinned(kernel):
-    """A one-table `kernel` behind pin_worker_threads: the Spark-side
-    wrapper of a kernel that may also run in the driver, whose Arrow
-    pools stay whole. (applyInArrow reads the wrapper's arity.)"""
-
-    def run(table):
-        pin_worker_threads()
-        return kernel(table)
-
-    return run
-
-
 def _freq_order_dictionary(indices: np.ndarray, dict_arr: pa.Array):
     """Reorder an Arrow dictionary by (-count, value-bytes); returns
     (perm-mapped codes, dictionary as list[bytes]) matching

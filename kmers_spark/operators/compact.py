@@ -53,6 +53,8 @@ import json
 import os
 import time
 
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -121,36 +123,6 @@ def _make_merge_fn_arrow(schema: dict[str, str], key: str,
     return fn
 
 
-def _inline_entries(out_dir: str, m: dict, old: list[str],
-                    cols: list[str]) -> dict[int, int]:
-    """{bucket: inline stat entries the `old` generations contributed}.
-    Commit order == list order, so these entries are a PREFIX of each
-    bucket's inline list. A generation that spilled its stats
-    contributed none; any other contributed one entry per column it
-    wrote, for each bucket in its wave_buckets list: every schema
-    column but those wave_allowance says it predates. An evolution
-    without a recorded watermark cannot say which generations predate
-    it, so that store's blocks are counted instead."""
-    spilled = {rel.rsplit("/", 1)[0] for rel in m.get("stats_files", [])}
-    inline = [d for d in old if d not in spilled]
-    counts: dict[int, int] = {}
-    if set(m.get("evolved_columns", ())) - set(m.get("evolution_waves", {})):
-        import pyarrow.dataset as pads
-
-        for d in inline:
-            t = pads.dataset(os.path.join(out_dir, d),
-                             format="parquet").to_table(columns=["bucket"])
-            for b in t.column("bucket").to_pylist():
-                counts[b] = counts.get(b, 0) + 1
-        return counts
-    allow = manifest.wave_allowance(m, cols) or {}
-    for d in inline:
-        n = len(cols) - len(allow.get(d.rsplit("/", 1)[-1], ()))
-        for b in m["wave_buckets"][d]:
-            counts[int(b)] = counts.get(int(b), 0) + n
-    return counts
-
-
 def compact_stream(spark: SparkSession, out_dir: str, *,
                    keep_last: int = 0) -> dict:
     """Merge a streamed snapshot's committed generations (all but the
@@ -193,7 +165,23 @@ def compact_stream(spark: SparkSession, out_dir: str, *,
         .parquet(*[os.path.join(out_dir, d) for d in old])
         .withColumn("_gen", F.input_file_name())
     )
-    old_inline_len = _inline_entries(out_dir, m, old, list(schema_order))
+    # inline-stat attribution for the swap: commit order == list order,
+    # so the entries old generations contributed are a PREFIX of each
+    # bucket's inline list, one per block row. Waves that spilled their
+    # stats contributed none. Counted in the driver from the bucket
+    # column alone (payloads pruned): no Spark job.
+    spilled_old = {
+        rel.rsplit("/", 1)[0] for rel in m.get("stats_files", [])
+    } & old_set
+    inline_old = [d for d in old if d not in spilled_old]
+    old_inline_len: dict[int, int] = {}
+    if inline_old:
+        buckets = pads.dataset([
+            pads.dataset(os.path.join(out_dir, d), format="parquet")
+            for d in inline_old
+        ]).to_table(columns=["bucket"]).column("bucket")
+        for r in pc.value_counts(buckets).to_pylist():
+            old_inline_len[int(r["values"])] = int(r["counts"])
 
     new_dir = f"{_blocks_path(out_dir)}/{_wave_name()}"
     merged = blocks.groupBy("bucket").applyInArrow(

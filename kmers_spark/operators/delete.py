@@ -20,9 +20,10 @@ Scale shape (what bounds what at 100 TB):
     externally-bucketed stores fall back to the recorded per-bucket
     [key_min, key_max] ranges.
   * a key LIST is placed in the driver (decode.key_buckets, the rule
-    lookup_keys uses) and hands the rewrite driver-side probe rows:
-    on a small store (rewrite.py's read budget) the whole delete then
-    runs in the driver and launches no Spark job.
+    lookup_keys uses) when the key alone places a row and its probe
+    rows fit rewrite.driver_room: the whole delete then runs in the
+    driver and launches no Spark job. Any other list becomes a key
+    DataFrame.
   * a key DATAFRAME (a dedup job's output) never leaves the executors:
     the same rule runs as the JVM expressions encode used, or as a
     broadcast range join, and ONE bounded driver collect fetches the
@@ -38,7 +39,7 @@ from pyspark.sql import functions as F
 
 from .. import manifest, zonemap
 from . import decode, partitioning
-from .rewrite import PROBE, open_batch_store, rewrite_buckets
+from .rewrite import PROBE, driver_room, open_batch_store, rewrite_buckets
 
 # probes join/compare against the key column; same restriction as the
 # manifest key-range stats (string and int64 keys carry ranges)
@@ -83,23 +84,43 @@ def _candidate_pairs(spark: SparkSession, kdf: DataFrame, m: dict,
     return pairs.select(F.col("bucket").cast("int").alias("bucket"), key_col)
 
 
-def _place_in_driver(m: dict, keys: list, ktype: str) -> "pa.Table | None":
-    """A key list's probe rows (bucket, key, PROBE), placed in the
-    driver by decode.key_buckets over the committed buckets; None when
-    a key is not of the key column's Python type (str, or int for an
-    int64 key), which the Spark plan's cast then judges."""
+def _checked_keys(keys, ktype: str) -> list:
+    """A key list's distinct non-null keys; a TypeError names the first
+    key that is not of the key column's Python type (str, or int for an
+    int64 key), as Spark's schema check would."""
     want = str if ktype == "string" else int
     keys = [k for k in dict.fromkeys(keys) if k is not None]
-    if not all(type(k) is want for k in keys):
+    bad = next((k for k in keys if type(k) is not want), None)
+    if bad is not None:
+        raise TypeError(
+            f"delete_keys: key {bad!r} ({type(bad).__name__}) does not "
+            f"match the {ktype} key column"
+        )
+    return keys
+
+
+def _place_in_driver(out_dir: str, m: dict, keys: list,
+                     ktype: str) -> "pa.Table | None":
+    """A key list's probe rows (bucket, key, PROBE), placed in the
+    driver by decode.key_buckets over the committed buckets; None when
+    the delete runs on Spark: the key does not place a row (its
+    candidates would be every bucket whose key range may hold it), or
+    the probe rows do not fit rewrite.driver_room."""
+    if not partitioning.key_places(m):
+        return None
+    room = driver_room(out_dir, m)
+    arr = pa.array(keys, zonemap.arrow_type(ktype))
+    if arr.nbytes > room:  # before any per-key work
         return None
     committed = {int(b) for b in m.get("committed_buckets", [])}
-    pairs = [(b, k) for k in keys for b in decode.key_buckets(m, k)
-             if b in committed]
-    return pa.table({
-        "bucket": pa.array([b for b, _k in pairs], pa.int32()),
-        m["key"]: pa.array([k for _b, k in pairs], zonemap.arrow_type(ktype)),
-        PROBE: pa.array([True] * len(pairs), pa.bool_()),
+    placed = [(b, i) for i, k in enumerate(keys)
+              for b in decode.key_buckets(m, k) if b in committed]
+    placed = pa.table({
+        "bucket": pa.array([b for b, _i in placed], pa.int32()),
+        m["key"]: arr.take(pa.array([i for _b, i in placed], pa.int64())),
+        PROBE: pa.array([True] * len(placed), pa.bool_()),
     })
+    return placed if placed.nbytes <= room else None
 
 
 def delete_keys(spark: SparkSession, out_dir: str,
@@ -129,24 +150,23 @@ def delete_keys(spark: SparkSession, out_dir: str,
         res = rewrite_buckets(spark, out_dir, m, probes, affected, 0)
         return {"rows_deleted": res.pop("rows_removed"), **res}
 
-    if isinstance(keys, DataFrame):
-        if key_col in keys.columns:
-            kdf = keys.select(key_col)
-        elif len(keys.columns) == 1:
-            kdf = keys.select(F.col(keys.columns[0]).alias(key_col))
-        else:
-            raise ValueError(
-                f"keys DataFrame must have one column or one named "
-                f"{key_col!r}; got {keys.columns}"
-            )
-    else:
-        keys = list(keys)
-        placed = _place_in_driver(m, keys, ktype)
+    if not isinstance(keys, DataFrame):
+        keys = _checked_keys(keys, ktype)
+        placed = _place_in_driver(out_dir, m, keys, ktype)
         if placed is not None:
             return rewrite(placed, sorted(set(
                 placed.column("bucket").to_pylist())), "driver")
-        kdf = spark.createDataFrame(
+        keys = spark.createDataFrame(
             [(k,) for k in keys], f"`{key_col}` {spark_type}"
+        )
+    if key_col in keys.columns:
+        kdf = keys.select(key_col)
+    elif len(keys.columns) == 1:
+        kdf = keys.select(F.col(keys.columns[0]).alias(key_col))
+    else:
+        raise ValueError(
+            f"keys DataFrame must have one column or one named "
+            f"{key_col!r}; got {keys.columns}"
         )
     kdf = (
         kdf.select(F.col(key_col).cast(spark_type).alias(key_col))

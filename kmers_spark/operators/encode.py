@@ -192,9 +192,14 @@ def encode_blocks_df(bucketed: DataFrame, schema: dict[str, str], key: str,
     sort saved. The groupBy path stays; presorted=True remains the win
     where order already exists (the survivors of a rewrite that appends
     nothing)."""
-    return bucketed.groupBy("bucket").applyInArrow(
-        arrowcodecs.pinned(make_encode_fn_arrow(schema, key, codec_overrides)),
-        BLOCK_SCHEMA)
+    encode = make_encode_fn_arrow(schema, key, codec_overrides)
+
+    def encode_in_task(table):
+        arrowcodecs.pin_worker_threads()
+        return encode(table)
+
+    return bucketed.groupBy("bucket").applyInArrow(encode_in_task,
+                                                   BLOCK_SCHEMA)
 
 
 def plan_buckets(df: DataFrame, num_buckets: int, hot_keys: dict[str, int],
@@ -632,14 +637,17 @@ def encode_table(
             # (Iceberg manifest-list discipline): a crash between write
             # and commit leaves an orphan dir that readers never see.
             wave_dir = f"{_blocks_path(out_dir)}/{_wave_name()}"
+            encode = wavewrite.with_blooms(
+                make_encode_fn_arrow(schema, key, codec_overrides,
+                                     sort_by=sort_by, ndv_cols=eff_ndv_cols),
+                schema, key, eff_bloom_cols)
+
+            def encode_in_task(table):
+                arrowcodecs.pin_worker_threads()
+                return encode(table)
+
             blocks = wave_df.groupBy("bucket").applyInArrow(
-                arrowcodecs.pinned(wavewrite.with_blooms(
-                    make_encode_fn_arrow(schema, key, codec_overrides,
-                                         sort_by=sort_by,
-                                         ndv_cols=eff_ndv_cols),
-                    schema, key, eff_bloom_cols)),
-                BLOCK_SCHEMA,
-            )
+                encode_in_task, BLOCK_SCHEMA)
             stats, key_ranges, bloom_buckets, bloom_cols = \
                 wavewrite.write_wave(blocks, wave_dir, schema, key)
             # hash-empty buckets commit too (else they stay pending

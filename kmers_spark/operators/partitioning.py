@@ -67,6 +67,16 @@ def block_sort_by(scheme: str | None, cluster_by, key: str) -> list[str] | None:
     return None
 
 
+def key_places(m: dict) -> bool:
+    """Does the key alone place a row of the snapshot `m`, in exactly
+    one bucket? The hash schemes, and range bucketing on the key
+    itself; under every other scheme a row's bucket follows other
+    columns (or no recorded rule at all)."""
+    scheme = m.get("bucket_scheme", LEGACY_SCHEME)
+    return scheme in (BUCKET_SCHEME, LEGACY_SCHEME) or (
+        scheme == RANGE_SCHEME and m.get("cluster_by") == m["key"])
+
+
 def with_host(df: DataFrame, url_col: str = "url",
               scheme: str = BUCKET_SCHEME) -> DataFrame:
     """Grouping host for bucketing: the url's host when the key is

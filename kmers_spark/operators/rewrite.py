@@ -31,13 +31,15 @@ upsert whose placed rows are all probes. The protocol:
   * two plans run that kernel; they differ only in how the new wave's
     block records are produced, and write identical block rows:
       - the DRIVER plan, when the placed rows are in the driver (a
-        key list, a LocalRelation batch) and the retired waves'
+        key list, a LocalRelation batch, on a scheme where the key
+        alone places a row) and the store is small: every wave's
         committed payload (block-stats enc_nbytes over every bucket
-        in their wave_buckets lists) plus the batch's Arrow bytes is
-        at most decode.LOCAL_READ_MAX_BYTES: pyarrow reads the retired
-        waves' block rows, the kernel runs bucket by bucket in one
-        thread, and the merged and verbatim buckets are staged as one
-        record. No Spark job runs.
+        in its wave_buckets list) plus the placed rows' Arrow bytes
+        is at most decode.LOCAL_READ_MAX_BYTES (driver_room, checked
+        before anything is placed). pyarrow reads the retired waves'
+        block rows, the kernel runs bucket by bucket in one thread,
+        and the merged and verbatim buckets are staged as one record.
+        No Spark job runs.
       - the SPARK plan otherwise: one job cogroups the affected
         buckets' block rows with their placed rows (so a billion-key
         probe set never broadcasts), and its write tasks stage the
@@ -62,6 +64,7 @@ them (operators/compact.py, which keeps its own streamed swap).
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
 
@@ -109,6 +112,26 @@ def open_batch_store(out_dir: str, op: str) -> dict:
     m = migrate_legacy_layout(out_dir, m)
     sweep_orphan_waves(out_dir)
     return m
+
+
+def driver_room(out_dir: str, m: dict) -> float:
+    """What a mutation's placed rows may take of the driver plan's read
+    budget: decode.LOCAL_READ_MAX_BYTES less every wave's committed
+    payload, which bounds what any rewrite of the store retires. The
+    mutations check it before placing an input in the driver. -inf when
+    nothing cheap bounds that payload: a wave without a bucket list, a
+    bucket without stats, or stats spilled out of the manifest
+    (bounding those would open every stats file)."""
+    wb = m.get("wave_buckets", {})
+    waves = m.get("wave_dirs", [])
+    if m.get("stats_files") or not all(w in wb for w in waves):
+        return -math.inf
+    held = {int(b) for w in waves for b in wb[w]}
+    stats = manifest.block_stats(out_dir, m)
+    if not all(str(b) in stats for b in held):
+        return -math.inf
+    return decode.LOCAL_READ_MAX_BYTES - decode._payload_bytes(
+        stats, held, manifest.ordered_schema(m))
 
 
 def _make_merge_fn(schema: dict[str, str], key: str,
@@ -175,12 +198,12 @@ def rewrite_buckets(spark: SparkSession, out_dir: str, m: dict,
     """Merge `placed` (bucket, key, PROBE and, for appended rows, every
     schema column; restricted to `affected`) into the affected buckets
     and commit. `n_appended` counts the non-probe rows. A DataFrame
-    runs the Spark plan; a driver-side Arrow table runs the driver plan
-    when the retired waves fit the read budget (module docstring).
-    Returns {"rows_removed", "buckets_rewritten", "waves_rewritten",
-    "manifest", "plan"}; rows_removed counts stored rows whose key was
-    probed, plan is "driver" or "spark"."""
-    local = isinstance(placed, pa.Table)
+    runs the Spark plan, a driver-side Arrow table the driver plan
+    (which the callers hand over only within driver_room; module
+    docstring). Returns {"rows_removed", "buckets_rewritten",
+    "waves_rewritten", "manifest", "plan"}; rows_removed counts stored
+    rows whose key was probed, plan is "driver" or "spark"."""
+    plan = "driver" if isinstance(placed, pa.Table) else "spark"
     aset = set(affected)
     wb = m.get("wave_buckets", {})
     retired = [
@@ -189,8 +212,7 @@ def rewrite_buckets(spark: SparkSession, out_dir: str, m: dict,
     ]
     if not retired and not n_appended:
         return {"rows_removed": 0, "buckets_rewritten": [],
-                "waves_rewritten": [], "manifest": m,
-                "plan": "driver" if local else "spark"}
+                "waves_rewritten": [], "manifest": m, "plan": plan}
     key_col = m["key"]
     schema = manifest.ordered_schema(m)
     held = {int(b) for w in retired for b in wb.get(w, ())}
@@ -210,19 +232,10 @@ def rewrite_buckets(spark: SparkSession, out_dir: str, m: dict,
         block_sort_by(m.get("bucket_scheme"), m.get("cluster_by"), key_col),
         missing, m.get("bloom_columns"), m.get("ndv_columns"))
     new_dir = f"{_blocks_path(out_dir)}/{_wave_name()}"
-    # the read budget: every retired wave's committed payload (a wave
-    # without a bucket list, or a bucket without stats, has no bound)
-    plan = "spark"
-    if local and all(w in wb for w in retired) \
-            and all(str(b) in old_stats for b in held) \
-            and decode._payload_bytes(old_stats, held, schema) \
-            + placed.nbytes <= decode.LOCAL_READ_MAX_BYTES:
-        plan = "driver"
+    if plan == "driver":
         published = _write_in_driver(out_dir, retired, affected, placed,
                                      merge, new_dir, schema, key_col)
     else:
-        if local:
-            placed = spark.createDataFrame(placed)
         published = _write_in_spark(spark, out_dir, retired, affected, placed,
                                     merge, new_dir, schema, key_col)
     stats, key_ranges, _bb, _bc = published

@@ -18,11 +18,13 @@ described there). What is upsert's own:
     Externally-bucketed stores are refused: no recorded rule can place
     a NEW row.
   * a driver-local batch (a LocalRelation: createDataFrame of pandas
-    or Arrow data) on a hash store, or on a store range-clustered on
-    its key, comes back by one collect() that launches no job and is
-    placed by the driver mirrors of that rule; on a small store
-    (rewrite.py's read budget) the whole upsert then runs in the
-    driver and launches no Spark job.
+    or Arrow data) on a scheme where the key alone places a row (hash,
+    or range-clustered on the key) and a small store (rewrite.py's
+    driver_room, checked first) comes back by collect(), which
+    launches no job, and is placed by the driver mirrors of that rule;
+    a long batch is sized by its first rows, so no more rows are
+    collected than could fit. When it fits, the whole upsert runs in
+    the driver and launches no Spark job.
   * any other batch is placed by the JVM expressions encode used, and
     ONE bounded driver collect fetches the distinct incoming bucket
     ids.
@@ -48,7 +50,7 @@ from pyspark.sql import functions as F
 from .. import manifest, zonemap
 from . import partitioning
 from .delete import KEY_TYPES, _candidate_pairs
-from .rewrite import PROBE, open_batch_store, rewrite_buckets
+from .rewrite import PROBE, driver_room, open_batch_store, rewrite_buckets
 
 
 def _place(df: DataFrame, m: dict, key_col: str) -> DataFrame:
@@ -76,43 +78,71 @@ def _place(df: DataFrame, m: dict, key_col: str) -> DataFrame:
     )
 
 
-def _place_in_driver(df: DataFrame, m: dict,
+# a local batch comes back in one collect() when it has at most this
+# many rows; a longer one is sized by them first (_place_in_driver)
+SLICE_ROWS = 64
+
+
+def _place_in_driver(df: DataFrame, cast: dict, out_dir: str, m: dict,
                      schema: dict[str, str]) -> "pa.Table | None":
-    """The placed rows of a driver-local batch (`df`, already cast to
-    the snapshot schema): the rows come back by one collect(), which a
-    projection over a LocalRelation serves without a Spark job, and are
+    """The placed rows of a driver-local batch `df`, each column
+    projected by its `cast` to the snapshot schema: the rows come back
+    by collect(), which a projection over a LocalRelation serves
+    without a Spark job, and are
     placed by the key mirrors of the snapshot's bucket rule. None when
-    the driver cannot place them: a scheme where upsert also probes
-    other buckets for a key's old rows, a key type without a mirror,
-    or a null key."""
+    the upsert runs on Spark: a scheme where the key does not place a
+    row (upsert also probes other buckets for a key's old rows), a key
+    type without a mirror, a null key, or placed rows that do not fit
+    rewrite.driver_room. A batch of more than SLICE_ROWS rows is sized
+    by its first SLICE_ROWS before more are collected: no more rows
+    than their mean size says could fit."""
     key_col = m["key"]
     ktype = schema[key_col]
-    scheme = m.get("bucket_scheme", partitioning.LEGACY_SCHEME)
-    hashed = scheme in (partitioning.BUCKET_SCHEME, partitioning.LEGACY_SCHEME)
-    on_key = scheme == partitioning.RANGE_SCHEME \
-        and m.get("cluster_by") == key_col
-    if ktype not in KEY_TYPES or not (hashed or on_key):
+    if ktype not in KEY_TYPES or not partitioning.key_places(m):
         return None
+    room = driver_room(out_dir, m)
+    if room <= 0:
+        return None
+    scheme = m.get("bucket_scheme", partitioning.LEGACY_SCHEME)
+    hot = m.get("hot_keys") or {}
+
+    def place(rows) -> "pa.Table | None":
+        keys = [r[key_col] for r in rows]
+        if any(k is None for k in keys):
+            return None
+        if scheme == partitioning.RANGE_SCHEME:
+            buckets = [partitioning.range_bucket_for_key(
+                k, m["range_boundaries"], ktype) for k in keys]
+        else:
+            buckets = [partitioning.bucket_for_key(
+                k, m["num_buckets"], hot, scheme=scheme) for k in keys]
+        cols = {c: pa.array([r[i] for r in rows], zonemap.arrow_type(t))
+                for i, (c, t) in enumerate(schema.items())}
+        return pa.table({"bucket": pa.array(buckets, pa.int32()), **cols,
+                         PROBE: pa.array([False] * len(rows), pa.bool_())})
+
     # tz-aware timestamps travel as epoch-us ints: collect() would turn
     # them into naive datetimes in the driver's local time zone
-    rows = df.select(*[
-        F.unix_micros(c).alias(c) if t == "timestamp" else F.col(c)
-        for c, t in schema.items()
-    ]).collect()
-    keys = [r[key_col] for r in rows]
-    if any(k is None for k in keys):
-        return None
-    if hashed:
-        hot = m.get("hot_keys") or {}
-        buckets = [partitioning.bucket_for_key(k, m["num_buckets"], hot,
-                                               scheme=scheme) for k in keys]
-    else:
-        buckets = [partitioning.range_bucket_for_key(
-            k, m["range_boundaries"], ktype) for k in keys]
-    cols = {c: pa.array([r[i] for r in rows], zonemap.arrow_type(t))
-            for i, (c, t) in enumerate(schema.items())}
-    return pa.table({"bucket": pa.array(buckets, pa.int32()), **cols,
-                     PROBE: pa.array([False] * len(rows), pa.bool_())})
+    proj = [F.unix_micros(e).alias(c) if schema[c] == "timestamp"
+            else e.alias(c) for c, e in cast.items()]
+
+    def collect(n: int) -> list:
+        # limit first: the projection then folds over n rows, not all
+        return df.limit(n).select(*proj).collect()
+
+    rows = collect(SLICE_ROWS + 1)
+    if len(rows) > SLICE_ROWS:
+        first = place(rows[:SLICE_ROWS])
+        if first is None or first.nbytes > room:
+            return None
+        cap = int(room * SLICE_ROWS // max(first.nbytes, 1))
+        if cap <= SLICE_ROWS:
+            return None
+        rows = collect(cap + 1)
+        if len(rows) > cap:
+            return None
+    placed = place(rows)
+    return placed if placed is not None and placed.nbytes <= room else None
 
 
 def upsert_table(spark: SparkSession, out_dir: str, df: DataFrame) -> dict:
@@ -130,17 +160,17 @@ def upsert_table(spark: SparkSession, out_dir: str, df: DataFrame) -> dict:
             f"incoming columns must match the snapshot schema exactly; "
             f"missing={sorted(missing)} extra={sorted(extra)}"
         )
-    local = df.isLocal()  # a LocalRelation: the rows are in the driver
-    df = df.select(*[
-        F.col(c).cast(manifest.SPARK_DDL_TYPES[t]).alias(c)
-        for c, t in schema.items()
-    ])
-    placed = _place_in_driver(df, m, schema) if local else None
+    cast = {c: F.col(c).cast(manifest.SPARK_DDL_TYPES[t])
+            for c, t in schema.items()}
+    # a LocalRelation: the rows are in the driver
+    placed = _place_in_driver(df, cast, out_dir, m, schema) \
+        if df.isLocal() else None
     if placed is not None:
         return _merge(spark, out_dir, m, placed,
                       sorted(set(placed.column("bucket").to_pylist())),
                       placed.num_rows)
 
+    df = df.select(*[e.alias(c) for c, e in cast.items()])
     bdf = _place(df, m, key_col).withColumn(PROBE, F.lit(False))
     cl = m.get("cluster_by")
     scheme = m.get("bucket_scheme")

@@ -399,14 +399,11 @@ def test_refusals_and_noop(spark, tmp_path):
 COMPACT_STREAM_JOBS = 2
 
 
-@pytest.mark.parametrize("legacy", [False, True], ids=["watermarked", "legacy"])
-def test_compact_stream_jobs_and_inline_stats(spark, tmp_path, legacy):
-    """The merged generations' inline stat entries are counted from the
-    manifest (no Spark job): each bucket's list becomes the merged
-    wave's fresh stats followed by the kept generation's entries —
-    what counting the merged waves' block rows gives. A legacy
-    manifest, whose evolution has no watermark, counts the block rows
-    in the driver instead."""
+def test_compact_stream_jobs_and_inline_stats(spark, tmp_path):
+    """The merged generations' inline stat entries are counted in the
+    driver (no Spark job): each bucket's list becomes the merged wave's
+    fresh stats followed by the kept generation's entries — what
+    counting the merged waves' block rows gives."""
     import os
 
     import pyarrow.dataset as pads
@@ -426,12 +423,6 @@ def test_compact_stream_jobs_and_inline_stats(spark, tmp_path, legacy):
         part = part.withColumn("score", F.length("text").cast("double"))
         part.write.mode("append").parquet(src2)
         _run_sink(spark, src2, part.schema, out, ck2, stream_id="gen2")
-    if legacy:
-        def drop_watermarks(cur):
-            cur.pop("evolution_waves", None)
-            return cur
-
-        manifest.commit(out, drop_watermarks)
     m0 = manifest.load(out)
     assert len(m0["wave_dirs"]) == 3 and "stats_files" not in m0
     old = m0["wave_dirs"][:2]

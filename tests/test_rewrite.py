@@ -1,6 +1,6 @@
 """The merge-on-write path (operators/rewrite.py) that delete_keys and
 upsert_table share. Its two plans agree: the driver plan (a key list
-or a driver-local batch whose retired waves fit
+or a driver-local batch on a store that leaves it room in
 decode.LOCAL_READ_MAX_BYTES) and the Spark plan (the threshold
 monkeypatched to 0, or a Spark-side input) write identical block rows
 and manifest stats. A corrupt block set raises instead of committing
@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from kmers_spark import manifest, pages
 from kmers_spark.operators import decode as dec, partitioning
+from kmers_spark.operators import rewrite as rw, upsert as up
 from kmers_spark.operators.delete import _candidate_pairs, delete_keys
 from kmers_spark.operators.encode import encode_table
 from kmers_spark.operators.upsert import upsert_table
@@ -131,6 +132,68 @@ def test_small_mutations_launch_no_spark_job(spark, jobs_store):
     got = dec.lookup_keys(spark, out, by_bucket[1][1:6] + doomed).collect()
     assert sorted(r["url"] for r in got) == sorted(by_bucket[1][1:6])
     assert {r["lang"] for r in got} == {"yy"}
+
+
+def test_driver_plan_is_chosen_before_placement(spark, tmp_path,
+                                                monkeypatch):
+    """The room a store leaves in the read budget decides the plan
+    before an input is placed: a key list or a local batch whose
+    placed rows do not fit it runs on Spark, a local batch of more
+    rows than could fit is not collected whole, and a key list on a
+    store where the key does not place a row runs on Spark. A key of
+    the wrong type raises the same TypeError on both plans."""
+    out = str(tmp_path / "snap")
+    encode_table(_int_rows(spark, 400, 0), out, key="k", num_buckets=4,
+                 detect_skew=False)
+    room = rw.driver_room(out, manifest.load(out))
+    assert 0 < room < dec.LOCAL_READ_MAX_BYTES
+
+    def leave(n: int):
+        """Set the budget so that the store leaves `n` bytes of room."""
+        left = rw.driver_room(out, manifest.load(out))
+        monkeypatch.setattr(dec, "LOCAL_READ_MAX_BYTES",
+                            dec.LOCAL_READ_MAX_BYTES - left + n)
+
+    # 600 bytes of room: 3 int64 probe rows (~37 bytes) fit, 60 do not
+    # (~730 bytes, though their keys alone take 480), nor do 100 keys
+    for keys, plan in (([1000, 1001, 1002], "driver"),
+                       (list(range(1010, 1070)), "spark"),
+                       (list(range(1100, 1200)), "spark")):
+        leave(600)
+        res = delete_keys(spark, out, keys)
+        assert (res["rows_deleted"], res["plan"]) == (len(keys), plan)
+    # ~35 bytes a placed row: 10 rows fit 600 bytes, 40 do not; with
+    # 5,000 bytes a batch longer than SLICE_ROWS is sized by its first
+    # rows: 120 rows fit, and of 200 rows no more than ~145 are
+    # collected before the batch goes to Spark
+    collected: list[int] = []
+    frame = type(spark.range(1))
+    collect = frame.collect
+
+    def spy(self):
+        rows = collect(self)
+        collected.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(frame, "collect", spy)
+    for room_left, n, plan in ((600, 10, "driver"), (600, 40, "spark"),
+                               (5000, 120, "driver"), (5000, 200, "spark")):
+        leave(room_left)
+        collected.clear()
+        res = upsert_table(spark, out, _local(_int_rows(spark, n, 0, 1000)))
+        assert (res["rows_inserted"], res["plan"]) == (n, plan)
+    assert max(collected) < 200
+    with pytest.raises(TypeError, match="does not match the int64 key"):
+        delete_keys(spark, out, [1300, "1301"])
+    monkeypatch.setattr(dec, "LOCAL_READ_MAX_BYTES", 0)
+    with pytest.raises(TypeError, match="does not match the int64 key"):
+        delete_keys(spark, out, [True])
+    monkeypatch.undo()
+    clustered = str(tmp_path / "clustered")
+    encode_table(_int_rows(spark, 400, 0), clustered, key="k",
+                 num_buckets=4, cluster_by="d")
+    res = delete_keys(spark, clustered, [1000, 1001])
+    assert (res["rows_deleted"], res["plan"]) == (2, "spark")
 
 
 def test_encode_job_count_per_wave(spark, tmp_path):
@@ -279,10 +342,10 @@ def _run(spark, template, tmp_path, monkeypatch, name: str, op: str,
 
 @pytest.mark.parametrize("op", ["delete", "upsert"])
 def test_mutation_plans_agree(spark, template, tmp_path, monkeypatch, op):
-    """The driver plan, the Spark plan over the same driver-placed rows
-    (threshold 0), and the Spark plan over a Spark-side input (Spark
-    placement) write the same block rows, stats, key ranges and Bloom
-    registrations, and return the same counts."""
+    """The driver plan, the Spark plan over the same driver-local input
+    (threshold 0) and the Spark plan over a Spark-side input write the
+    same block rows, stats, key ranges and Bloom registrations, and
+    return the same counts."""
     res, state = _run(spark, template, tmp_path, monkeypatch, "driver", op,
                       "driver", local=True)
     assert res["buckets_rewritten"]
