@@ -24,7 +24,9 @@ answer:
   * anything stats can't prove (binary columns, pre-znull snapshots,
     filtered string extremes, non-finite doubles) falls back to a
     bucket-restricted decode — never a full scan unless every bucket
-    genuinely straddles.
+    genuinely straddles. A decode within decode.LOCAL_READ_MAX_BYTES
+    runs in the driver and aggregates with pyarrow.compute: no Spark
+    job at all.
 
 The same wave/generation stats streams and mutations maintain
 (encode commit, writeStream sink, delete/upsert rewrites) feed this —
@@ -41,6 +43,8 @@ from __future__ import annotations
 import datetime
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,6 +53,7 @@ from .decode import (
     _filters_expr,
     bloom_prune_filters,
     decode_colocated,
+    decode_local,
     decode_table,
 )
 
@@ -128,13 +133,14 @@ def _bucket_contained(stats: list[dict], key: str,
     return True
 
 
-def _hll_registers_multi(df: DataFrame, col_types: dict[str, str]
-                         ) -> dict:
-    """{column: merged HLL registers} over a DataFrame, built with the
-    engine's OWN sketch kernel (NOT Spark's approx_count_distinct — a
-    different sketch would break the merged-estimate determinism): ONE
-    mapInArrow pass computes every requested column's registers
-    (per-partition 1 KB blobs), the driver max-merges. Batches stay
+def _hll_registers_multi(rows: DataFrame | pa.Table,
+                         col_types: dict[str, str]) -> dict:
+    """{column: merged HLL registers} over the decoded rows, built with
+    the engine's OWN sketch kernel (NOT Spark's approx_count_distinct —
+    a different sketch would break the merged-estimate determinism). A
+    driver-decoded table hashes in place; a DataFrame runs ONE
+    mapInArrow pass computing every requested column's registers
+    (per-partition 1 KB blobs), and the driver max-merges. Batches stay
     Arrow end-to-end, so null-bearing int64 columns keep exact values
     (no pandas float64 round-trip); hll_build_arrow drops nulls like
     count_distinct does."""
@@ -143,11 +149,12 @@ def _hll_registers_multi(df: DataFrame, col_types: dict[str, str]
     from ..kernels import sketch as sketchkern
 
     cols = sorted(col_types)
-    src = df.select(*cols)
+    if isinstance(rows, pa.Table):
+        return {c: sketchkern.hll_build_arrow(rows.column(c), col_types[c])
+                for c in cols}
+    src = rows.select(*cols)
 
     def build(batches):
-        import pyarrow as pa
-
         regs: dict[str, object] = {}
         for batch in batches:
             for ci, c in enumerate(cols):
@@ -164,13 +171,92 @@ def _hll_registers_multi(df: DataFrame, col_types: dict[str, str]
                 ["col", "regs"],
             )
 
-    rows = src.mapInArrow(build, "col string, regs binary").collect()
     out: dict = {}
-    for r in rows:
+    for r in src.mapInArrow(build, "col string, regs binary").collect():
         regs = np.frombuffer(r["regs"], np.uint8)
         out[r["col"]] = regs if r["col"] not in out else \
             sketchkern.merge([out[r["col"]], regs])
     return out
+
+
+# column types the driver aggregate reduces with pyarrow.compute; an
+# aggregate over another type (float_array) keeps the Spark plan
+_ARROW_AGG_TYPES = ("int64", "double", "string", "binary", "timestamp",
+                    "timestamp_ntz")
+
+
+def _decoded(spark: SparkSession, out_dir: str, m: dict, pin: int,
+             version: int | None, need: list[str], filters: list[tuple] | None,
+             norm: list[tuple], buckets: list[int], schema: dict[str, str],
+             driver: bool = True) -> DataFrame | pa.Table:
+    """The rows of `buckets` that match the filters, `need` columns
+    only. A latest-version read within LOCAL_READ_MAX_BYTES (and
+    `driver` allowed) is a pa.Table decoded in the driver, whose
+    kernel mask already applied the filters exactly; anything else is a
+    DataFrame (colocated Spark plan, or decode_table for time travel)
+    with the residual filter on top."""
+    if version is None:
+        if driver:
+            table = decode_local(spark, out_dir, columns=need, filters=filters,
+                                 buckets=buckets, snapshot=m)
+            if table is not None:
+                return table
+        df = decode_colocated(spark, out_dir, columns=need, filters=filters,
+                              buckets=buckets, snapshot=m)
+    else:
+        df = decode_table(spark, out_dir, buckets=buckets, columns=need,
+                          version=pin or None, filters=filters)
+    return df.filter(_filters_expr(norm, schema)) if norm else df
+
+
+def _int_sum(arr: pa.ChunkedArray, col: str) -> int | None:
+    """Exact sum of an int64 column, None when it has no non-null row.
+    Arrow's sum wraps on overflow, so the high and low 32-bit halves
+    sum apart (neither can overflow below 2^31 rows) and join in
+    Python; a total outside int64 raises, as Spark's ANSI sum does."""
+    if not pc.count(arr).as_py():
+        return None
+    hi = pc.sum(pc.shift_right(arr, 32)).as_py()
+    lo = pc.sum(pc.bit_wise_and(arr, 0xFFFFFFFF)).as_py()
+    total = (hi << 32) + lo
+    if not -(1 << 63) <= total < (1 << 63):
+        raise OverflowError(f"long overflow: sum({col}) exceeds int64")
+    return total
+
+
+def _arrow_agg(table: pa.Table, fn: str, col: str, typ: str | None) -> Any:
+    """One aggregate over driver-decoded rows, with the value Spark's
+    agg().collect() would return: count(col), min and max skip nulls;
+    min/max/sum of no rows are None; NaN is the greatest double (an
+    all-NaN column's extremes are NaN); count_distinct counts every
+    NaN as one value and -0.0 as 0.0 (Spark's float normalisation);
+    strings and binary compare bytewise; timestamps come back as naive
+    UTC datetimes, like the stats path."""
+    if col == "*":
+        return table.num_rows
+    arr = table.column(col)
+    if fn == "count":
+        return pc.count(arr).as_py()
+    if fn == "count_distinct":
+        if typ == "double":
+            arr = pc.if_else(pc.is_nan(arr), float("nan"),
+                             pc.if_else(pc.equal(arr, 0.0), 0.0, arr))
+        return pc.count_distinct(arr).as_py()
+    if fn == "sum":
+        return pc.sum(arr).as_py() if typ == "double" else _int_sum(arr, col)
+    # min / max
+    nans = 0
+    if typ == "double":
+        isnan = pc.fill_null(pc.is_nan(arr), False)
+        nans = pc.sum(isnan).as_py()
+        arr = arr.filter(pc.invert(isnan))  # Arrow's min_max skips NaN,
+        # and answers +/-inf for an all-NaN array
+    elif typ in ("timestamp", "timestamp_ntz"):
+        arr = arr.cast(pa.int64())
+    v = pc.min_max(arr)[fn].as_py()
+    if nans:
+        v = float("nan") if v is None else _combine_extreme(fn, v, float("nan"))
+    return None if v is None else _stats_value_to_py(v, typ)
 
 
 def agg_table(spark: SparkSession, out_dir: str,
@@ -187,8 +273,8 @@ def agg_table(spark: SparkSession, out_dir: str,
     and range stores clustered ON the key, whose heavy-value overflow
     also salts by key hash): distinct sets are bucket-disjoint, so
     per-bucket counts ADD. Non-key columns, external/streamed stores,
-    and range-on-other-column stores decode (one job, still
-    zone/Bloom-pruned under filters). approx_count_distinct (~3.2%
+    and range-on-other-column stores decode (still zone/Bloom-pruned
+    under filters). approx_count_distinct (~3.2%
     stderr, deterministic) max-merges the per-block HLL sketches
     `encode_table(ndv_columns=[...])` records — register union is
     overlap-insensitive, so it runs with zero Spark jobs on exactly the
@@ -203,6 +289,13 @@ def agg_table(spark: SparkSession, out_dir: str,
     stats-first evaluation (metadata-only for unfiltered int64
     columns). `filters` uses the scan_table triple syntax, ANDed.
     `version` pins a time-travel read.
+
+    Whatever stats cannot prove decodes once per distinct bucket set.
+    A latest-version decode whose payload fits LOCAL_READ_MAX_BYTES
+    runs in the driver (decode_local) and is reduced there with
+    pyarrow.compute and the sketch kernel, so the whole call launches
+    no Spark job; a larger or time-travel decode costs one job per
+    bucket set. Both plans return the same values (see _arrow_agg).
     """
     if not aggs:
         raise ValueError("aggs must not be empty")
@@ -322,8 +415,8 @@ def agg_table(spark: SparkSession, out_dir: str,
             )
             results[i] = 0
             if not key_disjoint:
-                decode_of[i].update(contained)  # one job, whole survivor
-                continue                        # set: exact by itself
+                decode_of[i].update(contained)  # one decode, whole
+                continue                        # survivor set: exact
             total = 0
             for b in contained:
                 ents = _entries(blocks.get(str(b), []), col)
@@ -348,7 +441,7 @@ def agg_table(spark: SparkSession, out_dir: str,
             # union). Contained buckets' sketches are exact for the
             # filtered set (every row matches); straddlers decode with
             # the filters applied. The decode itself is DEFERRED: all
-            # approx aggs sharing a bucket subset run as one job below.
+            # approx aggs sharing a bucket subset decode once below.
             from ..kernels import sketch as sketchkern
 
             decode_of[i] = set()  # this branch runs its own decode —
@@ -468,9 +561,10 @@ def agg_table(spark: SparkSession, out_dir: str,
             results[i] = None
 
     # Sketch-decode pass: approx aggs grouped by identical bucket
-    # subsets — ONE job per subset computes every needed column's
-    # registers in a single mapInArrow pass (N approx aggs over the
-    # same straddlers must not decode those buckets N times).
+    # subsets — ONE decode per subset computes every needed column's
+    # registers (N approx aggs over the same straddlers must not decode
+    # those buckets N times): in the driver when it fits, else in a
+    # single mapInArrow job.
     if pending_hll:
         from ..kernels import sketch as sketchkern
 
@@ -486,18 +580,9 @@ def agg_table(spark: SparkSession, out_dir: str,
             need_cols = {c: schema[c] for _i, c, _b, _m in items}
             need = sorted(set(need_cols)
                           | {c for c, _o, _bv, _v in norm})
-            bsel = sorted(bset)
-            if version is None:
-                df = decode_colocated(spark, out_dir, columns=need,
-                                      filters=filters, buckets=bsel,
-                                      snapshot=m)
-            else:
-                df = decode_table(spark, out_dir, buckets=bsel,
-                                  columns=need, version=pin or None,
-                                  filters=filters)
-            if norm:
-                df = df.filter(_filters_expr(norm, schema))
-            reg_map = _hll_registers_multi(df, need_cols)
+            rows = _decoded(spark, out_dir, m, pin, version, need, filters,
+                            norm, sorted(bset), schema)
+            reg_map = _hll_registers_multi(rows, need_cols)
             for i, col, _b, merged in items:
                 decoded = reg_map.get(col)
                 if decoded is not None:
@@ -507,7 +592,9 @@ def agg_table(spark: SparkSession, out_dir: str,
                     int(round(sketchkern.estimate(merged)))
 
     # Decode pass: group aggs by identical bucket subsets so each
-    # subset costs ONE Spark job decoding the union of needed columns.
+    # subset decodes the union of its needed columns ONCE — in the
+    # driver, reduced with pyarrow.compute (no Spark job), when the
+    # read fits LOCAL_READ_MAX_BYTES; as one Spark job otherwise.
     fcols = [c for c, _op, _bv, _v in norm]
     groups: dict[frozenset, list[int]] = {}
     for i in range(len(aggs)):
@@ -516,26 +603,22 @@ def agg_table(spark: SparkSession, out_dir: str,
     for bucket_set, idxs in groups.items():
         need = sorted({aggs[i][1] for i in idxs if aggs[i][1] != "*"}
                       | set(fcols)) or [key]
-        bsel = sorted(bucket_set)
-        if version is None:
-            df = decode_colocated(spark, out_dir, columns=need,
-                                  filters=filters, buckets=bsel, snapshot=m)
+        arrow_ok = all(aggs[i][1] == "*"
+                       or schema[aggs[i][1]] in _ARROW_AGG_TYPES for i in idxs)
+        rows = _decoded(spark, out_dir, m, pin, version, need, filters, norm,
+                        sorted(bucket_set), schema, driver=arrow_ok)
+        if isinstance(rows, pa.Table):
+            vals = [_arrow_agg(rows, *aggs[i], schema.get(aggs[i][1]))
+                    for i in idxs]
         else:
-            df = decode_table(spark, out_dir, buckets=bsel, columns=need,
-                              version=pin or None, filters=filters)
-        if norm:
-            df = df.filter(_filters_expr(norm, schema))
-        exprs = []
-        for i in idxs:
+            row = rows.agg(*[
+                (F.count(F.lit(1)) if aggs[i][1] == "*"
+                 else getattr(F, aggs[i][0])(F.col(aggs[i][1]))).alias(f"a{i}")
+                for i in idxs
+            ]).collect()[0]
+            vals = [row[f"a{i}"] for i in idxs]
+        for i, v in zip(idxs, vals):
             fn, col = aggs[i]
-            if fn == "count" and col == "*":
-                exprs.append(F.count(F.lit(1)).alias(f"a{i}"))
-            else:
-                exprs.append(getattr(F, fn)(F.col(col)).alias(f"a{i}"))
-        row = df.agg(*exprs).collect()[0]
-        for i in idxs:
-            fn, col = aggs[i]
-            v = row[f"a{i}"]
             if fn in ("count", "count_distinct"):
                 # count_distinct partials add because the stats path
                 # only ever splits buckets when keys are bucket-disjoint
@@ -746,17 +829,8 @@ def agg_table_grouped(spark: SparkSession, out_dir: str,
         need = sorted(set(group_by)
                       | {c for _f, c in inner if c != "*"}
                       | {c for c, _o, _b, _v in norm}) or [key]
-        if version is None:
-            df = decode_colocated(spark, out_dir, columns=need,
-                                  filters=filters,
-                                  buckets=sorted(decode_buckets),
-                                  snapshot=m)
-        else:
-            df = decode_table(spark, out_dir, buckets=sorted(decode_buckets),
-                              columns=need, version=pin or None,
-                              filters=filters)
-        if norm:
-            df = df.filter(_filters_expr(norm, schema))
+        df = _decoded(spark, out_dir, m, pin, version, need, filters, norm,
+                      sorted(decode_buckets), schema, driver=False)
         exprs = []
         for (fn, col), pn in zip(inner, pnames):
             if fn == "count" and col == "*":

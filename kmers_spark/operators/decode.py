@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import blockdecode, manifest
@@ -63,14 +64,12 @@ def decode_table(spark: SparkSession, out_dir: str, buckets: list[int] | None = 
         if m.get("evolved") else None
     schema, dec_schema, missing, anchor = _read_columns(spark, m, columns, stats)
     cols = list(schema)
-    out_schema = ", ".join(f"`{c}` {_SPARK_TYPE[t]}" for c, t in dec_schema.items())
 
     # manifest-level wave pruning first (skip whole data dirs), then the
     # bucket predicate prunes parquet row groups inside the survivors
     paths = committed_wave_paths(out_dir, m, buckets=buckets)
     if not paths:
-        df = spark.createDataFrame([], out_schema)
-        return df.select(*cols) if anchor else df
+        return empty_result(spark, schema)
     blocks = spark.read.parquet(*paths)
     if buckets is not None:
         blocks = blocks.filter(blocks.bucket.isin(buckets))
@@ -97,10 +96,26 @@ def decode_table(spark: SparkSession, out_dir: str, buckets: list[int] | None = 
         # AFTER a column was added must carry its block — missing then
         # means corruption, not evolution, and the kernel raises
         gen_missing = manifest.wave_allowance(m, cols)
-    df = decode_blocks_df(blocks, dec_schema, out_schema, norm_filters=norm,
+    df = decode_blocks_df(blocks, dec_schema, _ddl(dec_schema), norm_filters=norm,
                           missing=missing, gen_key=gen_key,
                           gen_missing=gen_missing)
     return df.select(*cols) if anchor else df
+
+
+def _ddl(schema: dict[str, str], cols: list[str] | None = None) -> str:
+    """Spark DDL of `cols` (default: all of `schema`)."""
+    return ", ".join(f"`{c}` {_SPARK_TYPE[schema[c]]}"
+                     for c in (list(schema) if cols is None else cols))
+
+
+def empty_result(spark: SparkSession, schema: dict[str, str],
+                 cols: list[str] | None = None) -> DataFrame:
+    """Zero rows of `cols` (default: all of `schema`) as an empty
+    LocalRelation: collecting it launches no Spark job, where
+    createDataFrame of an empty list plans a LogicalRDD that costs one.
+    The empty answer of every read whose pruning leaves nothing."""
+    return spark.createDataFrame(blockdecode.empty_table(schema, cols),
+                                 _ddl(schema, cols))
 
 
 def _read_columns(spark: SparkSession, m: dict, columns: list[str] | None,
@@ -207,8 +222,8 @@ def scan_table(spark: SparkSession, out_dir: str, filters: list[tuple],
       1. DRIVER, zero Spark jobs: the manifest's per-(bucket, column)
          zone bounds (recorded by encode from each block's meta) drop
          every bucket whose bounds exclude a filter. A predicate
-         outside the global value range plans an empty LogicalRDD —
-         no scan at all.
+         outside the global value range returns an empty LocalRelation
+         (empty_result) — no scan, and no job to collect it.
       2. Wave-dir pruning: surviving buckets select wave dirs via
          wave_buckets (whole directories of a 10^5-bucket snapshot
          never hit the file listing).
@@ -272,8 +287,7 @@ def scan_table(spark: SparkSession, out_dir: str, filters: list[tuple],
     # tests definitely-absent — the case zone bounds can't prune
     buckets = bloom_prune_filters(out_dir, m, norm, buckets)
     if not buckets:
-        out_schema = ", ".join(f"`{c}` {_SPARK_TYPE[schema[c]]}" for c in out_cols)
-        return spark.createDataFrame([], out_schema)
+        return empty_result(spark, schema, out_cols)
     fcols = {c for c, _op, _bv, _v in norm}
     decode_cols = [c for c in schema if c in set(out_cols) | fcols] \
         if columns is not None else None
@@ -518,7 +532,9 @@ def lookup_keys(spark: SparkSession, out_dir: str, keys: list[str]) -> DataFrame
 
     The decode is decode_colocated's, so a lookup whose surviving
     buckets carry at most LOCAL_READ_MAX_BYTES of payload decodes in
-    the driver and launches no Spark job to produce its rows. `keys`
+    the driver and launches no Spark job to produce its rows; a lookup
+    pruned to zero buckets returns an empty LocalRelation
+    (empty_result), which launches none either. `keys`
     has set semantics: each stored row is returned once, however often
     its key is probed. A probe matches when it equals the stored key
     rendered as a string (int key 7 matches "7", not "007")."""
@@ -547,11 +563,8 @@ def lookup_keys(spark: SparkSession, out_dir: str, keys: list[str]) -> DataFrame
     # key tests definitely-absent — an absent key INSIDE a bucket's
     # key range then costs a ~KB driver read instead of a bucket decode
     buckets = _bloom_prune(out_dir, m, key_col, bucket_keys)
-    out_schema = ", ".join(
-        f"`{c}` {_SPARK_TYPE[t]}" for c, t in manifest.ordered_schema(m).items()
-    )
     if not buckets:
-        return spark.createDataFrame([], out_schema)
+        return empty_result(spark, manifest.ordered_schema(m))
     # the key predicate also rides INTO the decode kernel (late
     # materialization): only probe-key rows cross the Arrow boundary,
     # and segmented bulk columns decompress only matching segments
@@ -590,9 +603,8 @@ def decode_colocated(spark: SparkSession, out_dir: str,
     fetch — the block-stats enc_nbytes of the surviving buckets'
     decoded columns:
 
-      * at most LOCAL_READ_MAX_BYTES: the DRIVER reads the block rows
-        with pyarrow.dataset, file by file, runs the bucket-decode
-        kernel and returns spark.createDataFrame(table) — a
+      * at most LOCAL_READ_MAX_BYTES: the DRIVER decodes the rows
+        (decode_local) and returns spark.createDataFrame(table) — a
         LocalRelation. No Spark job is needed to produce it, and
         filters stacked on top fold into it. This plan is eager: the
         decode runs, and a corrupt block set raises, before the call
@@ -606,61 +618,11 @@ def decode_colocated(spark: SparkSession, out_dir: str,
 
     from .. import arrowcodecs
 
-    m = snapshot if snapshot is not None else manifest.load(out_dir)
-    if m is None:
-        raise FileNotFoundError(f"no manifest in {out_dir}")
-    stats = manifest.block_stats(out_dir, m, buckets=buckets)
-    schema, dec_schema, missing, anchor = _read_columns(spark, m, columns, stats)
-    cols = list(schema)
-    out_schema = ", ".join(f"`{c}` {_SPARK_TYPE[t]}" for c, t in dec_schema.items())
-    dec_cols = list(dec_schema)
-    norm = None
-    if filters:
-        from .. import zonemap
-
-        norm = zonemap.normalize_filters(filters, schema)
-    # wave-dir pruning for bucket-filtered reads, same as decode_table
-    paths = committed_wave_paths(out_dir, m, buckets=buckets)
-    if not paths:  # manifest exists but nothing committed yet
-        df = spark.createDataFrame([], out_schema)
-        return df.select(*cols) if anchor else df
-    projected = columns is not None \
-        and len(dec_schema) < len(manifest.ordered_schema(m))
-    # streamed stores: the evolution allowance applies per GENERATION
-    # (a post-evolution generation missing an evolved column raises)
-    gen_missing = manifest.wave_allowance(m, cols) if m.get("streamed") else None
-
-    def decode_file(rows: pa.Table, wave: str | None):
-        """One block file's rows (whole buckets of one generation) ->
-        the decoded table of each bucket with selected rows."""
-        for b, brows in blockdecode.split_rows(rows):
-            allow = gen_missing.get(wave, set()) if gen_missing is not None \
-                else missing.get(int(b), ())
-            out = blockdecode.decode_bucket(brows, dec_schema, norm, allow)
-            if out.num_rows:
-                yield out
-
-    if _payload_bytes(stats, buckets, dec_schema) <= LOCAL_READ_MAX_BYTES:
-        import pyarrow.dataset as pads
-
-        pred = pads.scalar(True)
-        if buckets is not None:
-            pred &= pads.field("bucket").isin(list(buckets))
-        if projected:
-            pred &= pads.field("column").isin(dec_cols)
-        tables = [
-            t
-            for p in paths
-            for frag in pads.dataset(p, format="parquet").get_fragments()
-            for t in decode_file(
-                frag.to_table(filter=pred, columns=blockdecode.FETCH),
-                blockdecode.wave_of(frag.path),
-            )
-        ]
-        table = pa.concat_tables(tables) if tables \
-            else blockdecode.empty_table(dec_schema)
-        df = spark.createDataFrame(table, out_schema)
-        return df.select(*cols) if anchor else df
+    read = _ColocatedRead(spark, out_dir, columns, filters, buckets, snapshot)
+    out_schema = _ddl(read.dec_schema, read.cols)
+    table = read.local_table()
+    if table is not None:
+        return spark.createDataFrame(table, out_schema)
 
     # Whole files per scan partition so buckets never split: the default
     # spark.sql.files.maxPartitionBytes (128MB) would split a large block
@@ -677,13 +639,14 @@ def decode_colocated(spark: SparkSession, out_dir: str,
             pass
     s2.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 40))
     s2.conf.set("spark.sql.files.openCostInBytes", str(1 << 40))
-    blocks = s2.read.parquet(*paths)
+    blocks = s2.read.parquet(*read.paths)
     if buckets is not None:
         blocks = blocks.filter(blocks.bucket.isin(buckets))
-    if projected:
+    if read.projected:
         # projection below the scan: unwanted payloads never decompress
-        blocks = blocks.filter(blocks.column.isin(dec_cols))
-    if gen_missing is not None:
+        blocks = blocks.filter(blocks.column.isin(list(read.dec_schema)))
+    streamed = read.gen_missing is not None
+    if streamed:
         # file provenance for the kernel: which WAVE each block row came
         # from. A projection, not a shuffle — the plan stays exchange-free.
         from pyspark.sql import functions as F
@@ -696,14 +659,101 @@ def decode_colocated(spark: SparkSession, out_dir: str,
         if not tables:
             return
         rows = pa.concat_tables(tables)
-        by_file = blockdecode.split_rows(rows, "_gen") \
-            if gen_missing is not None else [(None, rows)]
+        by_file = blockdecode.split_rows(rows, "_gen") if streamed \
+            else [(None, rows)]
         for gen, frows in by_file:
-            for out in decode_file(frows, gen and blockdecode.wave_of(gen)):
+            for out in read.decode_file(frows, gen and blockdecode.wave_of(gen)):
                 yield from out.to_batches()
 
-    df = blocks.mapInArrow(decode_partition, out_schema)
-    return df.select(*cols) if anchor else df
+    return blocks.mapInArrow(decode_partition, out_schema)
+
+
+def decode_local(spark: SparkSession, out_dir: str,
+                 columns: list[str] | None = None,
+                 filters: list[tuple] | None = None,
+                 buckets: list[int] | None = None,
+                 snapshot: dict | None = None) -> pa.Table | None:
+    """decode_colocated's driver plan on its own: the decoded rows as a
+    pyarrow Table (the requested columns in schema order, decode-typed,
+    `filters` already applied exactly by the kernel mask), or None when
+    the read's payload exceeds LOCAL_READ_MAX_BYTES and only the Spark
+    plan may run it. Readers that reduce the rows in the driver
+    (agg_table) consume the table directly and never round-trip it
+    through the JVM."""
+    return _ColocatedRead(spark, out_dir, columns, filters, buckets,
+                          snapshot).local_table()
+
+
+class _ColocatedRead:
+    """The set-up both plans of a colocated read share: the columns to
+    decode, the normalized filters, the surviving wave files and the
+    per-file kernel."""
+
+    def __init__(self, spark: SparkSession, out_dir: str,
+                 columns: list[str] | None, filters: list[tuple] | None,
+                 buckets: list[int] | None, snapshot: dict | None):
+        m = snapshot if snapshot is not None else manifest.load(out_dir)
+        if m is None:
+            raise FileNotFoundError(f"no manifest in {out_dir}")
+        self.buckets = buckets
+        stats = manifest.block_stats(out_dir, m, buckets=buckets)
+        schema, self.dec_schema, self.missing, _anchor = _read_columns(
+            spark, m, columns, stats)
+        self.payload = _payload_bytes(stats, buckets, self.dec_schema)
+        # the kernel emits only these; an anchor column in dec_schema
+        # is fetched for its row count and never decoded
+        self.cols = list(schema)
+        self.norm = None
+        if filters:
+            from .. import zonemap
+
+            self.norm = zonemap.normalize_filters(filters, schema)
+        # wave-dir pruning for bucket-filtered reads, same as decode_table
+        self.paths = committed_wave_paths(out_dir, m, buckets=buckets)
+        self.projected = columns is not None \
+            and len(self.dec_schema) < len(manifest.ordered_schema(m))
+        # streamed stores: the evolution allowance applies per GENERATION
+        # (a post-evolution generation missing an evolved column raises)
+        self.gen_missing = manifest.wave_allowance(m, self.cols) \
+            if m.get("streamed") else None
+
+    def decode_file(self, rows: pa.Table, wave: str | None):
+        """One block file's rows (whole buckets of one generation) ->
+        the decoded table of each bucket with selected rows."""
+        for b, brows in blockdecode.split_rows(rows):
+            allow = self.gen_missing.get(wave, set()) \
+                if self.gen_missing is not None else self.missing.get(int(b), ())
+            out = blockdecode.decode_bucket(brows, self.dec_schema, self.norm,
+                                            allow, self.cols)
+            if out.num_rows:
+                yield out
+
+    def local_table(self) -> pa.Table | None:
+        """The driver plan: the block rows read with pyarrow.dataset,
+        file by file, through decode_file — or None over the budget. A
+        read with no committed file is empty whatever its stats say."""
+        import pyarrow.dataset as pads
+
+        if not self.paths:
+            return blockdecode.empty_table(self.dec_schema, self.cols)
+        if self.payload > LOCAL_READ_MAX_BYTES:
+            return None
+        pred = pads.scalar(True)
+        if self.buckets is not None:
+            pred &= pads.field("bucket").isin(list(self.buckets))
+        if self.projected:
+            pred &= pads.field("column").isin(list(self.dec_schema))
+        tables = [
+            t
+            for p in self.paths
+            for frag in pads.dataset(p, format="parquet").get_fragments()
+            for t in self.decode_file(
+                frag.to_table(filter=pred, columns=blockdecode.FETCH),
+                blockdecode.wave_of(frag.path),
+            )
+        ]
+        return pa.concat_tables(tables) if tables \
+            else blockdecode.empty_table(self.dec_schema, self.cols)
 
 
 def _payload_bytes(stats: dict[str, list], buckets: list[int] | None,

@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import blockdecode, manifest, zonemap
 from . import partitioning
-from .decode import _SPARK_TYPE, bloom_prune_filters
+from .decode import _SPARK_TYPE, bloom_prune_filters, empty_result
 from .encode import assert_utc_session
 
 _HASH_SCHEMES = (partitioning.BUCKET_SCHEME, partitioning.LEGACY_SCHEME)
@@ -322,7 +322,7 @@ def join_colocated(spark: SparkSession, left_dir: str, right_dir: str, *,
     if how in ("inner", "semi"):
         bs = [b for b in bs if not pair_disjoint(b) and nonempty(rp, b)]
     if not bs:
-        return spark.createDataFrame([], out_schema)
+        return empty_result(spark, dict(zip(out_names, out_types)))
 
     lpaths_by = _bucket_paths(left_dir, ml, bs)
     right_read = [b for b in bs if b in rp["buckets"] and not pair_disjoint(b)]
@@ -335,7 +335,7 @@ def join_colocated(spark: SparkSession, left_dir: str, right_dir: str, *,
     if how in ("inner", "semi"):
         bs = [b for b in bs if b in rpaths_by]
     if not bs:
-        return spark.createDataFrame([], out_schema)
+        return empty_result(spark, dict(zip(out_names, out_types)))
 
     plans = []
     for i in range(0, len(bs), buckets_per_task):

@@ -121,8 +121,7 @@ def semijoin_scan(spark: SparkSession, out_dir: str, on: str,
 
     if not keys:
         out_cols = _out_cols(schema, columns)
-        empty = spark.createDataFrame([], ", ".join(
-            f"`{c}` {_SPARK_TYPE[schema[c]]}" for c in out_cols))
+        empty = _dec.empty_result(spark, schema, out_cols)
         return _finish(empty, dim_df, on, dim_on, how, schema, columns,
                        broadcast=True) if how == "inner" else empty
 
@@ -146,8 +145,7 @@ def semijoin_scan(spark: SparkSession, out_dir: str, on: str,
         buckets = bloom_prune_filters(out_dir, m, norm_other, buckets)
     if not buckets:
         out_cols = _out_cols(schema, columns)
-        base = spark.createDataFrame([], ", ".join(
-            f"`{c}` {_SPARK_TYPE[schema[c]]}" for c in out_cols))
+        base = _dec.empty_result(spark, schema, out_cols)
         return _finish(base, dim_df, on, dim_on, how, schema, columns,
                        broadcast=True) if how == "inner" else base
     bsel = None if len(buckets) == len(m.get("committed_buckets", [])) \

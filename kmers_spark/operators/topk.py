@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from .. import manifest, zonemap
 from .agg import _bucket_contained, _entries
-from .decode import _SPARK_TYPE, _filters_expr, decode_colocated, decode_table
+from .decode import _filters_expr, decode_colocated, decode_table, empty_result
 
 _UNBOUNDED = object()  # "no recorded bound": ranks before every real value
 
@@ -195,9 +195,7 @@ def topk_table(spark: SparkSession, out_dir: str, order_by, k: int, *,
         if not out_cols:
             raise ValueError("columns projection must not be empty")
     if not selected:
-        out_schema = ", ".join(
-            f"`{c}` {_SPARK_TYPE[schema[c]]}" for c in out_cols)
-        return spark.createDataFrame([], out_schema)
+        return empty_result(spark, schema, out_cols)
 
     fcols = {c for c, _op, _bv, _v in norm}
     decode_cols = [c for c in schema

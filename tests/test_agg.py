@@ -13,6 +13,7 @@ extremes, contained/straddle classification on clustered stores,
 pre-znull snapshot back-compat, all-null columns, mutation and
 evolution interplay, and input validation.
 """
+import datetime
 import json
 import os
 
@@ -24,6 +25,7 @@ from kmers_spark.operators import agg as aggmod
 from kmers_spark.operators.agg import agg_table, agg_table_df
 from kmers_spark.operators.encode import encode_table
 from kmers_spark.pages import pages_df
+from tests.conftest import jobs_of, spy_agg_decodes
 
 
 @pytest.fixture(scope="module")
@@ -71,21 +73,14 @@ def _no_decode(monkeypatch):
     """Fail the test if any decode path runs."""
     def boom(*a, **k):
         raise AssertionError("stats-only aggregate decoded payload")
+    monkeypatch.setattr(aggmod, "decode_local", boom)
     monkeypatch.setattr(aggmod, "decode_colocated", boom)
     monkeypatch.setattr(aggmod, "decode_table", boom)
 
 
 def _capture_buckets(monkeypatch):
     seen = []
-    real = aggmod.decode_colocated
-
-    def spy(spark, out_dir, columns=None, filters=None, buckets=None,
-            snapshot=None):
-        seen.append(list(buckets or []))
-        return real(spark, out_dir, columns=columns, filters=filters,
-                    buckets=buckets, snapshot=snapshot)
-
-    monkeypatch.setattr(aggmod, "decode_colocated", spy)
+    spy_agg_decodes(monkeypatch, lambda _cols, b: seen.append(list(b or [])))
     return seen
 
 
@@ -676,3 +671,181 @@ def test_grouped_validation(spark, hash_store):
         agg_table_grouped(spark, hash_store, ["html"], [("count", "*")])
     with pytest.raises(KeyError):
         agg_table_grouped(spark, hash_store, ["nope"], [("count", "*")])
+
+
+# ------------------------------------------- driver / Spark plan parity
+
+_BASE_TS = datetime.datetime(2021, 3, 4, 5, 6, 7)
+_PARITY_DDL = ("url string, i64 bigint, d double, s string, b binary, "
+               "ts timestamp, nil bigint")
+_PARITY_COLS = ("i64", "d", "s", "b", "ts", "nil")
+_PARITY_AGGS = (
+    [("count", "*")]
+    + [(fn, c) for c in _PARITY_COLS
+       for fn in ("count", "min", "max", "count_distinct")]
+    + [("sum", "i64"), ("sum", "d"), ("sum", "nil"), ("avg", "i64"),
+       ("avg", "d")]
+    + [("approx_count_distinct", c) for c in ("url", "i64", "s", "nil")]
+)
+_PARITY_FILTERS = [
+    None,
+    [("url", ">=", "http://h5")],  # hosts: mixes contained + straddling
+    [("i64", ">=", 0)],            # scattered values: every bucket straddles
+    [("i64", "=", 1)],             # odd: inside every range, matches nothing
+    [("d", ">", 10.0)],            # NaN is the greatest double: NaN rows match
+    [("d", "<", 0.5)],             # the +/-0.0 rows match, NaN rows do not
+]
+_FP_ORDER = ("sum_d", "avg_d")  # decoded double sums: summation order
+
+
+def _parity_rows(lo: int, hi: int) -> list[tuple]:
+    """Nulls in every column, NaN and +/-0.0 doubles, astral and BMP
+    strings (bytewise order differs from UTF-16 order), binary with
+    0x00/0xff bytes, timestamps and an all-null column."""
+    rows = []
+    for i in range(lo, hi):
+        d = (None if i % 11 == 0 else float("nan") if i % 13 == 0
+             else -0.0 if i % 17 == 0 else 0.0 if i % 19 == 0
+             else i / 7 - 40)
+        s = (None if i % 5 == 0 else "\U0001F600" if i % 29 == 0
+             else "￿" if i % 23 == 0 else f"s{(i * 31) % 97:03d}")
+        rows.append((
+            f"http://h{i % 13}.example/p{i:04d}",
+            None if i % 7 == 0 else 2 * (i % 250) - 250,  # even values
+            d, s,
+            None if i % 6 == 0 else bytes([(i * 13) % 256, i % 7]),
+            None if i % 8 == 0 else _BASE_TS + datetime.timedelta(seconds=i * 3601),
+            None,
+        ))
+    return rows
+
+
+def _parity_store(spark, kind: str, root) -> tuple[str, list[tuple]]:
+    """A 600-row store of `kind` and the rows it holds (evolved
+    columns read as null in the buckets written before evolution)."""
+    from kmers_spark import datasource
+    from kmers_spark.operators import partitioning
+
+    rows = _parity_rows(0, 600)
+    df = spark.createDataFrame(rows, _PARITY_DDL)
+    out = str(root / "snap")
+    if kind == "hash":
+        encode_table(df, out, num_buckets=4, detect_skew=False)
+    elif kind == "streamed":
+        datasource.register(spark)
+        src, ckpt = str(root / "src"), str(root / "ckpt")
+        for i, half in enumerate((df.filter(F.xxhash64("url") % 2 == 0),
+                                  df.filter(F.xxhash64("url") % 2 != 0))):
+            half.write.mode("append").parquet(src)
+            sdf = spark.readStream.schema(df.schema).parquet(src)
+            q = (partitioning.with_bucket(sdf, 4, {}).repartition("bucket")
+                 .writeStream.format("kmers")
+                 .option("checkpointLocation", ckpt)
+                 .option("numBuckets", "4")
+                 .trigger(availableNow=True).start(out))
+            q.awaitTermination(120)
+        assert len(manifest.load(out)["wave_dirs"]) == 2
+    else:  # evolved: buckets 0-1 predate the b and ts columns
+        encode_table(df.drop("b", "ts"), out, num_buckets=4,
+                     detect_skew=False, fail_buckets_over=2)
+        manifest.evolve_schema(out, {"b": "binary", "ts": "timestamp"})
+        m = encode_table(df, out, num_buckets=4, detect_skew=False)
+        hot = m.get("hot_keys") or {}
+        rows = [r if partitioning.bucket_for_key(r[0], 4, hot) >= 2
+                else r[:4] + (None, None) + r[6:] for r in rows]
+    return out, rows
+
+
+def _duckdb_truth(rows: list[tuple], filters) -> dict:
+    import duckdb
+    import pyarrow as pa
+
+    cols = ["url"] + list(_PARITY_COLS)
+    types = [pa.string(), pa.int64(), pa.float64(), pa.string(),
+             pa.binary(), pa.timestamp("us"), pa.int64()]
+    t = pa.table({c: pa.array([r[i] for r in rows], type=typ)
+                  for i, (c, typ) in enumerate(zip(cols, types))})
+    con = duckdb.connect()
+    # a native table: filters pushed into an Arrow scan compare NaN the
+    # IEEE way, while DuckDB's own semantics make NaN the greatest
+    con.register("src", t)
+    con.execute("CREATE TABLE t AS SELECT * FROM src")
+    sel = []
+    for fn, col in _PARITY_AGGS:
+        if col == "*":
+            sel.append("count(*)")
+        elif fn in ("count_distinct", "approx_count_distinct"):
+            sel.append(f"count(DISTINCT {col})")  # approx: checked loosely
+        else:
+            sel.append(f"{fn}({col})")
+    where = " AND ".join(f"{c} {op} ?" for c, op, _v in filters or [])
+    got = con.execute(f"SELECT {', '.join(sel)} FROM t"
+                      + (f" WHERE {where}" if where else ""),
+                      [v for _c, _op, v in filters or []]).fetchone()
+    return {("count_star" if c == "*" else f"{fn}_{c}"): v
+            for (fn, c), v in zip(_PARITY_AGGS, got)}
+
+
+def _same(a, b, tol: float = 0.0) -> bool:
+    import math
+
+    if a is None or b is None:
+        return a is None and b is None
+    if isinstance(a, float) and math.isnan(a):
+        return isinstance(b, float) and math.isnan(b)
+    if tol:
+        return abs(a - b) <= tol
+    return a == b
+
+
+@pytest.mark.parametrize("kind", ["hash", "streamed", "evolved"])
+def test_driver_and_spark_plans_agree(spark, tmp_path, monkeypatch, kind):
+    """Every aggregate over every column type gives the same value, of
+    the same Python type, on the driver plan (pyarrow.compute over the
+    driver-decoded table, no Spark job) and on the Spark plan
+    (LOCAL_READ_MAX_BYTES = 0), and both match DuckDB."""
+    from kmers_spark.operators import decode as dec
+
+    out, rows = _parity_store(spark, kind, tmp_path)
+    for filt in _PARITY_FILTERS:
+        local, jobs = jobs_of(spark, lambda: agg_table(
+            spark, out, _PARITY_AGGS, filters=filt))
+        assert jobs == 0, filt
+        with monkeypatch.context() as mp:
+            mp.setattr(dec, "LOCAL_READ_MAX_BYTES", 0)
+            remote, jobs = jobs_of(spark, lambda: agg_table(
+                spark, out, _PARITY_AGGS, filters=filt))
+        assert jobs > 0, filt  # the decode really ran in Spark
+        truth = _duckdb_truth(rows, filt)
+        for name, want in truth.items():
+            a, b = local[name], remote[name]
+            tol = 1e-6 if name in _FP_ORDER else 0.0
+            assert _same(a, b, tol), (filt, name, a, b)
+            assert type(a) is type(b), (filt, name, a, b)
+            if name.startswith("approx_"):
+                assert abs(a - want) <= max(2, want // 10), (filt, name, a, want)
+            else:
+                assert _same(a, want, tol), (filt, name, a, want)
+
+
+def test_int_sum_overflow_raises_on_both_plans(spark, tmp_path, monkeypatch):
+    """An int64 sum past 2^63 raises on both plans (Spark's ANSI sum
+    does); the driver plan never wraps."""
+    from kmers_spark.operators import decode as dec
+
+    rows = [(f"http://h{i % 3}.example/{i}",
+             (1 << 62) if i < 10 else -5 if i % 2 else 1) for i in range(60)]
+    out = str(tmp_path / "snap")
+    encode_table(spark.createDataFrame(rows, "url string, v bigint"), out,
+                 num_buckets=3, detect_skew=False)
+    filt = [("v", ">", 0)]  # every bucket holds a -5 row: all straddle
+    with pytest.raises(Exception, match="(?i)overflow"):
+        agg_table(spark, out, [("sum", "v")], filters=filt)
+    with monkeypatch.context() as mp:
+        mp.setattr(dec, "LOCAL_READ_MAX_BYTES", 0)
+        with pytest.raises(Exception, match="(?i)overflow"):
+            agg_table(spark, out, [("sum", "v")], filters=filt)
+    # in range: exact on both plans
+    small = [("v", ">", 0), ("v", "<", 1 << 62)]
+    want = sum(1 for _u, v in rows if 0 < v < (1 << 62))
+    assert agg_table(spark, out, [("sum", "v")], filters=small) == {"sum_v": want}

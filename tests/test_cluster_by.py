@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from kmers_spark import manifest, zonemap
 from kmers_spark.operators import decode as dec, encode as enc, partitioning
+from tests.conftest import jobs_of, reads_no_files
 
 SF = "/root/testdata/sf0.001"
 
@@ -86,9 +87,10 @@ def test_out_of_range_scan_is_empty_plan(spark, rng_store):
     out, _m = rng_store
     df = dec.scan_table(spark, out, [("ts", ">=", datetime.datetime(2030, 1, 1))])
     assert df.count() == 0
-    # pruned to zero buckets driver-side: no parquet relation in the plan
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "Relation" not in plan or "LogicalRDD" in plan
+    # pruned to zero buckets driver-side: no parquet relation in the
+    # plan, and no Spark job to collect the empty result
+    assert reads_no_files(df)
+    assert jobs_of(spark, df.collect) == ([], 0)
 
 
 def test_full_decode_bit_identical(spark, events, rng_store):
@@ -207,8 +209,8 @@ def test_int_key_ranges_prune_lookups(spark, events, rng_store):
     assert ranges and all(isinstance(r[0], int) for r in ranges.values())
     got = dec.lookup_keys(spark, out, ["not-a-number"])
     assert got.count() == 0
-    plan = got._jdf.queryExecution().optimizedPlan().toString()
-    assert "Relation" not in plan or "LogicalRDD" in plan  # empty plan
+    assert reads_no_files(got)  # empty plan
+    assert jobs_of(spark, got.collect) == ([], 0)
     # numeric absent key beyond every recorded range: also zero buckets
     hi = max(r[1] for r in ranges.values())
     assert dec.lookup_keys(spark, out, [str(hi + 10_000_000)]).count() == 0

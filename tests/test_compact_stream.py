@@ -409,7 +409,7 @@ def test_compact_stream_jobs_and_inline_stats(spark, tmp_path):
     import pyarrow.dataset as pads
 
     from kmers_spark import wavewrite
-    from tests.test_local_read import _jobs_of
+    from tests.conftest import jobs_of
 
     src1, src2 = str(tmp_path / "s1"), str(tmp_path / "s2")
     out, ck1, ck2 = (str(tmp_path / n) for n in ("snap", "c1", "c2"))
@@ -432,7 +432,7 @@ def test_compact_stream_jobs_and_inline_stats(spark, tmp_path):
     for b in rows.column("bucket").to_pylist():
         old_len[b] = old_len.get(b, 0) + 1
 
-    res, jobs = _jobs_of(spark, lambda: compact_stream(spark, out, keep_last=1))
+    res, jobs = jobs_of(spark, lambda: compact_stream(spark, out, keep_last=1))
     assert res["merged_waves"] == old
     assert jobs == COMPACT_STREAM_JOBS
     m1 = manifest.load(out)

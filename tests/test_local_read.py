@@ -6,8 +6,9 @@ the local plan) and with LOCAL_READ_MAX_BYTES monkeypatched to 0, which
 forces the Spark plan. Both must return the same rows, order-
 insensitive, on every store shape and read path, and raise the same
 ValueError on a corrupt block set. The local plan's costs are pinned
-too: no Spark job for a present-key lookup or a selective scan, and no
-change to the driver's Arrow thread pool.
+too: no Spark job for a present-key lookup, a selective scan, a read
+pruned to nothing or a filtered aggregate, and no change to the
+driver's Arrow thread pool.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from kmers_spark.operators.agg import agg_table
 from kmers_spark.operators.delete import delete_keys
 from kmers_spark.operators.encode import encode_table
 from kmers_spark.operators.upsert import upsert_table
+from tests.conftest import jobs_of, reads_no_files
 
 N_B = 8
 
@@ -280,32 +282,77 @@ def small_store(spark, tmp_path_factory):
     return out, urls
 
 
-def _jobs_of(spark, fn) -> tuple[object, int]:
-    """fn()'s result and the number of Spark jobs it launched."""
-    sc = spark.sparkContext
-    group = "local-read-probe"
-    sc.setJobGroup(group, group)
-    try:
-        before = set(sc.statusTracker().getJobIdsForGroup(group))
-        result = fn()
-        return result, len(set(sc.statusTracker().getJobIdsForGroup(group)) - before)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-
-
 def test_small_reads_launch_no_spark_job(spark, small_store):
     out, urls = small_store
     cpu = pa.cpu_count()
-    rows, jobs = _jobs_of(spark, lambda: dec.lookup_keys(spark, out, urls[:1]).collect())
+    rows, jobs = jobs_of(spark, lambda: dec.lookup_keys(spark, out, urls[:1]).collect())
     assert [r["url"] for r in rows] == urls[:1]
     assert jobs == 0
-    rows, jobs = _jobs_of(spark, lambda: dec.scan_table(
+    rows, jobs = jobs_of(spark, lambda: dec.scan_table(
         spark, out, [("lang", "=", "pl")]).collect())
     assert rows and all(r["lang"] == "pl" for r in rows)
     assert jobs == 0
     # the kernel runs in the driver without pinning its Arrow pool
     assert pa.cpu_count() == cpu
+
+
+def _bloom_pruned_probe(out: str, urls: list[str]) -> str:
+    """An absent url inside its bucket's recorded key range that the
+    key Bloom sidecar drops: only the Bloom stage can prune it."""
+    m = manifest.load(out)
+    ranges = m["bucket_key_ranges"]
+    for u in urls:
+        probe = u + "~"
+        (b,) = dec.key_buckets(m, probe)
+        if (probe not in urls and dec.may_hold(ranges.get(str(b)), probe)
+                and not dec._bloom_prune(out, m, "url", {b: [probe]})):
+            return probe
+    raise AssertionError("no Bloom-pruned in-range probe")
+
+
+def test_empty_reads_launch_no_spark_job(spark, small_store, tmp_path):
+    """Reads pruned to zero buckets return an empty LocalRelation: no
+    parquet relation in the plan, and no Spark job to collect it."""
+    out, urls = small_store
+    probe = _bloom_pruned_probe(out, urls)
+    above = "zzz://never-crawled.invalid/"  # past every stored key range
+    ts_lo = [("warc_ts", "<", "1990-01-01T00:00:00")]  # zone-pruned
+    for read in (lambda: dec.lookup_keys(spark, out, [probe]),
+                 lambda: dec.lookup_keys(spark, out, [above]),
+                 lambda: dec.scan_table(spark, out, ts_lo),
+                 lambda: dec.scan_table(spark, out, ts_lo, columns=["url"])):
+        df, jobs = jobs_of(spark, read)
+        assert reads_no_files(df)
+        rows, collect_jobs = jobs_of(spark, df.collect)
+        assert rows == [] and jobs == collect_jobs == 0
+    ik = str(tmp_path / "int_key")
+    encode_table(spark.range(200).select(
+        F.col("id").alias("k"), (F.col("id") * 3).alias("v")),
+        ik, key="k", num_buckets=4, detect_skew=False)
+    for keys in (["not-a-number"], ["100000"]):
+        rows, jobs = jobs_of(spark, lambda: dec.lookup_keys(spark, ik, keys).collect())
+        assert rows == [] and jobs == 0
+
+
+def test_small_aggregates_launch_no_spark_job(spark, small_store, monkeypatch):
+    """A filtered agg_table whose buckets all straddle the filter (a
+    hash store scatters warc_ts) decodes in the driver and reduces with
+    pyarrow; its sketch pass hashes in the driver too. The Spark plan
+    gives the same answers and does launch jobs."""
+    out, _urls = small_store
+    ts = sorted(r[0] for r in dec.decode_colocated(
+        spark, out, columns=["warc_ts"]).collect())
+    filt = [("warc_ts", ">=", ts[100]), ("warc_ts", "<", ts[400])]
+    aggs = [("count", "*"), ("min", "warc_ts"), ("max", "warc_ts"),
+            ("approx_count_distinct", "url")]
+    local, jobs = jobs_of(spark, lambda: agg_table(spark, out, aggs, filters=filt))
+    assert jobs == 0 and local["count_star"] == 300
+    assert local["approx_count_distinct_url"] > 0
+    with monkeypatch.context() as mp:
+        mp.setattr(dec, "LOCAL_READ_MAX_BYTES", 0)
+        remote, jobs = jobs_of(spark, lambda: agg_table(spark, out, aggs,
+                                                        filters=filt))
+    assert jobs > 0 and remote == local
 
 
 def test_local_plan_fetches_only_candidate_buckets(spark, small_store,

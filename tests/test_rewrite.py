@@ -20,7 +20,8 @@ from kmers_spark.operators import rewrite as rw, upsert as up
 from kmers_spark.operators.delete import _candidate_pairs, delete_keys
 from kmers_spark.operators.encode import encode_table
 from kmers_spark.operators.upsert import upsert_table
-from tests.test_local_read import _corrupt, _jobs_of
+from tests.conftest import jobs_of
+from tests.test_local_read import _corrupt
 from tests.test_wavewrite import _per_bucket, _rows_on_disk
 
 PLANS = ["driver", "spark"]
@@ -104,13 +105,13 @@ def test_mutation_job_counts(spark, jobs_store, monkeypatch):
     out, df, by_bucket = jobs_store
     doomed = [keys[0] for keys in by_bucket.values()]
     monkeypatch.setattr(dec, "LOCAL_READ_MAX_BYTES", 0)
-    res, jobs = _jobs_of(spark, lambda: delete_keys(spark, out, doomed))
+    res, jobs = jobs_of(spark, lambda: delete_keys(spark, out, doomed))
     assert (res["rows_deleted"], res["plan"]) == (len(doomed), "spark")
     assert jobs <= DELETE_JOBS
     monkeypatch.undo()
     recrawl = df.filter(F.col("url").isin(by_bucket[0][1:6])) \
         .withColumn("lang", F.lit("xx"))
-    res, jobs = _jobs_of(spark, lambda: upsert_table(spark, out, recrawl))
+    res, jobs = jobs_of(spark, lambda: upsert_table(spark, out, recrawl))
     assert (res["rows_inserted"], res["rows_replaced"]) == (5, 5)
     assert res["plan"] == "spark"  # the input is not in the driver
     assert jobs <= UPSERT_JOBS
@@ -119,12 +120,12 @@ def test_mutation_job_counts(spark, jobs_store, monkeypatch):
 def test_small_mutations_launch_no_spark_job(spark, jobs_store):
     out, df, by_bucket = jobs_store
     doomed = [keys[-1] for keys in by_bucket.values()]
-    res, jobs = _jobs_of(spark, lambda: delete_keys(spark, out, doomed))
+    res, jobs = jobs_of(spark, lambda: delete_keys(spark, out, doomed))
     assert (res["rows_deleted"], res["plan"], jobs) == (len(doomed), "driver", 0)
     recrawl = _local(df.filter(F.col("url").isin(by_bucket[1][1:6]))
                      .withColumn("lang", F.lit("yy")))
     cpu, io = pa.cpu_count(), pa.io_thread_count()
-    res, jobs = _jobs_of(spark, lambda: upsert_table(spark, out, recrawl))
+    res, jobs = jobs_of(spark, lambda: upsert_table(spark, out, recrawl))
     assert (res["rows_inserted"], res["rows_replaced"]) == (5, 5)
     assert (res["plan"], jobs) == ("driver", 0)
     # the kernels ran in the driver without pinning its Arrow pools
@@ -199,7 +200,7 @@ def test_driver_plan_is_chosen_before_placement(spark, tmp_path,
 def test_encode_job_count_per_wave(spark, tmp_path):
     df = pages.pages_df(spark, 2000, seed=7, partitions=4).cache()
     df.count()
-    m, jobs = _jobs_of(spark, lambda: encode_table(
+    m, jobs = jobs_of(spark, lambda: encode_table(
         df, str(tmp_path / "snap"), num_buckets=8, commit_every=2))
     assert len(m["wave_dirs"]) == 4
     assert jobs <= ENCODE_4_WAVES_JOBS

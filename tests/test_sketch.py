@@ -23,11 +23,13 @@ from kmers_spark.kernels import sketch
 from kmers_spark.operators import agg as aggmod
 from kmers_spark.operators.agg import agg_table
 from kmers_spark.operators.encode import encode_table, rebuild_snapshot
+from tests.conftest import spy_agg_decodes
 
 
 def _no_decode(monkeypatch):
     def boom(*a, **k):
         raise AssertionError("stats-only aggregate decoded payload")
+    monkeypatch.setattr(aggmod, "decode_local", boom)
     monkeypatch.setattr(aggmod, "decode_colocated", boom)
     monkeypatch.setattr(aggmod, "decode_table", boom)
 
@@ -351,15 +353,8 @@ def test_approx_decodes_grouped_one_job(spark, ndv_store, monkeypatch):
     and the shared decode must not change the answers."""
     df, out = ndv_store
     seen_cols = []
-    real = aggmod.decode_colocated
-
-    def spy(spark_, out_dir, columns=None, filters=None, buckets=None,
-            snapshot=None):
-        seen_cols.append(list(columns or []))
-        return real(spark_, out_dir, columns=columns, filters=filters,
-                    buckets=buckets, snapshot=snapshot)
-
-    monkeypatch.setattr(aggmod, "decode_colocated", spy)
+    spy_agg_decodes(monkeypatch,
+                    lambda cols, _b: seen_cols.append(list(cols or [])))
     # n < 50 makes every bucket straddle (hash store scatters n)
     r = agg_table(spark, out, [("approx_count_distinct", "host"),
                                ("approx_count_distinct", "grp")],

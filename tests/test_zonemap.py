@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from kmers_spark import manifest, zonemap
 from kmers_spark.operators.decode import decode_table, scan_table
 from kmers_spark.operators.encode import encode_table
+from tests.conftest import jobs_of, reads_no_files
 
 
 # ------------------------------------------------------------- unit: bounds
@@ -179,9 +180,9 @@ def test_scan_outside_global_range_plans_no_scan(spark, events_store):
     the result is an empty local plan — zero files listed, zero jobs."""
     out, _df, _m = events_store
     res = scan_table(spark, out, [("value", ">", 1e12)])
-    plan = res._jdf.queryExecution().optimizedPlan().toString()
-    assert "Relation" not in plan  # no parquet source at all
+    assert reads_no_files(res)  # no parquet source at all
     assert res.count() == 0
+    assert jobs_of(spark, res.collect) == ([], 0)
     assert res.columns == ["event_id", "ts", "user_id", "event_type", "value", "props"]
 
 

@@ -209,16 +209,10 @@ def test_count_distinct_not_stats_added_on_zorder(spark, zdf, zstore,
     exact count_distinct must take the decode path (per-bucket zndv
     sums would be wrong if a key's rows ever spanned buckets, and
     eligibility is an allowlist)."""
-    from kmers_spark.operators import agg as aggmod
+    from tests.conftest import spy_agg_decodes
 
     calls = []
-    real = aggmod.decode_colocated
-
-    def spy(*a, **k):
-        calls.append(1)
-        return real(*a, **k)
-
-    monkeypatch.setattr(aggmod, "decode_colocated", spy)
+    spy_agg_decodes(monkeypatch, lambda *_: calls.append(1))
     r = agg_table(spark, zstore, [("count_distinct", "k")])
     assert r["count_distinct_k"] == 40000
     assert calls, "zorder store must decode for exact count_distinct"
