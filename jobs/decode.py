@@ -34,17 +34,7 @@ def main() -> None:
     ap.add_argument(
         "--columns", default=None,
         help="comma-separated column projection: only these columns' "
-        "block payloads are shuffled and decompressed",
-    )
-    ap.add_argument(
-        "--engine", choices=("auto", "shuffle", "colocated"), default="auto",
-        help="auto (default) = shuffle-free colocated decode, falling "
-        "back to the groupBy path only for --version time travel; "
-        "shuffle/colocated force a path",
-    )
-    ap.add_argument(
-        "--colocated", action="store_true",
-        help="alias for --engine colocated",
+        "block payloads are read and decompressed",
     )
     ap.add_argument(
         "--filter", action="append", default=[], metavar="COL:OP:VALUE",
@@ -62,12 +52,6 @@ def main() -> None:
     from kmers_spark.session import get_spark
 
     spark = get_spark("kmers_spark_decode")
-    engine = "colocated" if args.colocated else args.engine
-    if engine == "colocated" and args.version is not None:
-        raise SystemExit("--version requires the shuffle path (not --colocated)")
-    use_colocated = engine == "colocated" or (
-        engine == "auto" and args.version is None
-    )
     filters = None
     if args.filter:
         # resolve the schema AT the requested version: a filter on a
@@ -84,15 +68,9 @@ def main() -> None:
             raise SystemExit(str(e))
     columns = args.columns.split(",") if args.columns else None
     if args.filter:
-        # scan_table layers zone-map pruning; engine='auto' is already
-        # the shuffle-free path (or time-travels via shuffle)
+        # scan_table layers zone-map pruning over the same decode
         decoded = dec.scan_table(spark, args.snapshot, filters,
-                                 columns=columns, version=args.version,
-                                 engine=engine)
-    elif use_colocated:
-        decoded = dec.decode_colocated(
-            spark, args.snapshot, columns=columns
-        )
+                                 columns=columns, version=args.version)
     else:
         decoded = dec.decode_table(
             spark, args.snapshot, columns=columns, version=args.version

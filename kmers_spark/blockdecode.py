@@ -1,10 +1,11 @@
 """The bucket-decode kernel: one bucket's block rows -> its rows.
 
-Spark-free, so every read path runs this one function: the groupBy
-decode (decode_blocks_df), the colocated decode in Spark tasks and in
-the driver (decode_colocated), the `kmers` DataSource reader and the
-colocated join. The block-set integrity checks (duplicate, missing and
-stray columns) therefore exist once.
+Spark-free, so every read path runs this one function: the decode
+reader in Spark tasks and in the driver (operators/decode.py
+decode_colocated, behind decode_table, scan_table, lookup_keys,
+agg_table and topk_table), the `kmers` DataSource reader, the
+colocated join and the in-memory round trip. The block-set integrity
+checks (duplicate, missing and stray columns) therefore exist once.
 
 Blocks are self-describing, so a bucket decodes from its own rows
 alone. A streamed store holds one GENERATION of a bucket per wave

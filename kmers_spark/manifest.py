@@ -508,9 +508,9 @@ def commit_wave_append(out_dir: str, bucket_stats: dict[int, list[dict]],
         epochs = all_epochs.setdefault(stream_id, {})
         if is_replayed_epoch(epochs, epoch, stream_id):
             return m  # replay: no-op (caller cleans its staged wave)
-        # multi-generation marker: readers that cannot express
-        # generations (whole-bucket groupBy without a file key,
-        # compaction's single-file-per-bucket rewrite) check this
+        # multi-generation marker: readers that treat a bucket as one
+        # file (the decode reader's whole-bucket check, compaction's
+        # single-file-per-bucket rewrite) check this
         m["streamed"] = True
         if spill:
             m.setdefault("stats_files", []).append(
@@ -867,9 +867,8 @@ def wave_allowance(m: dict[str, Any], cols: list[str]) -> dict[str, set] | None:
     A wave at index i may miss column c iff i < the evolution watermark
     evolve_schema recorded for c (the wave predates the column). A
     generation at/after the watermark missing c is CORRUPT — readers
-    with file provenance (all three: the groupBy decode's
-    input_file_name generation key, the colocated reader's _gen
-    projection, the DataSource reader's fragment paths) raise instead
+    with file provenance (both: the decode reader's fragment paths and
+    _gen projection, the DataSource reader's fragment paths) raise instead
     of null-filling. Columns evolved BEFORE watermarks existed
     (legacy manifests without an evolution_waves entry) keep the old
     every-generation allowance — those stores cannot prove which

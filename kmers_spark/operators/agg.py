@@ -50,11 +50,10 @@ from pyspark.sql import functions as F
 
 from .. import manifest, zonemap
 from .decode import (
+    _ColocatedRead,
     _filters_expr,
     bloom_prune_filters,
     decode_colocated,
-    decode_local,
-    decode_table,
 )
 
 _AGG_FNS = ("count", "min", "max", "sum", "count_distinct",
@@ -185,27 +184,22 @@ _ARROW_AGG_TYPES = ("int64", "double", "string", "binary", "timestamp",
                     "timestamp_ntz")
 
 
-def _decoded(spark: SparkSession, out_dir: str, m: dict, pin: int,
-             version: int | None, need: list[str], filters: list[tuple] | None,
-             norm: list[tuple], buckets: list[int], schema: dict[str, str],
-             driver: bool = True) -> DataFrame | pa.Table:
+def _decoded(spark: SparkSession, out_dir: str, m: dict, need: list[str],
+             filters: list[tuple] | None, norm: list[tuple], buckets: list[int],
+             schema: dict[str, str], driver: bool = True) -> DataFrame | pa.Table:
     """The rows of `buckets` that match the filters, `need` columns
-    only. A latest-version read within LOCAL_READ_MAX_BYTES (and
-    `driver` allowed) is a pa.Table decoded in the driver, whose
-    kernel mask already applied the filters exactly; anything else is a
-    DataFrame (colocated Spark plan, or decode_table for time travel)
-    with the residual filter on top."""
-    if version is None:
-        if driver:
-            table = decode_local(spark, out_dir, columns=need, filters=filters,
-                                 buckets=buckets, snapshot=m)
-            if table is not None:
-                return table
-        df = decode_colocated(spark, out_dir, columns=need, filters=filters,
-                              buckets=buckets, snapshot=m)
-    else:
-        df = decode_table(spark, out_dir, buckets=buckets, columns=need,
-                          version=pin or None, filters=filters)
+    only, at the snapshot `m`. A read within LOCAL_READ_MAX_BYTES (and
+    `driver` allowed) is a pa.Table decoded in the driver, whose kernel
+    mask already applied the filters exactly; anything else is a
+    decode_colocated DataFrame with the residual filter on top. Both
+    plans share one set-up (one block-stats read)."""
+    read = _ColocatedRead(spark, out_dir, need, filters, buckets, m)
+    if driver:
+        table = read.local_table()
+        if table is not None:
+            return table
+    df = decode_colocated(spark, out_dir, columns=need, filters=filters,
+                          buckets=buckets, snapshot=m, read=read)
     return df.filter(_filters_expr(norm, schema)) if norm else df
 
 
@@ -291,11 +285,12 @@ def agg_table(spark: SparkSession, out_dir: str,
     `version` pins a time-travel read.
 
     Whatever stats cannot prove decodes once per distinct bucket set.
-    A latest-version decode whose payload fits LOCAL_READ_MAX_BYTES
-    runs in the driver (decode_local) and is reduced there with
-    pyarrow.compute and the sketch kernel, so the whole call launches
-    no Spark job; a larger or time-travel decode costs one job per
-    bucket set. Both plans return the same values (see _arrow_agg).
+    A decode whose payload fits LOCAL_READ_MAX_BYTES runs in the
+    driver (decode_colocated's driver plan, as a pa.Table) and is
+    reduced there with pyarrow.compute and the sketch kernel, so the
+    whole call launches no Spark job, at any version; a larger decode
+    costs one job per bucket set. Both plans return the same values
+    (see _arrow_agg).
     """
     if not aggs:
         raise ValueError("aggs must not be empty")
@@ -317,8 +312,7 @@ def agg_table(spark: SparkSession, out_dir: str,
                 out["count_star" if col == "*" else f"{fn}_{col}"] = \
                     res["count_star" if col == "*" else f"{fn}_{col}"]
         return out
-    m, pin = (manifest.load_with_version(out_dir) if version is None
-              else (manifest.load(out_dir, version=version), version))
+    m = manifest.load(out_dir, version=version)
     if m is None:
         raise FileNotFoundError(f"no manifest in {out_dir}")
     schema = manifest.ordered_schema(m)
@@ -580,7 +574,7 @@ def agg_table(spark: SparkSession, out_dir: str,
             need_cols = {c: schema[c] for _i, c, _b, _m in items}
             need = sorted(set(need_cols)
                           | {c for c, _o, _bv, _v in norm})
-            rows = _decoded(spark, out_dir, m, pin, version, need, filters,
+            rows = _decoded(spark, out_dir, m, need, filters,
                             norm, sorted(bset), schema)
             reg_map = _hll_registers_multi(rows, need_cols)
             for i, col, _b, merged in items:
@@ -605,7 +599,7 @@ def agg_table(spark: SparkSession, out_dir: str,
                       | set(fcols)) or [key]
         arrow_ok = all(aggs[i][1] == "*"
                        or schema[aggs[i][1]] in _ARROW_AGG_TYPES for i in idxs)
-        rows = _decoded(spark, out_dir, m, pin, version, need, filters, norm,
+        rows = _decoded(spark, out_dir, m, need, filters, norm,
                         sorted(bucket_set), schema, driver=arrow_ok)
         if isinstance(rows, pa.Table):
             vals = [_arrow_agg(rows, *aggs[i], schema.get(aggs[i][1]))
@@ -678,8 +672,7 @@ def agg_table_grouped(spark: SparkSession, out_dir: str,
         raise ValueError("group_by must not be empty")
     if not aggs:
         raise ValueError("aggs must not be empty")
-    m, pin = (manifest.load_with_version(out_dir) if version is None
-              else (manifest.load(out_dir, version=version), version))
+    m = manifest.load(out_dir, version=version)
     if m is None:
         raise FileNotFoundError(f"no manifest in {out_dir}")
     schema = manifest.ordered_schema(m)
@@ -829,7 +822,7 @@ def agg_table_grouped(spark: SparkSession, out_dir: str,
         need = sorted(set(group_by)
                       | {c for _f, c in inner if c != "*"}
                       | {c for c, _o, _b, _v in norm}) or [key]
-        df = _decoded(spark, out_dir, m, pin, version, need, filters, norm,
+        df = _decoded(spark, out_dir, m, need, filters, norm,
                       sorted(decode_buckets), schema, driver=False)
         exprs = []
         for (fn, col), pn in zip(inner, pnames):

@@ -3,8 +3,10 @@
 Mirrors the reference's round-trip contract (decode(encode(x)) == x,
 naive.rs golden tests) at table scale: every column is reproduced
 byte-identical per url — the north-rule invariant. Each bucket decodes
-independently (blocks are self-describing), so decode parallelism ==
-bucket count and no shuffle is needed beyond the scan's grouping.
+independently (blocks are self-describing) and every block file holds
+whole buckets, so one reader (decode_colocated) decodes each file in
+place with no shuffle, at any manifest version; decode_table,
+scan_table, lookup_keys, agg_table and topk_table all read through it.
 """
 
 from __future__ import annotations
@@ -12,6 +14,7 @@ from __future__ import annotations
 import math
 
 import pyarrow as pa
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import blockdecode, manifest
@@ -40,18 +43,17 @@ def decode_table(spark: SparkSession, out_dir: str, buckets: list[int] | None = 
     immutable version chain: the read sees exactly the waves that
     version's commit published, Iceberg snapshot-read semantics. A
     version whose wave dirs were since compacted away and reclaimed
-    fails at scan time, like reading an expired Iceberg snapshot).
+    fails like reading an expired Iceberg snapshot).
 
-    `columns` is the block-store analogue of parquet column pruning:
-    the projection is pushed BELOW the bucket shuffle as a filter on the
-    block rows' `column` field, so unwanted payloads (html/text are the
-    bulk of every block) are neither read into the shuffle nor
-    decompressed — decoding one column of a 10^12-row snapshot moves
-    ~1/n_cols of the bytes. Output column order follows the manifest
-    schema.
+    The read is decode_colocated's at the pinned snapshot, so a past
+    version gets the same two plans as the latest one. `columns` is
+    the block-store analogue of parquet column pruning: the block rows
+    of other columns are filtered out at the block scan, so their
+    payloads (html/text are the bulk of every block) are neither read
+    nor decompressed. Output column order follows the manifest schema.
 
     `filters` ((col, op, value) triples, ANDed) are evaluated INSIDE
-    the decode kernel (late materialization — see decode_blocks_df);
+    the decode kernel (late materialization, blockdecode.decode_bucket);
     filter columns must survive the `columns` projection. scan_table
     is the user surface that combines this with zone-map bucket
     pruning; here the kernel filter alone still bounds what crosses
@@ -59,47 +61,8 @@ def decode_table(spark: SparkSession, out_dir: str, buckets: list[int] | None = 
     m = manifest.load(out_dir, version=version)
     if m is None:
         raise FileNotFoundError(f"no manifest in {out_dir}")
-    # never-evolved: no null-fill allowance, so skip the stats read
-    stats = manifest.block_stats(out_dir, m, buckets=buckets) \
-        if m.get("evolved") else None
-    schema, dec_schema, missing, anchor = _read_columns(spark, m, columns, stats)
-    cols = list(schema)
-
-    # manifest-level wave pruning first (skip whole data dirs), then the
-    # bucket predicate prunes parquet row groups inside the survivors
-    paths = committed_wave_paths(out_dir, m, buckets=buckets)
-    if not paths:
-        return empty_result(spark, schema)
-    blocks = spark.read.parquet(*paths)
-    if buckets is not None:
-        blocks = blocks.filter(blocks.bucket.isin(buckets))
-    if columns is not None and len(dec_schema) < len(manifest.ordered_schema(m)):
-        blocks = blocks.filter(blocks.column.isin(list(dec_schema)))
-    norm = None
-    if filters:
-        from .. import zonemap
-
-        norm = zonemap.normalize_filters(filters, schema)
-    gen_key = None
-    gen_missing = None
-    if m.get("streamed"):
-        # streamed stores hold several GENERATIONS of a bucket (one per
-        # appended wave file); grouping on (bucket, file) decodes each
-        # generation independently and the rows union — the same
-        # isolation decode_colocated gets for free from its one-file-
-        # per-partition scan
-        from pyspark.sql import functions as F
-
-        blocks = blocks.withColumn("_gen", F.input_file_name())
-        gen_key = "_gen"
-        # per-generation evolution allowance: a generation written
-        # AFTER a column was added must carry its block — missing then
-        # means corruption, not evolution, and the kernel raises
-        gen_missing = manifest.wave_allowance(m, cols)
-    df = decode_blocks_df(blocks, dec_schema, _ddl(dec_schema), norm_filters=norm,
-                          missing=missing, gen_key=gen_key,
-                          gen_missing=gen_missing)
-    return df.select(*cols) if anchor else df
+    return decode_colocated(spark, out_dir, columns=columns, filters=filters,
+                            buckets=buckets, snapshot=m)
 
 
 def _ddl(schema: dict[str, str], cols: list[str] | None = None) -> str:
@@ -160,57 +123,9 @@ def _read_columns(spark: SparkSession, m: dict, columns: list[str] | None,
     return schema, dec_schema, missing, anchor
 
 
-def decode_blocks_df(blocks: DataFrame, schema: dict[str, str], out_schema: str,
-                     norm_filters: list[tuple] | None = None,
-                     missing: dict[int, set] | None = None,
-                     gen_key: str | None = None,
-                     gen_missing: dict[str, set] | None = None) -> DataFrame:
-    """block rows -> original rows: a groupBy on the bucket (and, on
-    streamed stores, the generation) runs blockdecode.decode_bucket
-    once per group.
-
-    `norm_filters` (zonemap.normalize_filters output) pushes the scan
-    predicate INTO the decode kernel — late materialization: the filter
-    columns decode first, the selection mask is evaluated on them, and
-    the bulk columns (html/text dominate every block) are decoded only
-    when the mask selects anything and emitted only for matching rows.
-    A selective filter therefore moves matching rows across the Arrow
-    boundary instead of whole buckets, and a bucket with zero matches
-    skips bulk decode entirely (block-granular dictionary-scan
-    behavior, one level below the manifest's zone pruning).
-
-    `missing` ({bucket: columns that bucket has no block for}, from
-    manifest.missing_columns) null-fills schema-evolved columns; a
-    column absent WITHOUT a missing-set entry is still a hard error
-    (bucket split across partitions / corrupt wave).
-
-    `gen_missing` (manifest.wave_allowance, streamed stores) overrides
-    `missing` at GENERATION granularity: the group's gen_key file path
-    names its wave, and only columns the wave predates may null-fill —
-    a post-evolution generation missing an evolved column raises."""
-    from .. import arrowcodecs
-
-    missing = missing or {}
-    grouped = blocks.groupBy("bucket", gen_key) if gen_key \
-        else blocks.groupBy("bucket")
-
-    def decode_group(table):
-        arrowcodecs.pin_worker_threads()
-        if gen_missing is not None and gen_key:
-            allow = gen_missing.get(
-                blockdecode.wave_of(table.column(gen_key)[0].as_py()), set()
-            )
-        else:
-            allow = missing.get(int(table.column("bucket")[0].as_py()), ())
-        return blockdecode.decode_bucket(table, schema, norm_filters, allow)
-
-    return grouped.applyInArrow(decode_group, out_schema)
-
-
 def scan_table(spark: SparkSession, out_dir: str, filters: list[tuple],
                columns: list[str] | None = None,
-               version: int | None = None,
-               engine: str = "auto") -> DataFrame:
+               version: int | None = None) -> DataFrame:
     """Filtered scan over the compressed store with zone-map pruning.
 
     `filters` is a list of (column, op, value) with op in zonemap.OPS
@@ -240,14 +155,11 @@ def scan_table(spark: SparkSession, out_dir: str, filters: list[tuple],
     need are decoded even when `columns` projects them out, then
     dropped.
 
-    `engine`: "auto" (default) runs the SHUFFLE-FREE colocated decode —
-    block files hold whole buckets, so the kernels run straight off the
-    scan with no exchange of payload bytes — falling back to the
-    groupBy path only for time-travel reads (`version`), whose wave
-    layout the colocated reader does not resolve. "shuffle" /
-    "colocated" force a path. The colocated decode itself decodes in
-    the driver when the surviving buckets' payload is at most
-    LOCAL_READ_MAX_BYTES (see decode_colocated): a selective scan then
+    The decode is decode_colocated's at the pruning's snapshot (the
+    latest, or `version`): block files hold whole buckets, so the
+    kernels run straight off the scan with no exchange of payload
+    bytes, and when the surviving buckets' payload is at most
+    LOCAL_READ_MAX_BYTES the driver decodes them: a selective scan then
     returns a LocalRelation that the residual filter folds into, and
     collecting it launches no Spark job.
 
@@ -256,16 +168,9 @@ def scan_table(spark: SparkSession, out_dir: str, filters: list[tuple],
     column — see kmers_spark/zonemap.py."""
     from .. import zonemap
 
-    if engine not in ("auto", "shuffle", "colocated"):
-        raise ValueError(f"unknown engine {engine!r}")
-    if engine == "colocated" and version is not None:
-        raise ValueError("time-travel scans require engine='shuffle' (or 'auto')")
-    if version is None:
-        # one read pins pruning AND decode to the same snapshot (a
-        # commit landing mid-scan must not mix two versions' wave sets)
-        m, pin = manifest.load_with_version(out_dir)
-    else:
-        m, pin = manifest.load(out_dir, version=version), version
+    # one read pins pruning AND decode to the same snapshot (a commit
+    # landing mid-scan must not mix two versions' wave sets)
+    m = manifest.load(out_dir, version=version)
     if m is None:
         raise FileNotFoundError(f"no manifest in {out_dir}")
     schema = manifest.ordered_schema(m)
@@ -294,15 +199,8 @@ def scan_table(spark: SparkSession, out_dir: str, filters: list[tuple],
     # all committed buckets surviving == unfiltered scan: skip the isin
     # (no pruning value, and a 10^5-literal predicate bloats codegen)
     bsel = None if len(buckets) == len(m.get("committed_buckets", [])) else buckets
-    use_colocated = engine == "colocated" or (engine == "auto" and version is None)
-    if use_colocated:
-        df = decode_colocated(spark, out_dir, columns=decode_cols,
-                              filters=filters, buckets=bsel, snapshot=m)
-    else:
-        # pin = 0 only for legacy single-file manifests (no version chain
-        # to pin against — pass None and accept the legacy behavior)
-        df = decode_table(spark, out_dir, buckets=bsel, columns=decode_cols,
-                          version=pin or None, filters=filters)
+    df = decode_colocated(spark, out_dir, columns=decode_cols,
+                          filters=filters, buckets=bsel, snapshot=m)
     # the kernel already applied the predicate (late materialization);
     # the JVM residual re-asserts it over the surviving rows — near-free
     # (codegen over matches only) and keeps the query's semantics
@@ -591,11 +489,14 @@ def decode_colocated(spark: SparkSession, out_dir: str,
                      columns: list[str] | None = None,
                      filters: list[tuple] | None = None,
                      buckets: list[int] | None = None,
-                     snapshot: dict | None = None) -> DataFrame:
-    """Shuffle-free decode of the committed store (optionally bucket-
+                     snapshot: dict | None = None,
+                     *, read: "_ColocatedRead | None" = None) -> DataFrame:
+    """The decode reader: the store at `snapshot` (default: the latest
+    manifest; decode_table passes a pinned version), optionally bucket-
     and column-projected, with `filters` late-materialized inside the
-    kernel) at its latest version; time-travel reads (`version=`) stay
-    on decode_table.
+    kernel. `read` is the set-up of these same arguments when the
+    caller already built it (agg_table tries the driver plan on it
+    first).
 
     Block files are written bucket-grouped (one writer task = whole
     buckets), so each file decodes on its own with no exchange of
@@ -604,25 +505,27 @@ def decode_colocated(spark: SparkSession, out_dir: str,
     decoded columns:
 
       * at most LOCAL_READ_MAX_BYTES: the DRIVER decodes the rows
-        (decode_local) and returns spark.createDataFrame(table) — a
-        LocalRelation. No Spark job is needed to produce it, and
-        filters stacked on top fold into it. This plan is eager: the
-        decode runs, and a corrupt block set raises, before the call
-        returns.
+        (_ColocatedRead.local_table) and returns
+        spark.createDataFrame(table) — a LocalRelation. No Spark job is
+        needed to produce it, and filters stacked on top fold into it.
       * larger: a mapInArrow pass over the block files, one file per
         scan partition, runs the same kernel in Spark tasks.
 
     Both plans decode one file at a time, bucket by bucket, so they
-    return the same rows and raise the same corruption errors."""
-    import pyarrow as pa
-
+    return the same rows and raise the same corruption errors. Before
+    decoding anything, both check in the driver that no bucket of a
+    batch wave sits in two files (a whole stray copy of a bucket would
+    otherwise decode twice), so that error raises at call time on
+    either plan; the driver plan's kernel errors do too."""
     from .. import arrowcodecs
 
-    read = _ColocatedRead(spark, out_dir, columns, filters, buckets, snapshot)
+    if read is None:
+        read = _ColocatedRead(spark, out_dir, columns, filters, buckets, snapshot)
     out_schema = _ddl(read.dec_schema, read.cols)
     table = read.local_table()
     if table is not None:
         return spark.createDataFrame(table, out_schema)
+    read.check_whole_buckets()
 
     # Whole files per scan partition so buckets never split: the default
     # spark.sql.files.maxPartitionBytes (128MB) would split a large block
@@ -640,8 +543,8 @@ def decode_colocated(spark: SparkSession, out_dir: str,
     s2.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 40))
     s2.conf.set("spark.sql.files.openCostInBytes", str(1 << 40))
     blocks = s2.read.parquet(*read.paths)
-    if buckets is not None:
-        blocks = blocks.filter(blocks.bucket.isin(buckets))
+    if read.buckets is not None:
+        blocks = blocks.filter(blocks.bucket.isin(read.buckets))
     if read.projected:
         # projection below the scan: unwanted payloads never decompress
         blocks = blocks.filter(blocks.column.isin(list(read.dec_schema)))
@@ -668,26 +571,10 @@ def decode_colocated(spark: SparkSession, out_dir: str,
     return blocks.mapInArrow(decode_partition, out_schema)
 
 
-def decode_local(spark: SparkSession, out_dir: str,
-                 columns: list[str] | None = None,
-                 filters: list[tuple] | None = None,
-                 buckets: list[int] | None = None,
-                 snapshot: dict | None = None) -> pa.Table | None:
-    """decode_colocated's driver plan on its own: the decoded rows as a
-    pyarrow Table (the requested columns in schema order, decode-typed,
-    `filters` already applied exactly by the kernel mask), or None when
-    the read's payload exceeds LOCAL_READ_MAX_BYTES and only the Spark
-    plan may run it. Readers that reduce the rows in the driver
-    (agg_table) consume the table directly and never round-trip it
-    through the JVM."""
-    return _ColocatedRead(spark, out_dir, columns, filters, buckets,
-                          snapshot).local_table()
-
-
 class _ColocatedRead:
     """The set-up both plans of a colocated read share: the columns to
-    decode, the normalized filters, the surviving wave files and the
-    per-file kernel."""
+    decode, the normalized filters, the surviving wave files, the
+    block-row predicate and the per-file kernel."""
 
     def __init__(self, spark: SparkSession, out_dir: str,
                  columns: list[str] | None, filters: list[tuple] | None,
@@ -708,14 +595,29 @@ class _ColocatedRead:
             from .. import zonemap
 
             self.norm = zonemap.normalize_filters(filters, schema)
-        # wave-dir pruning for bucket-filtered reads, same as decode_table
+        # wave-dir pruning for bucket-filtered reads
         self.paths = committed_wave_paths(out_dir, m, buckets=buckets)
         self.projected = columns is not None \
             and len(self.dec_schema) < len(manifest.ordered_schema(m))
+        # the block rows the read fetches, as a pyarrow.dataset filter
+        self.pred = pads.scalar(True)
+        if buckets is not None:
+            self.pred &= pads.field("bucket").isin(list(buckets))
+        if self.projected:
+            self.pred &= pads.field("column").isin(list(self.dec_schema))
         # streamed stores: the evolution allowance applies per GENERATION
         # (a post-evolution generation missing an evolved column raises)
         self.gen_missing = manifest.wave_allowance(m, self.cols) \
             if m.get("streamed") else None
+        # a batch wave holds each bucket in ONE file; a streamed store
+        # adds a generation of a bucket per file
+        self.whole_buckets = not m.get("streamed")
+
+    def fragments(self) -> list[tuple[str, object]]:
+        """(wave path, parquet fragment) of every block file the read
+        opens."""
+        return [(p, frag) for p in self.paths
+                for frag in pads.dataset(p, format="parquet").get_fragments()]
 
     def decode_file(self, rows: pa.Table, wave: str | None):
         """One block file's rows (whole buckets of one generation) ->
@@ -728,32 +630,54 @@ class _ColocatedRead:
             if out.num_rows:
                 yield out
 
+    def check_whole_buckets(self) -> None:
+        """The Spark plan's whole-bucket check, run in the driver before
+        the plan is built: it reads each file's bucket field (no
+        payload, no Spark job)."""
+        if self.whole_buckets:
+            _assert_whole_buckets(
+                (p, frag.path, frag.to_table(filter=self.pred, columns=["bucket"]))
+                for p, frag in self.fragments())
+
     def local_table(self) -> pa.Table | None:
         """The driver plan: the block rows read with pyarrow.dataset,
-        file by file, through decode_file — or None over the budget. A
-        read with no committed file is empty whatever its stats say."""
-        import pyarrow.dataset as pads
-
+        file by file, checked for whole buckets, then decoded through
+        decode_file — or None over the budget. A read with no committed
+        file is empty whatever its stats say."""
         if not self.paths:
             return blockdecode.empty_table(self.dec_schema, self.cols)
         if self.payload > LOCAL_READ_MAX_BYTES:
             return None
-        pred = pads.scalar(True)
-        if self.buckets is not None:
-            pred &= pads.field("bucket").isin(list(self.buckets))
-        if self.projected:
-            pred &= pads.field("column").isin(list(self.dec_schema))
-        tables = [
-            t
-            for p in self.paths
-            for frag in pads.dataset(p, format="parquet").get_fragments()
-            for t in self.decode_file(
-                frag.to_table(filter=pred, columns=blockdecode.FETCH),
-                blockdecode.wave_of(frag.path),
-            )
-        ]
+        files = [(p, frag.path,
+                  frag.to_table(filter=self.pred, columns=blockdecode.FETCH))
+                 for p, frag in self.fragments()]
+        if self.whole_buckets:
+            _assert_whole_buckets(files)
+        tables = [t for _p, path, rows in files
+                  for t in self.decode_file(rows, blockdecode.wave_of(path))]
         return pa.concat_tables(tables) if tables \
             else blockdecode.empty_table(self.dec_schema, self.cols)
+
+
+def _assert_whole_buckets(files) -> None:
+    """Raise the kernel's duplicate-block-rows error when a bucket sits
+    in two of `files` ((wave path, file path, block rows holding at
+    least their `bucket` field)) of one wave."""
+    import os
+
+    import pyarrow.compute as pc
+
+    seen: dict[tuple[str, int], str] = {}
+    for wave, path, rows in files:
+        for b in pc.unique(rows.column("bucket")).to_pylist():
+            first = seen.setdefault((wave, b), path)
+            if first != path:
+                raise ValueError(
+                    f"duplicate block rows for bucket {b}: wave {wave} holds "
+                    f"it in two files ({os.path.basename(first)}, "
+                    f"{os.path.basename(path)}) (stray rows from an "
+                    "uncommitted write, or a corrupt wave dir)"
+                )
 
 
 def _payload_bytes(stats: dict[str, list], buckets: list[int] | None,

@@ -11,22 +11,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .. import manifest as _mf
-from .. import selector
-from .decode import decode_blocks_df
+from .. import arrowcodecs, blockdecode, selector
+from .decode import _ddl
 from .encode import encode_blocks_df
-
-_SPARK_TYPE = _mf.SPARK_DDL_TYPES
 
 
 def roundtrip(df: DataFrame, key: str, *, num_buckets: int = 8,
               codec_overrides: dict[str, str] | None = None) -> DataFrame:
     """encode+decode df, returning the same rows (order undefined)."""
     schema = {f.name: selector.spark_type_name(f.dataType) for f in df.schema.fields}
-    out_schema = ", ".join(f"`{c}` {_SPARK_TYPE[t]}" for c, t in schema.items())
 
     bucketed = df.withColumn(
         "bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(num_buckets)).cast("int")
     )
     blocks = encode_blocks_df(bucketed, schema, key, codec_overrides)
-    return decode_blocks_df(blocks, schema, out_schema)
+
+    # no store here: the shuffled block rows of a bucket are one group
+    def decode_group(table):
+        arrowcodecs.pin_worker_threads()
+        return blockdecode.decode_bucket(table, schema)
+
+    return blocks.groupBy("bucket").applyInArrow(decode_group, _ddl(schema))

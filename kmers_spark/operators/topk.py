@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from .. import manifest, zonemap
 from .agg import _bucket_contained, _entries
-from .decode import _filters_expr, decode_colocated, decode_table, empty_result
+from .decode import _filters_expr, decode_colocated, empty_result
 
 _UNBOUNDED = object()  # "no recorded bound": ranks before every real value
 
@@ -115,10 +115,7 @@ def topk_table(spark: SparkSession, out_dir: str, order_by, k: int, *,
         raise ValueError("order_by must name at least one column")
     if k < 1:
         raise ValueError("k must be >= 1")
-    if version is None:
-        m, pin = manifest.load_with_version(out_dir)
-    else:
-        m, pin = manifest.load(out_dir, version=version), version
+    m = manifest.load(out_dir, version=version)
     if m is None:
         raise FileNotFoundError(f"no manifest in {out_dir}")
     schema = manifest.ordered_schema(m)
@@ -202,12 +199,8 @@ def topk_table(spark: SparkSession, out_dir: str, order_by, k: int, *,
                    if c in set(out_cols) | fcols | set(order_by)]
     bsel = None if len(selected) == len(m.get("committed_buckets", [])) \
         else selected
-    if version is None:
-        df = decode_colocated(spark, out_dir, columns=decode_cols,
-                              filters=filters, buckets=bsel, snapshot=m)
-    else:
-        df = decode_table(spark, out_dir, buckets=bsel, columns=decode_cols,
-                          version=pin or None, filters=filters)
+    df = decode_colocated(spark, out_dir, columns=decode_cols,
+                          filters=filters, buckets=bsel, snapshot=m)
     if norm:
         df = df.filter(_filters_expr(norm, schema))
     order_exprs = [

@@ -7,7 +7,8 @@ Structured Streaming's file source cannot take its file list from a
 manifest (it lists directories, which would read uncommitted orphan
 waves), so the stream is a ticker (rate source) driving foreachBatch;
 each tick diffs the LATEST manifest's wave list against a processed-set
-checkpoint and decodes the new waves with the batch decode kernels.
+checkpoint and decodes each new wave with the batch reader
+(decode_colocated over the snapshot narrowed to that wave).
 Idempotence is per wave, not per epoch: every wave decodes into its own
 sink partition dir with overwrite, and the processed marker is written
 only after the sink write lands — a crash (or Spark epoch replay)
@@ -24,8 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import manifest
-from ..operators.decode import _SPARK_TYPE, decode_blocks_df
-from ..operators.encode import BLOCK_SCHEMA, assert_utc_session
+from ..operators.decode import decode_colocated
 
 STATE_NAME = "processed_waves.json"
 
@@ -83,30 +83,12 @@ def decode_new_waves(spark: SparkSession, out_dir: str, sink_dir: str,
             "follow it with spark.readStream.format('kmers') — "
             "decode_stream's wave tracking cannot express generations"
         )
-    schema = manifest.ordered_schema(m)  # writer column order, like batch
-    assert_utc_session(spark, schema)
-    out_schema = ", ".join(f"`{c}` {_SPARK_TYPE[t]}" for c, t in schema.items())
-    norm = None
-    if filters:
+    if filters and all(isinstance(f, str) for f in filters):
+        # raw COL:OP:VALUE specs (a --follow job started before the
+        # first manifest commit defers parsing until one exists)
         from .. import zonemap
 
-        if all(isinstance(f, str) for f in filters):
-            # raw COL:OP:VALUE specs (a --follow job started before the
-            # first manifest commit defers parsing until one exists)
-            filters = zonemap.parse_cli_filters(filters, schema)
-        norm = zonemap.normalize_filters(filters, schema)
-    # schema evolution: waves committed before an evolve_schema lack the
-    # added columns' blocks. Batch stores null-fill per bucket (stats-
-    # derived); streamed stores per GENERATION (watermark-derived), so a
-    # post-evolution wave missing an evolved column still raises.
-    missing = (
-        manifest.missing_columns(
-            m, list(schema), blocks=manifest.block_stats(out_dir, m)
-        )
-        if m.get("evolved") and not m.get("streamed") else {}
-    )
-    gen_missing = manifest.wave_allowance(m, list(schema)) \
-        if m.get("evolved") else None
+        filters = zonemap.parse_cli_filters(filters, m["schema"])
     st = _load_state(state_path)
     waves, buckets = set(st["waves"]), set(st["buckets"])
     wb = m.get("wave_buckets", {})
@@ -120,22 +102,12 @@ def decode_new_waves(spark: SparkSession, out_dir: str, sink_dir: str,
             waves.add(wd)
             _save_state(state_path, waves, buckets)
             continue
-        blocks = spark.read.schema(BLOCK_SCHEMA).parquet(f"{out_dir}/{wd}")
-        if wave_buckets is not None and buckets.intersection(wave_buckets):
-            # partial overlap (compaction merged delivered + undelivered
-            # waves): decode only the buckets this stream hasn't shipped
-            blocks = blocks.filter(
-                blocks.bucket.isin(sorted(set(wave_buckets) - buckets))
-            )
-        gen_key = None
-        if gen_missing is not None:
-            from pyspark.sql import functions as F
-
-            blocks = blocks.withColumn("_gen", F.input_file_name())
-            gen_key = "_gen"
-        decoded = decode_blocks_df(blocks, schema, out_schema,
-                                   norm_filters=norm, missing=missing,
-                                   gen_key=gen_key, gen_missing=gen_missing)
+        # the batch reader, given the snapshot narrowed to this wave;
+        # on a partial overlap (compaction merged delivered and
+        # undelivered waves) only the buckets not yet shipped
+        todo = None if wave_buckets is None else sorted(set(wave_buckets) - buckets)
+        decoded = decode_colocated(spark, out_dir, filters=filters, buckets=todo,
+                                   snapshot={**m, "wave_dirs": [wd]})
         wave_id = wd.rsplit("/", 1)[-1]
         decoded.write.mode("overwrite").parquet(f"{sink_dir}/wave={wave_id}")
         waves.add(wd)

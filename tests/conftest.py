@@ -37,20 +37,14 @@ def reads_no_files(df) -> bool:
 
 
 def spy_agg_decodes(monkeypatch, record) -> None:
-    """Call record(columns, buckets) for every latest-version decode
-    agg_table runs, on either plan (decode_local answers None when it
-    leaves the read to decode_colocated)."""
+    """Call record(columns, buckets) for every decode agg_table runs,
+    on either plan (both start from one _ColocatedRead set-up)."""
     from kmers_spark.operators import agg as aggmod
 
-    def spying(real):
-        def spy(spark, out_dir, columns=None, filters=None, buckets=None,
-                snapshot=None):
-            got = real(spark, out_dir, columns=columns, filters=filters,
-                       buckets=buckets, snapshot=snapshot)
-            if got is not None:
-                record(columns, buckets)
-            return got
-        return spy
+    real = aggmod._ColocatedRead
 
-    for name in ("decode_local", "decode_colocated"):
-        monkeypatch.setattr(aggmod, name, spying(getattr(aggmod, name)))
+    def spy(spark, out_dir, columns, filters, buckets, snapshot):
+        record(columns, buckets)
+        return real(spark, out_dir, columns, filters, buckets, snapshot)
+
+    monkeypatch.setattr(aggmod, "_ColocatedRead", spy)

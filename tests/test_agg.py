@@ -73,9 +73,8 @@ def _no_decode(monkeypatch):
     """Fail the test if any decode path runs."""
     def boom(*a, **k):
         raise AssertionError("stats-only aggregate decoded payload")
-    monkeypatch.setattr(aggmod, "decode_local", boom)
+    monkeypatch.setattr(aggmod, "_ColocatedRead", boom)
     monkeypatch.setattr(aggmod, "decode_colocated", boom)
-    monkeypatch.setattr(aggmod, "decode_table", boom)
 
 
 def _capture_buckets(monkeypatch):
@@ -849,3 +848,34 @@ def test_int_sum_overflow_raises_on_both_plans(spark, tmp_path, monkeypatch):
     small = [("v", ">", 0), ("v", "<", 1 << 62)]
     want = sum(1 for _u, v in rows if 0 < v < (1 << 62))
     assert agg_table(spark, out, [("sum", "v")], filters=small) == {"sum_v": want}
+
+
+def test_spark_plan_decode_reads_block_stats_once(spark, pages, hash_store,
+                                                  monkeypatch):
+    """An over-budget decode tries the driver plan and then runs the
+    Spark plan on ONE read set-up: the call reads block stats as often
+    as a driver-plan call does (the set-up's one read included), not
+    once more."""
+    from kmers_spark.operators import decode as dec
+
+    real = manifest.block_stats
+    calls = []
+
+    def counting(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(manifest, "block_stats", counting)
+    ts = sorted(r[0] for r in pages.select("warc_ts").collect())
+    filt = [("warc_ts", ">=", ts[len(ts) // 2])]  # straddles: decodes
+    aggs = [("count", "*"), ("max", "lang")]
+    seen = []
+    spy_agg_decodes(monkeypatch, lambda cols, b: seen.append(cols))
+    local = agg_table(spark, hash_store, aggs, filters=filt)
+    n_local, calls[:] = len(calls), []
+    monkeypatch.setattr(dec, "LOCAL_READ_MAX_BYTES", 0)
+    remote, jobs = jobs_of(spark, lambda: agg_table(spark, hash_store, aggs,
+                                                    filters=filt))
+    assert jobs > 0 and len(seen) == 2  # each call decoded once
+    assert len(calls) == n_local
+    assert remote == local

@@ -89,7 +89,7 @@ def test_all_readers_bit_identical(spark, compacted_store):
     want = df.toPandas().sort_values("url").reset_index(drop=True)
     for name, reader in (
         ("colocated", lambda: decode_colocated(spark, out)),
-        ("shuffle", lambda: decode_table(spark, out)),
+        ("decode_table", lambda: decode_table(spark, out)),
         ("datasource", lambda: spark.read.format("kmers").load(out)),
     ):
         got = reader().toPandas().sort_values("url").reset_index(drop=True)

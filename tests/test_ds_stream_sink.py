@@ -6,9 +6,9 @@ Each micro-batch appends one wave as a new GENERATION of its buckets;
 exactly-once rides on the manifest's stream_epochs record (the batchId
 is committed in the same CAS mutation that registers the wave, so a
 replayed batch drops its staged files instead of duplicating rows).
-Readers: decode_colocated isolates generations per scan partition
-(one wave file each), decode_table groups on (bucket, input_file), and
-the DataSource read iterates parquet fragments.
+Readers: decode_colocated (behind decode_table) decodes file by file,
+one generation each, in the driver or one wave file per scan
+partition, and the DataSource read iterates parquet fragments.
 """
 
 from __future__ import annotations
@@ -75,9 +75,12 @@ def test_two_batches_decode_bit_identical(spark, streamed_store):
     assert got.equals(want)
 
 
-def test_shuffle_decode_groups_generations(spark, streamed_store):
-    """decode_table (groupBy path) on a streamed store: the per-file
-    group key keeps each generation's block set intact."""
+def test_shuffle_decode_groups_generations(spark, streamed_store, monkeypatch):
+    """decode_table's Spark plan on a streamed store: one wave file per
+    scan partition keeps each generation's block set intact."""
+    from kmers_spark.operators import decode as dec
+
+    monkeypatch.setattr(dec, "LOCAL_READ_MAX_BYTES", 0)
     out, df = streamed_store
     got = decode_table(spark, out).toPandas() \
         .sort_values("url").reset_index(drop=True)
@@ -349,7 +352,7 @@ def test_streamed_post_evolution_corruption_raises(spark, tmp_path):
 
     for name, reader in (
         ("colocated", lambda: decode_colocated(spark, out)),
-        ("shuffle", lambda: decode_table(spark, out)),
+        ("decode_table", lambda: decode_table(spark, out)),
         ("datasource", lambda: spark.read.format("kmers").load(out)),
     ):
         with pytest.raises(Exception, match="corrupt"):

@@ -226,17 +226,65 @@ def test_hot_key_dict_bounded_on_high_cardinality(spark):
     # total/num_buckets rows each, so the dict is bounded by construction.
 
 
-def test_decode_raises_on_duplicate_block_rows(spark, pages_df, tmp_path):
+def test_decode_raises_on_duplicate_block_rows(spark, pages_df, tmp_path,
+                                               monkeypatch):
     """Stray duplicate (bucket, column) rows (e.g. a crashed pre-manifest
-    write) must fail loudly, not silently drop part of the bucket."""
+    write) must fail loudly, not silently drop part of the bucket, on
+    both plans of the reader."""
     out = str(tmp_path / "snap_dup")
     enc.encode_table(pages_df, out, num_buckets=4)
     wave = enc.committed_wave_paths(out)[0]
     blocks = enc.read_blocks(spark, out)
     one = blocks.limit(1)
     one.write.mode("append").option("compression", "none").parquet(wave)
-    with pytest.raises(Exception, match="duplicate block rows"):
-        dec.decode_table(spark, out).count()
+    for limit in (dec.LOCAL_READ_MAX_BYTES, 0):
+        monkeypatch.setattr(dec, "LOCAL_READ_MAX_BYTES", limit)
+        with pytest.raises(Exception, match="duplicate block rows"):
+            dec.decode_table(spark, out).count()
+
+
+def test_whole_bucket_copy_raises_on_every_read(spark, tmp_path, monkeypatch):
+    """A second file in a committed wave holding one whole bucket's
+    block rows is a valid block set on its own, so each file decodes
+    cleanly and the bucket's rows would come back twice. Every read
+    raises instead, on both plans, before decoding either copy and
+    without a Spark job."""
+    import glob
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from tests.conftest import jobs_of
+
+    df = pages.pages_df(spark, 400, seed=3, partitions=2)
+    urls = [r.url for r in df.select("url").collect()]
+    out = str(tmp_path / "snap_copy")
+    enc.encode_table(df, out, num_buckets=4, detect_skew=False)
+    wave = enc.committed_wave_paths(out)[0]
+    t = pq.read_table(sorted(glob.glob(f"{wave}/part-*.parquet"))[0])
+    b = t.column("bucket")[0].as_py()
+    pq.write_table(t.filter(pc.equal(t.column("bucket"), b)),
+                   f"{wave}/part-copy.parquet")
+    reads = {
+        "decode_table": lambda: dec.decode_table(spark, out),
+        "decode_table buckets": lambda: dec.decode_table(spark, out, buckets=[b]),
+        "scan_table": lambda: dec.scan_table(spark, out, [("lang", "=", "en")]),
+        "lookup_keys": lambda: dec.lookup_keys(spark, out, urls),
+    }
+
+    def attempt(read):
+        with pytest.raises(ValueError, match="duplicate block rows"):
+            read()
+
+    for limit in (dec.LOCAL_READ_MAX_BYTES, 0):
+        monkeypatch.setattr(dec, "LOCAL_READ_MAX_BYTES", limit)
+        for name, read in reads.items():
+            # raised at call time, and the check launched no Spark job
+            _r, jobs = jobs_of(spark, lambda: attempt(read))
+            assert jobs == 0, (limit, name)
+    # buckets the copy does not hold still read
+    other = dec.decode_table(spark, out, buckets=[x for x in range(4) if x != b])
+    assert 0 < other.count() < len(urls)
 
 
 def test_decode_colocated_immune_to_small_maxPartitionBytes(spark, pages_df, tmp_path,
@@ -762,10 +810,10 @@ def test_lookup_keys_key_range_pruning(spark, pages_df, tmp_path):
     assert [r["url"] for r in got.collect()] == [url]
 
 
-def test_decode_column_projection(spark, pages_df, tmp_path):
+def test_decode_column_projection(spark, pages_df, tmp_path, monkeypatch):
     """Column-projected decode: only the requested columns' block rows
-    enter the shuffle (the `column` filter reaches the block scan), and
-    the values stay bit-identical to a full decode."""
+    are read (the Spark plan's `column` filter reaches the block
+    scan), and the values stay bit-identical to a full decode."""
     out = str(tmp_path / "snap_proj")
     enc.encode_table(pages_df, out, num_buckets=4)
 
@@ -776,7 +824,9 @@ def test_decode_column_projection(spark, pages_df, tmp_path):
     assert got.exceptAll(full).count() == 0
 
     # the projection filter is pushed to the block-parquet scan
-    plan = got._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(dec, "LOCAL_READ_MAX_BYTES", 0)
+    plan = dec.decode_table(spark, out, columns=["url", "warc_ts"]) \
+        ._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
     pushed = plan.split("PushedFilters")[1][:400]
     assert "column" in pushed, pushed

@@ -59,8 +59,14 @@ def test_decode_null_fills_old_buckets(spark, evolved_store):
     assert got["score"].isna().any() and got["score"].notna().any()
 
 
-def test_colocated_matches_groupby_after_evolution(spark, evolved_store):
+def test_colocated_matches_groupby_after_evolution(spark, evolved_store,
+                                                   monkeypatch):
+    """The reader's Spark plan null-fills like its driver plan
+    (test_decode_null_fills_old_buckets)."""
+    from kmers_spark.operators import decode as dec
+
     out, expected, _m = evolved_store
+    monkeypatch.setattr(dec, "LOCAL_READ_MAX_BYTES", 0)
     got = decode_colocated(spark, out).toPandas().sort_values("url").reset_index(drop=True)
     want = expected.toPandas().sort_values("url").reset_index(drop=True)
     assert got.equals(want)
@@ -121,19 +127,26 @@ def test_resume_with_wrong_schema_fails_loudly(spark, evolved_store, tmp_path):
         encode_table(df_old, out, num_buckets=N_B, detect_skew=False)
 
 
-def test_truly_missing_column_still_raises(spark, evolved_store, tmp_path):
+def test_truly_missing_column_still_raises(spark, evolved_store, tmp_path,
+                                           monkeypatch):
     """Null-fill must not mask corruption: a column the manifest says a
-    bucket HAS, but whose block row is gone, is a hard error."""
-    out, _e, m = evolved_store
-    from kmers_spark.operators.decode import _SPARK_TYPE, decode_blocks_df
-    from kmers_spark.operators.encode import read_blocks
+    bucket HAS, but whose block row is gone, is a hard error on both
+    plans of the reader."""
+    import glob
+    import shutil
 
-    blocks = read_blocks(spark, out).filter(F.col("column") != "lang")
-    schema = manifest.ordered_schema(m)
-    out_schema = ", ".join(f"`{c}` {_SPARK_TYPE[t]}" for c, t in schema.items())
-    bad = decode_blocks_df(
-        blocks, schema, out_schema,
-        missing=manifest.missing_columns(m, list(schema)),
-    )
-    with pytest.raises(Exception, match="missing columns"):
-        bad.collect()
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from kmers_spark.operators import decode as dec
+
+    src, _e, _m = evolved_store
+    out = str(tmp_path / "store")
+    shutil.copytree(src, out)
+    for f in glob.glob(f"{out}/blocks/*/part-*.parquet"):
+        t = pq.read_table(f)
+        pq.write_table(t.filter(pc.not_equal(t.column("column"), "lang")), f)
+    for limit in (dec.LOCAL_READ_MAX_BYTES, 0):
+        monkeypatch.setattr(dec, "LOCAL_READ_MAX_BYTES", limit)
+        with pytest.raises(Exception, match="missing columns"):
+            decode_table(spark, out).collect()

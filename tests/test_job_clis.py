@@ -71,12 +71,6 @@ def test_decode_filter_respects_version_and_engine(cli_snapshot):
     )
     assert code == 0, old
     assert 0 < json.loads(old)["rows"] < json.loads(latest)["rows"]
-    # forced engines agree
-    code, shuf = run_job(
-        "jobs/decode.py", "--snapshot", snap, "--output", f"{base}/f3",
-        "--filter", "lang:=:en", "--engine", "shuffle",
-    )
-    assert code == 0 and json.loads(shuf)["rows"] == json.loads(latest)["rows"]
 
 
 def test_decode_filter_error_is_clean(cli_snapshot):

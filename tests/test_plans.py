@@ -16,10 +16,11 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_decode_bucket_filter_pushes_down(spark, tmp_path):
+def test_decode_bucket_filter_pushes_down(spark, tmp_path, monkeypatch):
     from kmers_spark import pages
     from kmers_spark.operators import decode as dec, encode as enc
 
+    monkeypatch.setattr(dec, "LOCAL_READ_MAX_BYTES", 0)  # the Spark plan
     df = pages.pages_df(spark, 400, partitions=2)
     out = str(tmp_path / "snap")
     enc.encode_table(df, out, num_buckets=4, detect_skew=False)

@@ -29,9 +29,8 @@ from tests.conftest import spy_agg_decodes
 def _no_decode(monkeypatch):
     def boom(*a, **k):
         raise AssertionError("stats-only aggregate decoded payload")
-    monkeypatch.setattr(aggmod, "decode_local", boom)
+    monkeypatch.setattr(aggmod, "_ColocatedRead", boom)
     monkeypatch.setattr(aggmod, "decode_colocated", boom)
-    monkeypatch.setattr(aggmod, "decode_table", boom)
 
 
 def _direct(values, typ):

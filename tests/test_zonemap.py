@@ -211,22 +211,22 @@ def test_scan_prunes_clustered_buckets(spark, tmp_path):
     assert sorted(map(tuple, got.collect())) == sorted(want)
 
 
-def test_scan_auto_engine_is_shuffle_free(spark, events_store):
-    """engine='auto' routes through the colocated reader: the physical
-    plan must contain no Exchange (payload bytes never reshuffle), and
-    results must match the shuffle engine exactly."""
-    res = None
-    out, _df, _m = events_store
+def test_scan_auto_engine_is_shuffle_free(spark, events_store, monkeypatch):
+    """scan_table decodes through the colocated reader: its Spark plan
+    must contain no Exchange (payload bytes never reshuffle), and
+    results must match the source rows exactly."""
+    from kmers_spark.operators import decode as dec
+
+    out, df, _m = events_store
     filters = [("event_type", "=", "error")]
-    auto = scan_table(spark, out, filters)
-    plan = auto._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(dec, "LOCAL_READ_MAX_BYTES", 0)
+    got = scan_table(spark, out, filters)
+    plan = got._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-    shuf = scan_table(spark, out, filters, engine="shuffle")
-    a = auto.toPandas().sort_values("event_id").reset_index(drop=True)
-    b = shuf.toPandas().sort_values("event_id").reset_index(drop=True)
-    assert a.equals(b)
-    with pytest.raises(ValueError, match="time-travel"):
-        scan_table(spark, out, filters, version=1, engine="colocated")
+    a = got.toPandas().sort_values("event_id").reset_index(drop=True)
+    b = (df.filter(df.event_type == "error").toPandas()
+         .sort_values("event_id").reset_index(drop=True))
+    assert len(a) and a.equals(b)
 
 
 def test_scan_on_legacy_store_without_bounds(spark, events_store, tmp_path):
@@ -347,17 +347,21 @@ def test_lookup_keys_int64_key_and_malformed_probe(spark, events_store):
     assert lookup_keys(spark, out, ["5", "abc"]).count() == 1
 
 
-def test_scan_int_epoch_us_timestamp_literal(spark, events_store):
+def test_scan_int_epoch_us_timestamp_literal(spark, events_store, monkeypatch):
     """to_bound_space documents ints as epoch-us; the residual JVM
     filter must interpret them the same way (a bare cast('timestamp')
     reads epoch-SECONDS and silently empties the scan)."""
+    from kmers_spark.operators import decode as dec
+
     out, df, _m = events_store
     cut = datetime.datetime(2024, 1, 10)
     cut_us = int(cut.timestamp() * 0 + (cut - datetime.datetime(1970, 1, 1)).total_seconds() * 1_000_000)
-    for engine in ("auto", "shuffle"):
-        got = scan_table(spark, out, [("ts", ">=", cut_us)], engine=engine)
-        want = df.filter(df.ts >= cut).count()
-        assert got.count() == want > 0, engine
+    for limit in (dec.LOCAL_READ_MAX_BYTES, 0):
+        with monkeypatch.context() as mp:
+            mp.setattr(dec, "LOCAL_READ_MAX_BYTES", limit)
+            got = scan_table(spark, out, [("ts", ">=", cut_us)])
+            want = df.filter(df.ts >= cut).count()
+            assert got.count() == want > 0, limit
     got_in = scan_table(spark, out, [("user_id", "in", [3, 7])]).count()
     assert got_in == df.filter(df.user_id.isin(3, 7)).count() > 0
 
@@ -368,28 +372,32 @@ def test_scan_rejects_unknown_projection_columns(spark, events_store):
         scan_table(spark, out, [("value", ">", 1.0)], columns=["evnt_id", "value"])
 
 
-def test_stray_block_rows_raise(spark, events_store):
+def test_stray_block_rows_raise(spark, events_store, tmp_path, monkeypatch):
     """Null-fill for schema evolution must not mask corruption: block
-    rows for a column the snapshot never had are a hard error."""
-    from pyspark.sql import Row
+    rows for a column the snapshot never had are a hard error, on both
+    plans of the reader."""
+    import glob
+    import shutil
 
-    from kmers_spark import manifest as mf
-    from kmers_spark.operators.decode import _SPARK_TYPE, decode_blocks_df
-    from kmers_spark.operators.encode import read_blocks
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    out, _df, m = events_store
-    blocks = read_blocks(spark, out)
-    fake = spark.createDataFrame(
-        [Row(bucket=int(m["committed_buckets"][0]), column="zzz", codec="plain",
-             n_rows=1, raw_nbytes=1, enc_nbytes=1, payload=bytearray(b"x"),
-             meta="{}")],
-        blocks.schema,
-    )
-    schema = mf.ordered_schema(m)
-    out_schema = ", ".join(f"`{c}` {_SPARK_TYPE[t]}" for c, t in schema.items())
-    bad = decode_blocks_df(blocks.unionByName(fake), schema, out_schema)
-    with pytest.raises(Exception, match="stray columns"):
-        bad.collect()
+    from kmers_spark.operators import decode as dec
+    from kmers_spark.operators.encode import committed_wave_paths
+
+    src, _df, _m = events_store
+    out = str(tmp_path / "stray")
+    shutil.copytree(src, out)
+    f = sorted(glob.glob(f"{committed_wave_paths(out)[0]}/part-*.parquet"))[0]
+    t = pq.read_table(f)
+    one = t.slice(0, 1)  # a row of the file's first bucket, renamed
+    one = one.set_column(one.schema.get_field_index("column"), "column",
+                         pa.array(["zzz"], one.schema.field("column").type))
+    pq.write_table(pa.concat_tables([t, one]), f)
+    for limit in (dec.LOCAL_READ_MAX_BYTES, 0):
+        monkeypatch.setattr(dec, "LOCAL_READ_MAX_BYTES", limit)
+        with pytest.raises(Exception, match="stray columns"):
+            decode_table(spark, out).collect()
 
 
 def test_bucket_scheme_recorded_and_legacy_mirrors(spark, events_store):
